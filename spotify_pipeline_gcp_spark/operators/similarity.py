@@ -20,6 +20,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spotify_pipeline_gcp_spark.operators import kernels
+from spotify_pipeline_gcp_spark.pyfiles import ensure_package_on_workers
+
 
 # Trainer loops run with AQE ON, like every other path (r15 revert of
 # the r14 ``_no_aqe`` scoping). r14 scoped AQE off inside the Lloyd
@@ -111,11 +114,13 @@ def _double_base(
 
 # Target ON-SCAN bytes per packed BLAS block (r15, VERDICT r14 #3).
 # One block is ONE ``collect_list`` row, so block bytes must stay
-# task-sized as the collection grows — a cores-derived block COUNT
+# bounded as the collection grows — a cores-derived block COUNT
 # makes block SIZE grow linearly with n (unbounded at 100 TB). The
-# kernel widens float32->float64 (2x), holds two blocks per combo
-# plus the (rows_q x rows_d) float64 score matrix; 32 MB on-scan
-# keeps the per-task transients in the low hundreds of MB.
+# 32 MB target bounds only the packed cell, its shuffle record and
+# its Arrow transfer. It does NOT bound the kernel: a combo scores
+# two blocks into a (rows_q x rows_d) float64 matrix, quadratic in
+# block rows — two 32 MB d=64 blocks (~131 k rows each) imply a
+# ~137 GB ``sims`` array.
 _BLAS_BLOCK_BYTES = 32 << 20
 
 
@@ -143,6 +148,64 @@ def _scan_bytes_est(df: DataFrame) -> int | None:
     if nodes - _SCAN_CHEAP_NODES:
         return None
     return int(plan.stats().sizeInBytes())
+
+
+def _derive_n_sub(df: DataFrame, n_cells: int) -> int:
+    """Id-hash sub-splits per cell for the packed BLAS paths: the
+    EXPECTED cell carries ``scan_bytes / n_cells``, so ``ceil(that /
+    _BLAS_BLOCK_BYTES)`` keeps the average packed block near the
+    target at any corpus size (1 for small inputs and for derived
+    frames, which have no file-backed estimate). The split assumes
+    the expected cell size: a skewed k-means cell or a hot sign
+    bucket far above it is NOT bounded by ``n_sub`` (hot sign buckets
+    are ``max_bucket``'s job; k-means cells have no cap). Output rows
+    are invariant: every (query, neighbor) pair still meets in
+    exactly one q-sub × d-sub combo of their shared cell, and the
+    rank window is global."""
+    est = _scan_bytes_est(df)
+    return max(1, math.ceil(est / n_cells / _BLAS_BLOCK_BYTES)) if est else 1
+
+
+def _cell_combos(asg: DataFrame, keys: list[str], n_sub: int = 1) -> DataFrame:
+    """(q_items, d_items) block pairs that score every cell of ``asg``
+    (id, v, *keys) against ITSELF — one packed ``collect_list`` row
+    per cell (the cell IS the block, no candidate join), or with
+    ``n_sub`` > 1 one row per (cell, id-hash sub) joined to the
+    same cell's subs: n_sub² block pairs per cell."""
+    if n_sub > 1:
+        asg = asg.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
+        packed = asg.groupBy(*keys, "sub").agg(
+            F.collect_list(F.struct("id", "v")).alias("items")
+        )
+        return (
+            packed.alias("a")
+            .join(packed.alias("b"), [F.col(f"a.{c}") == F.col(f"b.{c}") for c in keys])
+            .select(F.col("a.items").alias("q_items"), F.col("b.items").alias("d_items"))
+        )
+    packed = asg.groupBy(*keys).agg(F.collect_list(F.struct("id", "v")).alias("items"))
+    return packed.select(F.col("items").alias("q_items"), F.col("items").alias("d_items"))
+
+
+def _raw_points(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v): the RAW vectors for a kernel that unit-normalizes them
+    itself (``kernels.unit_rows``), behind the cluster-width
+    repartition ``_double_base`` applies — the parquet scan splits
+    into few large partitions, and a kernel fused into the scan stage
+    would inherit them (r8's measured fix)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism).select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+    )
+
+
+def _model_matrix(cent: DataFrame):
+    """(cids int64, C float64 k×d) from one O(k·d) centroid collect,
+    rows in ascending cid order — so a kernel's argmax-first breaks
+    ties to the lowest cid, the fold's ``max(struct(dot, -cid))``."""
+    import numpy as np
+
+    rows = sorted((int(r["cid"]), list(r["c"])) for r in cent.collect())
+    cids = np.asarray([cid for cid, _ in rows], dtype="int64")
+    return cids, kernels.matrix([c for _, c in rows])
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -433,8 +496,6 @@ def cosine_topk_blas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int | None = None,
-    quant: bool = False,
-    raw: bool = True,
 ) -> DataFrame:
     """Exact brute-force top-k with a distributed block-matmul BLAS
     kernel — no driver collect, no whole-collection broadcast.
@@ -448,57 +509,45 @@ def cosine_topk_blas(
     because every global neighbor is in some block's partial top-k.
 
     Scale accounting: shuffled bytes = 2·B·|collection| (each block
-    participates in B combos); per-task memory = 2 blocks ≈
-    2·n·d·8/B bytes. The default B (r15) is sized from DATA VOLUME —
-    ``max(√(2·cores) floor, scan_bytes / _BLAS_BLOCK_BYTES)`` — so B
-    grows linearly with the collection, blocks stay ~task-sized, and
-    the driver never touches vector data: the standard parallel
-    dense GEMM decomposition. Block count changes no output row
-    (every pair meets in exactly one combo; the rank merge is
-    global), so the sizing is a pure execution knob. Compose with ``sign_bucket`` (qs3) when
-    n² slabs are no longer affordable at all and approximate recall
-    is acceptable.
+    participates in B combos). The default B (r15) is sized from DATA
+    VOLUME — ``max(√(2·cores) floor, scan_bytes / _BLAS_BLOCK_BYTES)``
+    — so B grows linearly with the collection, one packed block (one
+    ``collect_list`` row, shuffle record and Arrow cell) stays near
+    the 32 MB target, and the driver never touches vector data: the
+    standard parallel dense GEMM decomposition. That bounds the
+    packing, NOT the kernel: each combo's (rows_q × rows_d) float64
+    score matrix grows with the square of block rows (see
+    ``_BLAS_BLOCK_BYTES``). Block count changes no output row (every
+    pair meets in exactly one combo; the rank merge is global), so
+    the sizing is a pure execution knob. Compose with ``sign_bucket``
+    (qs3) when n² slabs are no longer affordable at all and
+    approximate recall is acceptable.
 
     Tie-break matches ``cosine_topk``: (cosine desc, neighbor_id).
-    Scoring has two modes:
-
-    - ``quant=False`` (default): raw float64 dgemm over NumPy-
-      normalized rows. BLAS accumulation order differs from a
-      sequential fold at ulp level, so this mode is rows-only (no
-      SQL oracle); ``cosine_topk`` is the exact-fold twin.
-    - ``quant=True``: QUANTIZED-EXACT scoring — unit vectors come
-      from the JVM fold (``_unit_vectors``, bit-identical to the SQL
-      replay), are rounded at ``_ASSIGN_QSCALE`` inside the kernel,
-      and the dgemm computes integer dots that are exact in float64
-      under ANY accumulation order (d=64 dot ≤ 2^46 < 2^53). The
-      emitted ``cosine`` is the fixed-point value qdot / 2^40 — a
-      dyadic rational both engines represent exactly — so the query
-      is HASH-VERIFIABLE by a DuckDB oracle replaying the same
-      quantized dots (the qs19b build discipline applied to search).
-
-    ``raw=True`` (default): the packed blocks carry the RAW float32
-    embeddings — half the shuffle/Arrow bytes of the float64 forms —
-    and the kernel widens (exact) and, for ``quant``, replays the
-    unit-normalize fold bit-exactly (see ``_blas_topk_from_combos``);
-    emitted values are bit-identical to the ``raw=False`` JVM-side
-    cast/normalize paths, pinned by pytest.
+    Scoring is QUANTIZED-EXACT: the packed blocks carry the RAW
+    float32 embeddings (half the shuffle/Arrow bytes of float64 unit
+    vectors); the kernel widens them (exact), replays
+    ``_unit_vectors``'s normalize bit-exactly (``kernels.unit_rows``),
+    rounds at ``_ASSIGN_QSCALE``, and the dgemm computes integer dots
+    that are exact in float64 under ANY accumulation order (d=64 dot
+    ≤ 2^46 < 2^53). The emitted ``cosine`` is the fixed-point value
+    qdot / 2^40 — a dyadic rational both engines represent exactly —
+    so the query is HASH-VERIFIABLE by a DuckDB oracle replaying the
+    same quantized dots (the qs19b build discipline applied to
+    search). ``cosine_topk`` is the raw-float exact-fold twin.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window as W
-
     if n_blocks is None:
         # B² combos saturate the cluster already at B ≈ √(2·cores);
         # replication cost (2·B·|collection|) and per-combo unpack
         # overhead both grow linearly in B, so the FLOOR is the
         # smallest B that keeps every core busy. The DATA term (r15):
         # B ≥ scan_bytes / _BLAS_BLOCK_BYTES keeps one block (= one
-        # collect_list row) ~task-sized as n grows — the docstring's
-        # n·d·8/128MB accounting, now computed from the optimizer's
-        # file-backed stats instead of left to the caller. max() of
-        # the two: small collections keep every core busy, large
-        # collections keep blocks bounded. Derived frames (no stats)
-        # keep the cores floor — pass ``n_blocks`` explicitly there.
+        # collect_list row) near the target as n grows, computed from
+        # the optimizer's file-backed stats instead of left to the
+        # caller. max() of the two: small collections keep every core
+        # busy, large collections keep packed blocks bounded. Derived
+        # frames (no stats) keep the cores floor — pass ``n_blocks``
+        # explicitly there.
         cores = df.sparkSession.sparkContext.defaultParallelism
         est = _scan_bytes_est(df)
         n_blocks = max(
@@ -506,69 +555,42 @@ def cosine_topk_blas(
             math.ceil(math.sqrt(2 * cores)),
             math.ceil(est / _BLAS_BLOCK_BYTES) if est else 0,
         )
-    if raw:
-        base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    elif quant:
-        base = _unit_vectors(df, id_col, vec_col).select(
-            "id", F.col("u").alias("v")
-        )
-    else:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
     packed = (
-        base.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(n_blocks)))
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        .withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(n_blocks)))
         .groupBy("blk")
         .agg(F.collect_list(F.struct("id", "v")).alias("items"))
     )
     combos = packed.select(
         F.col("items").alias("q_items")
     ).crossJoin(packed.select(F.col("items").alias("d_items")))
-    return _blas_topk_from_combos(combos, k, quant=quant, raw=raw)
+    return _blas_topk_from_combos(combos, k, raw=True)
 
 
-def _blas_topk_from_combos(
-    combos: DataFrame, k: int, quant: bool = False, raw: bool = False
-) -> DataFrame:
+def _blas_topk_from_combos(combos: DataFrame, k: int, raw: bool) -> DataFrame:
     """Shared BLAS tail: score each (q_items, d_items) block pair with one
     NumPy matmul emitting per-(query, block) partial top-k, then merge
     partials with a ranking window — correct because every global
     neighbor appears in some block's partial top-k.
 
-    ``quant=False``: rows are raw vectors, normalized HERE (NumPy
-    pairwise-summed norm — float throughput mode, rows-only).
-    ``quant=True``: rows are unit vectors; the kernel rounds at
-    ``_ASSIGN_QSCALE`` and divides the exact integer dot by QSCALE² —
-    every emitted value is bit-exact against the SQL replay (see
-    ``cosine_topk_blas``). With ``raw=False`` the unit vectors come
-    pre-normalized from the JVM fold (float64 across the shuffle and
-    Arrow); with ``raw=True`` the rows are the RAW float32 embeddings
-    and the kernel replays ``_unit_vectors``'s chain itself bit-exactly
-    (exact float→double widening, sequential-fold norm, ``sqrt``, one
-    exact division per element — the ``assign_clusters_quant_blas``
-    raw-path argument), which halves the packed blocks' shuffle and
-    Arrow bytes and removes the JVM HOF normalize entirely."""
+    Scoring is quantized-exact: rows are rounded at ``_ASSIGN_QSCALE``
+    and the exact integer dot is divided by QSCALE² — every emitted
+    value is bit-exact against the SQL replay (see
+    ``cosine_topk_blas``). ``raw`` names the row form, and each
+    caller sets it: True — the RAW float32 embeddings, which the
+    kernel unit-normalizes itself, bit-identical to
+    ``_unit_vectors`` (``kernels.unit_rows``); False — unit vectors
+    the JVM fold already normalized (qs8's fold-assigned cells)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window as W
 
-    qscale = float(_ASSIGN_QSCALE)
+    ensure_package_on_workers(combos.sparkSession)
+    q2 = float(_ASSIGN_QSCALE) ** 2
 
     def _unpack(items):
-        ids = np.fromiter((r["id"] for r in items), dtype="int64", count=len(items))
-        mat = np.stack([np.asarray(r["v"], dtype="float64") for r in items])
-        if quant:
-            if raw:
-                # _unit_vectors' bits: sequential fold norm, then one
-                # exact division per element
-                p = mat * mat
-                acc = p[:, 0] + 0.0
-                for i in range(1, p.shape[1]):
-                    acc = acc + p[:, i]
-                mat = mat / np.sqrt(acc)[:, None]
-            return ids, np.floor(mat * qscale + 0.5)
-        return ids, mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        ids, mat = kernels.unpack(items)
+        return ids, kernels.quantize(kernels.unit_rows(mat) if raw else mat)
 
     def kernel(batches):
         for pdf in batches:
@@ -587,11 +609,11 @@ def _blas_topk_from_combos(
                         # by score alone, but the contract tie-break is
                         # (score desc, neighbor_id) — at an exact score
                         # tie on the k-boundary it may keep a higher id
-                        # and drop the lower one. Rare for raw floats;
-                        # COMMON for quantized integer scores (exact-
-                        # duplicate vectors collide exactly). Widen the
-                        # selection to every boundary-score column,
-                        # then let the lexsort cut the true top-k.
+                        # and drop the lower one. COMMON for quantized
+                        # integer scores (exact-duplicate vectors
+                        # collide exactly). Widen the selection to
+                        # every boundary-score column, then let the
+                        # lexsort cut the true top-k.
                         thresh = s[top].min()
                         if np.isfinite(thresh):
                             top = np.concatenate(
@@ -603,10 +625,9 @@ def _blas_topk_from_combos(
                     top = top[np.lexsort((d_ids[top], -s[top]))][:kk]
                     for j in top:
                         if np.isfinite(s[j]):
-                            # quant: qdot / 2^40 — exact (power-of-two
-                            # scaling of an integer-valued float64)
-                            val = s[j] / (qscale * qscale) if quant else s[j]
-                            rows.append((int(q_ids[r]), int(d_ids[j]), float(val)))
+                            # qdot / 2^40 — exact (power-of-two scaling
+                            # of an integer-valued float64)
+                            rows.append((int(q_ids[r]), int(d_ids[j]), float(s[j] / q2)))
             yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
     partials = combos.mapInPandas(
@@ -625,9 +646,7 @@ def cosine_topk_bucketed_blas(
     vec_col: str = "embedding",
     n_bits: int = 4,
     n_sub: int | None = None,
-    quant: bool = False,
     max_bucket: int | None = None,
-    raw: bool = True,
 ) -> DataFrame:
     """IVF-with-BLAS: the production ANN shape. Candidate pruning from
     ``cosine_topk_bucketed`` (sign-bucket code ≈ IVF cluster id) +
@@ -640,42 +659,21 @@ def cosine_topk_bucketed_blas(
     ``n_sub`` sub-splits each bucket by id-hash into n_sub² block
     pairs for when one cluster outgrows a task (skewed clusters are
     exactly the salting problem — n_sub is the salt). Default (None):
-    derived from data volume (r15) — the EXPECTED bucket carries
-    ``scan_bytes / 2^n_bits``, so ``n_sub = ceil(that /
-    _BLAS_BLOCK_BYTES)`` keeps the average block task-sized at any
-    corpus size (1 for small inputs — the old default — growing with
-    n). Sub-splitting changes NO output row (every (query, neighbor)
-    pair still meets in exactly the q-sub × d-sub combo of their
-    shared bucket, and the rank window is global). Outlier buckets far
-    above the expectation are ``max_bucket``'s job, not n_sub's.
-    Recall == single-probe bucketing (qs3) by construction; compose
-    with the multi-probe trick (qs5) for boundary recall.
+    derived from data volume by ``_derive_n_sub`` over the 2^n_bits
+    buckets. Outlier buckets far above the expectation are
+    ``max_bucket``'s job, not n_sub's. Recall == single-probe
+    bucketing (qs3) by construction; compose with the multi-probe
+    trick (qs5) for boundary recall.
 
-    ``quant=False``: raw float64 dgemm — accumulation order differs
-    from the SQL fold at ulp level, rows-only; the fold twin (qs3)
-    is the oracle-checked exactness baseline. ``quant=True``:
-    quantized-exact scoring over unit vectors, hash-verifiable; see
-    ``cosine_topk_blas``.
-
-    ``raw=True`` (default): sign buckets are computed on the RAW
-    embedding (identical codes — sign(u_i) == sign(v_i), and the
-    oracles already replay raw-sign buckets), packed blocks carry
-    float32 (half the shuffle/Arrow bytes) and the kernel widens +
-    normalizes bit-exactly in NumPy; ``raw=False`` keeps the JVM-side
-    cast/normalize paths (pinned bit-equal by pytest).
+    Scoring is quantized-exact over the raw float32 packing (see
+    ``cosine_topk_blas``), hash-verifiable; the fold twin (qs3) is
+    the raw-float exactness baseline. Sign buckets are computed on
+    the RAW embedding — identical codes, since sign(u_i) == sign(v_i),
+    and the oracles replay raw-sign buckets.
     """
-    if raw:
-        base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    elif quant:
-        base = _unit_vectors(df, id_col, vec_col).select(
-            "id", F.col("u").alias("v")
-        )
-    else:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-    base = base.withColumn("bucket", sign_bucket("v", n_bits))
+    base = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+    ).withColumn("bucket", sign_bucket("v", n_bits))
     if max_bucket is not None:
         # the sized shape's hot-bucket cap (qs13's r10 move): a dense
         # region's bucket is dropped BEFORE packing, which bounds both
@@ -684,33 +682,8 @@ def cosine_topk_bucketed_blas(
         # is a quadratic dgemm on one task
         base = drop_hot_buckets(base, max_bucket)
     if n_sub is None:
-        est = _scan_bytes_est(df)
-        n_sub = (
-            max(1, math.ceil(est / (1 << n_bits) / _BLAS_BLOCK_BYTES))
-            if est
-            else 1
-        )
-    if n_sub > 1:
-        base = base.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
-        packed = base.groupBy("bucket", "sub").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = (
-            packed.alias("a")
-            .join(packed.alias("b"), F.col("a.bucket") == F.col("b.bucket"))
-            .select(
-                F.col("a.items").alias("q_items"),
-                F.col("b.items").alias("d_items"),
-            )
-        )
-    else:
-        packed = base.groupBy("bucket").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = packed.select(
-            F.col("items").alias("q_items"), F.col("items").alias("d_items")
-        )
-    return _blas_topk_from_combos(combos, k, quant=quant, raw=raw)
+        n_sub = _derive_n_sub(df, 1 << n_bits)
+    return _blas_topk_from_combos(_cell_combos(base, ["bucket"], n_sub), k, raw=True)
 
 
 def sign_bucket_pairs_blas(
@@ -720,7 +693,6 @@ def sign_bucket_pairs_blas(
     vec_col: str = "embedding",
     n_bits: int | None = None,
     n_docs: int | None = None,
-    raw: bool = True,
 ) -> DataFrame:
     """Near-dup PAIRS (id_a < id_b, cosine_q >= threshold) with one
     integer dgemm per sign bucket — the throughput twin of the
@@ -738,17 +710,14 @@ def sign_bucket_pairs_blas(
     the bucket IS the block — and every FLOP runs at BLAS speed.
 
     Scoring is QUANTIZED-EXACT (the qs4/qs26 discipline, see
-    ``cosine_topk_blas``): with ``raw=True`` (default) the packed
-    buckets carry the RAW float32 embeddings — sign buckets are
-    computed on the raw vector (identical codes: sign(u_i) ==
-    sign(v_i), and the oracle replays raw-sign buckets) and the
-    kernel replays ``_unit_vectors``'s chain bit-exactly (exact
-    widening, sequential-fold norm, sqrt, one exact division per
-    element) before quantizing, so the JVM never materializes unit
-    vectors (two transient array<double> per row) and the packing
-    shuffle + Arrow boundary carry HALF the bytes. ``raw=False``
-    keeps the JVM-fold unit-vector path (pinned bit-equal by
-    pytest). Either way the kernel rounds at ``_ASSIGN_QSCALE`` and
+    ``cosine_topk_blas``): the packed buckets carry the RAW float32
+    embeddings — sign buckets are computed on the raw vector
+    (identical codes: sign(u_i) == sign(v_i), and the oracle replays
+    raw-sign buckets) and the kernel replays ``_unit_vectors``'s
+    normalize bit-exactly (``kernels.unit_rows``) before quantizing,
+    so the JVM never materializes unit vectors (two transient
+    array<double> per row) and the packing shuffle + Arrow boundary
+    carry HALF the bytes. The kernel rounds at ``_ASSIGN_QSCALE`` and
     the dgemm's integer dots are exact in float64 under any
     accumulation order (d=64 dot ≤ 2^46 < 2^53). Emitted
     ``cosine_q`` = qdot / 2^40 — a dyadic rational both engines
@@ -769,19 +738,14 @@ def sign_bucket_pairs_blas(
 
     if n_bits is None:
         n_bits = sign_bits_for(df.count() if n_docs is None else n_docs)
-    if raw:
-        base = df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("u")
-        ).withColumn("bucket", sign_bucket("u", n_bits))
-    else:
-        base = _unit_vectors(df, id_col, vec_col).withColumn(
-            "bucket", sign_bucket("u", n_bits)
-        )
-    base = drop_hot_buckets(base)
-    packed = base.groupBy("bucket").agg(
-        F.collect_list(F.struct("id", "u")).alias("items")
+    base = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+    ).withColumn("bucket", sign_bucket("v", n_bits))
+    packed = drop_hot_buckets(base).groupBy("bucket").agg(
+        F.collect_list(F.struct("id", "v")).alias("items")
     )
-    qscale = float(_ASSIGN_QSCALE)
+    ensure_package_on_workers(df.sparkSession)
+    q2 = float(_ASSIGN_QSCALE) ** 2
 
     def kernel(batches):
         for pdf in batches:
@@ -790,22 +754,9 @@ def sign_bucket_pairs_blas(
                 m = len(items)
                 if m < 2:
                     continue
-                ids = np.fromiter(
-                    (r["id"] for r in items), dtype="int64", count=m
-                )
-                mat = np.stack(
-                    [np.asarray(r["u"], dtype="float64") for r in items]
-                )
-                if raw:
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = mat * mat
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    mat = mat / np.sqrt(acc)[:, None]
-                qm = np.floor(mat * qscale + 0.5)
-                sims = (qm @ qm.T) / (qscale * qscale)
+                ids, mat = kernels.unpack(items)
+                qm = kernels.quantize(kernels.unit_rows(mat))
+                sims = (qm @ qm.T) / q2
                 iu, ju = np.triu_indices(m, k=1)
                 keep = sims[iu, ju] >= threshold
                 ia, ib = ids[iu[keep]], ids[ju[keep]]
@@ -824,11 +775,6 @@ def sign_bucket_pairs_blas(
     return packed.mapInPandas(
         kernel, schema="id_a long, id_b long, cosine_q double"
     )
-
-
-# Backwards-compatible name; the driver-collect implementation it
-# once pointed to is gone (it was a driver-memory cliff).
-cosine_topk_pandas = cosine_topk_blas
 
 
 # Fixed-point scale for deterministic distributed mean aggregation:
@@ -1144,19 +1090,10 @@ def assign_clusters(
     return _argmax_assign(pts, centroids)
 
 
-# Fixed-point scale for QUANTIZED-EXACT cell assignment. 2^20 keeps
-# every quantized component |q| <= 2^20 (unit vectors), every product
-# <= 2^40, and a d=64 dot <= 2^46 — below 2^53, so the dot is EXACT in
-# int64 AND in float64 regardless of accumulation order. That is the
-# property the maintenance family's builds need: a float64 dgemm over
-# the quantized matrices computes bit-identical scores to the SQL fold
-# (unlike raw float dots, where BLAS reordering shifts near-ties at
-# ulp level and forces the rows-only convention), so an n·k corpus
-# assignment can run at BLAS throughput and STAY hash-verified by a
-# DuckDB oracle replaying the same quantized dots. The ~1e-6
-# quantization only moves points that sit within 2^-20 of a cell
-# boundary — and moves them identically in every engine.
-_ASSIGN_QSCALE = 1 << 20
+# Fixed-point scale for QUANTIZED-EXACT assignment and search: integer
+# dots exact in float64 under any accumulation order (see
+# ``kernels.QSCALE``), so dgemm kernels stay hash-verified.
+_ASSIGN_QSCALE = kernels.QSCALE
 
 
 def _quantize_vec(col: Column) -> Column:
@@ -1249,62 +1186,43 @@ def ivfpq_assign_encode_quant_blas(
     serving tables stay float-trained and 1e9-quantized exactly as
     before — only WHICH code represents each subvector moves (by at
     most one quantization-boundary neighbor), and the oracle replays
-    the same quantized selection. Callers must
-    ``ensure_package_on_workers`` first.
+    the same quantized selection.
 
     ``raw=True``: ``pts`` is the RAW table (``u_col`` names the raw
-    embedding column) and the kernel replays ``_unit_vectors``'s
-    chain bit-exactly before quantizing (the
-    ``assign_clusters_quant_blas`` raw-path argument) — no JVM HOF
+    embedding column) and the kernel unit-normalizes it bit-exactly
+    itself (``kernels.unit_rows``) before quantizing — no JVM HOF
     normalize, float32 across Arrow; emitted (cid, codes) integers
     are bit-identical."""
     import numpy as np
 
-    q = float(_ASSIGN_QSCALE)
-    crows = sorted((int(r["cid"]), list(r["c"])) for r in cent.collect())
-    C = np.floor(np.asarray([c for _, c in crows], dtype="float64") * q + 0.5)
-    cids = np.asarray([cid for cid, _ in crows], dtype="int64")
+    cids, C = _model_matrix(cent)
+    C = kernels.quantize(C)
     subs = []
     for s in range(m):
-        brows = sorted(
-            (int(r["cid"]), list(r["c"])) for r in books[s].collect()
-        )
-        Bq = np.floor(
-            np.asarray([c for _, c in brows], dtype="float64") * q + 0.5
-        )
-        bids = np.asarray([cid for cid, _ in brows], dtype="int64")
+        bids, Bq = _model_matrix(books[s])
+        Bq = kernels.quantize(Bq)
         subs.append((bids, Bq, (Bq * Bq).sum(axis=1)))
 
     def _run(batches):
-        import numpy as _np
         import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np.stack(
-                [_np.asarray(u, dtype="float64") for u in pdf[u_col]]
-            )
-            if raw:
-                # _unit_vectors' bits: sequential fold norm, then one
-                # exact division per element
-                p = V * V
-                acc = p[:, 0] + 0.0
-                for i in range(1, p.shape[1]):
-                    acc = acc + p[:, i]
-                V = V / _np.sqrt(acc)[:, None]
-            U = _np.floor(V * q + 0.5)
-            cells = cids[_np.argmax(U @ C.T, axis=1)]
-            codes = _np.empty((len(pdf), m), dtype="int64")
+            V = kernels.matrix(pdf[u_col])
+            U = kernels.quantize(kernels.unit_rows(V) if raw else V)
+            cells = cids[np.argmax(U @ C.T, axis=1)]
+            codes = np.empty((len(pdf), m), dtype="int64")
             for s, (bids, Bq, qcc) in enumerate(subs):
                 Us = U[:, s * d_sub : (s + 1) * d_sub]
                 codes[:, s] = bids[
-                    _np.argmax(2.0 * (Us @ Bq.T) - qcc[None, :], axis=1)
+                    np.argmax(2.0 * (Us @ Bq.T) - qcc[None, :], axis=1)
                 ]
             yield pd.DataFrame(
                 {"id": pdf[id_col], "cid": cells, "codes": codes.tolist()}
             )
 
+    ensure_package_on_workers(pts.sparkSession)
     src = pts.select(
         F.col(id_col).alias(id_col), F.col(u_col).alias(u_col)
     )
@@ -1332,7 +1250,7 @@ def kmeans_centroids_quant_on(
     where the sample×k assignment (45k × 1414 cells at the 2 M rung)
     is the dominant build cost the fold evaluator cannot afford; the
     generic fold trainer remains the form the qs7/qs14/qs16 oracle
-    family replays. Callers must ``ensure_package_on_workers``."""
+    family replays."""
     from pyspark import StorageLevel
 
     spark = pts.sparkSession
@@ -1389,51 +1307,36 @@ def assign_clusters_quant_blas(
     reordered accumulation flips near-ties at ulp level and forced
     consumers to rows-only. Ties break to the
     lowest cid (argmax-first over ascending-cid rows — the fold's
-    ``max(struct(dot, -cid))`` order). Callers must
-    ``ensure_package_on_workers`` first.
+    ``max(struct(dot, -cid))`` order).
 
     ``raw=True``: ``pts`` is the RAW table (``u_col`` names the raw
     embedding column) and the kernel computes the unit vectors itself
-    — bit-exactly replaying ``_unit_vectors``'s chain (exact
-    float→double cast, sequential-fold norm, ``sqrt``, one exact
-    division per element — the ``_topn_probe_ranks_halves_blas``
-    argument) before quantizing. This removes the JVM HOF normalize
-    (two transient array<double> allocations per corpus row — 182 s
-    of GC in the 56 s manifest-build assignment stage at the 2 M
-    rung) and ships float32 across Arrow instead of float64; it adds
-    the cluster-width repartition ``_double_base`` would have
-    applied, since the caller's ``_unit_vectors`` is skipped."""
+    — bit-exactly replaying ``_unit_vectors`` (``kernels.unit_rows``)
+    before quantizing. This removes the JVM HOF normalize (two
+    transient array<double> allocations per corpus row — 182 s of GC
+    in the 56 s manifest-build assignment stage at the 2 M rung) and
+    ships float32 across Arrow instead of float64; it adds the
+    cluster-width repartition ``_double_base`` would have applied,
+    since the caller's ``_unit_vectors`` is skipped. The default
+    unit-vector input serves the trainer ``kmeans_centroids_quant_on``,
+    whose point frame is already unit vectors."""
     import numpy as np
 
-    q = float(_ASSIGN_QSCALE)
-    rows = sorted((int(r["cid"]), list(r["c"])) for r in cent.collect())
-    C = np.floor(
-        np.asarray([c for _, c in rows], dtype="float64") * q + 0.5
-    )
-    cids = np.asarray([cid for cid, _ in rows], dtype="int64")
+    cids, C = _model_matrix(cent)
+    C = kernels.quantize(C)
 
     def _assign(batches):
-        import numpy as _np
         import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np.vstack(pdf[u_col].to_numpy()).astype(
-                "float64", copy=False
-            )
-            if raw:
-                # _unit_vectors' bits: sequential fold norm, then one
-                # exact division per element
-                p = V * V
-                acc = p[:, 0] + 0.0
-                for i in range(1, p.shape[1]):
-                    acc = acc + p[:, i]
-                V = V / _np.sqrt(acc)[:, None]
-            U = _np.floor(V * q + 0.5)
-            best = cids[_np.argmax(U @ C.T, axis=1)]
+            V = kernels.matrix(pdf[u_col])
+            U = kernels.quantize(kernels.unit_rows(V) if raw else V)
+            best = cids[np.argmax(U @ C.T, axis=1)]
             yield pd.DataFrame({"id": pdf[id_col], "cid": best})
 
+    ensure_package_on_workers(pts.sparkSession)
     src = pts.select(
         F.col(id_col).alias(id_col), F.col(u_col).alias(u_col)
     )
@@ -1701,7 +1604,6 @@ def _topn_probe_ranks_halves(
     cent2: DataFrame,
     d_half: int,
     nprobe: int,
-    work_rows: int | None = None,
 ) -> DataFrame:
     """(id, t1, t2): BOTH halves' top-``nprobe`` probe lists from ONE
     scored stream — ``imi_assign``'s tagged-union trick generalized
@@ -1716,24 +1618,19 @@ def _topn_probe_ranks_halves(
     stageprof measured each separate half-chain at ~80 s on 2 M
     vectors). ``t[0]`` is the assigned cell (probe rank 1).
 
-    ``work_rows`` (= corpus rows × 2·k_each, which callers already
-    know — no counting job) pre-widens the point stream so the
-    tagged scored slice per task stays sort/spill-friendly (see
-    ``_widen_for_scoring``): the union DOUBLES per-task scored rows
-    vs a separate per-half pass, which is precisely the qs25 r11
-    partial-SortAggregate OOM class — the unwidened tagged form died
-    at the 2 M-vector rung in 4 g where the two separate chains
-    (half the slice each) had survived."""
+    This fold form is the reference the vectorized twin
+    ``_topn_probe_ranks_halves_blas`` is pinned against
+    (tests/test_similarity.py); the tagged union doubles per-task
+    scored rows vs a separate per-half pass — the qs25 r11
+    partial-SortAggregate OOM class at the 2 M-vector rung — so it is
+    not a corpus-scale path."""
     c1 = cent1.select(F.lit(1).alias("q"), "cid", "c")
     c2 = cent2.select(F.lit(2).alias("q"), "cid", "c")
     cents = c1.unionByName(c2)
-    halved = _widen_for_scoring(
-        pts.select(
-            "id",
-            F.slice("u", 1, d_half).alias("u1"),
-            F.slice("u", d_half + 1, d_half).alias("u2"),
-        ),
-        work_rows,
+    halved = pts.select(
+        "id",
+        F.slice("u", 1, d_half).alias("u1"),
+        F.slice("u", d_half + 1, d_half).alias("u2"),
     )
     scored = halved.crossJoin(F.broadcast(cents)).select(
         "id",
@@ -1764,90 +1661,50 @@ def _topn_probe_ranks_halves_blas(
     cent2: DataFrame,
     d_half: int,
     nprobe: int,
-    with_u: bool = False,
-    cids_only: bool = False,
-    raw: tuple[str, str] | None = None,
-    emit_raw: bool = False,
 ) -> DataFrame:
-    """``_topn_probe_ranks_halves`` as a vectorized per-row map — the
-    BIT-EXACT fold twin (not the quantized kernel): emits the same
-    (id, t1, t2) rows, same double bits, same tie order, so qs28's
-    hash-verified oracle (which replays the FLOAT fold chain) is
-    untouched while the Θ(n·2k·d) scoring runs as NumPy array ops
-    instead of a 2k-way crossJoin + interpreted HOF fold + struct
-    SortAggregate (the measured ~100 s term of the qs28 rung row).
+    """``_topn_probe_ranks_halves`` as a vectorized per-row map over
+    RAW (id, v) points (``_raw_points``) — the BIT-EXACT fold twin
+    (not the quantized kernel): emits the same (t1, t2) probe lists,
+    same double bits, same tie order, so qs28's hash-verified oracle
+    (which replays the FLOAT fold chain) is untouched while the
+    Θ(n·2k·d) scoring runs as NumPy array ops instead of a 2k-way
+    crossJoin + interpreted HOF fold + struct SortAggregate (the
+    measured ~100 s term of the qs28 rung row).
 
-    Bit-exactness argument: ``_dot_pre`` is ``aggregate(zip_with(a, b,
-    x*y), 0.0, acc+v)`` — each product rounded once, then a SEQUENTIAL
-    left-to-right sum, each add rounded once. The kernel replays
-    exactly that: one elementwise multiply per dimension, accumulated
-    in dimension order with one rounded add each (never ``U @ C.T``,
-    whose accumulation order differs at ulp level), the ``0.0`` init
-    reproduced as ``p0 + 0.0`` (normalizes a ``-0.0`` first product
-    the way the fold's ``0.0 + p0`` does — IEEE addition commutes
-    bitwise). Probe selection replays ``array_sort``'s struct order
-    ((nd, cid) ascending, Double.compare semantics) via an IEEE
-    total-order int64 key (−0.0 < +0.0, NaN greatest) with a stable
-    argsort over cid-ascending columns. Verified: 0 bit-mismatches vs
-    the fold on real corpora (tests/test_similarity.py pins kernel ==
-    fold on sf0.001), and qs28 stays hash-verified at sf0.01/sf0.1.
+    Bit-exactness argument: the kernel unit-normalizes the raw
+    vectors itself, bit-identical to ``_unit_vectors``
+    (``kernels.unit_rows``). ``_dot_pre`` is ``aggregate(zip_with(a,
+    b, x*y), 0.0, acc+v)`` — each product rounded once, then a
+    SEQUENTIAL left-to-right sum, each add rounded once. The kernel
+    replays exactly that: one elementwise multiply per dimension,
+    accumulated in dimension order with one rounded add each (never
+    ``U @ C.T``, whose accumulation order differs at ulp level), the
+    ``0.0`` init reproduced as ``p0 + 0.0`` (normalizes a ``-0.0``
+    first product the way the fold's ``0.0 + p0`` does — IEEE
+    addition commutes bitwise). Probe selection replays
+    ``array_sort``'s struct order ((nd, cid) ascending,
+    Double.compare semantics) via an IEEE total-order int64 key
+    (−0.0 < +0.0, NaN greatest) with a stable argsort over
+    cid-ascending columns. Pinned kernel == fold on sf0.001 by
+    tests/test_similarity.py; qs28 stays hash-verified.
 
-    No exchange at all: the fold form's scored stream needed a
-    groupBy (2k scored rows per point through a partial
-    SortAggregate — the ``_widen_for_scoring`` OOM class); here each
-    point's probe lists are computed row-locally in its scan task, so
-    the guard is unnecessary by construction. Model side is one
-    k-bounded collect per half (the BLAS-kernel convention —
-    ``assign_clusters_quant_blas``'s accounting). Per-task transient
-    is chunked to ~4M score cells regardless of k.
+    No exchange: the fold form's scored stream needed a groupBy (2k
+    scored rows per point through a partial SortAggregate — the
+    ``_widen_for_scoring`` OOM class); here each point's probe lists
+    are computed row-locally. Model
+    side is one k-bounded collect per half. Per-task transient is
+    chunked to ~4M score cells regardless of k.
 
-    ``with_u=True`` passes the unit vector through UNTOUCHED (Arrow
-    float64 round-trip — bit-lossless) so consumers that need (id, u,
-    probes) — qs28's two packing sides — read them from the ONE
-    checkpointed kernel output instead of joining ``pts`` back (which
-    re-ran scan + unit-normalize + an id-keyed join sort per
-    consumer: the 52 s + 43 s stages of the 102 s rung row).
-
-    ``cids_only=True`` emits t1/t2 as plain ``array<bigint>`` probe
-    cid lists (rank order) instead of (nd, cid) structs — identical
-    cid selection, narrower payload. **A/B measured and NOT adopted**
-    (session 4, 5 M rung, same data, fresh 4 g JVMs): struct form
-    61.4/70.4/74.5 s vs cid-only 77.9/82.4 s — the hypothesis that
-    per-row dict building + list<struct> Arrow conversion dominated
-    the materialization stage did not hold (the stage's cost is the
-    checkpoint + packing-exchange serialization of ``u``, which both
-    forms carry). qs28 keeps the struct form; the flag stays for the
-    measurement's reproducibility and the pytest pin.
-
-    ``raw=(id_col, vec_col)``: ``pts`` is the RAW table and the
-    kernel computes the unit vectors itself, bit-exactly replaying
-    ``_unit_vectors``'s chain — cast float→double (exact), norm =
-    ``sqrt(fold(zip_with(v, v, x*y), 0.0, acc+v))`` as the same
-    sequential multiply-add (``np.sqrt`` and Java ``Math.sqrt`` are
-    both IEEE correctly-rounded), then one exact division per
-    element. This removes the JVM HOF normalize (two transient
-    array<double> allocations per row — the GC source of the
-    materialization stage) and ships float32 across Arrow instead of
-    float64 (half the boundary bytes); the emitted ``u`` doubles are
-    the same bits the JVM fold would have produced (pytest-pinned).
-
-    ``emit_raw=True`` (requires ``raw`` + ``with_u``): the ``u``
-    column passes the RAW float32 vector through untouched instead of
-    the computed float64 unit vector, so the checkpoint and BOTH
-    packing exchanges downstream carry half the bytes; the consumer's
-    scoring kernel re-normalizes bit-exactly
-    (``_blas_topk_from_combos(raw=True)``)."""
+    The raw vector passes through UNTOUCHED as ``v`` (no numeric
+    conversion), so qs28's two packing sides read (id, v, probes)
+    from the ONE checkpointed kernel output instead of joining the
+    corpus back, and the checkpoint and both packing exchanges carry
+    float32; the scoring kernel re-normalizes bit-exactly."""
     import numpy as np
     import pandas as pd
 
-    def _model(cent):
-        rows = sorted(cent.collect(), key=lambda r: r["cid"])
-        cids = np.array([int(r["cid"]) for r in rows], dtype="int64")
-        mat = np.array([list(r["c"]) for r in rows], dtype="float64")
-        return cids, mat
-
-    cids1, c1m = _model(cent1)
-    cids2, c2m = _model(cent2)
+    cids1, c1m = _model_matrix(cent1)
+    cids2, c2m = _model_matrix(cent2)
     take1, take2 = min(nprobe, len(cids1)), min(nprobe, len(cids2))
     # per-chunk transient: rows × (k1 + k2) float64 score cells ≈ 32 MB
     chunk = max(1, 4_000_000 // max(len(cids1) + len(cids2), 1))
@@ -1868,73 +1725,29 @@ def _topn_probe_ranks_halves_blas(
     def _top(u_mat, cids, c_mat, take):
         nd = -_fold_dots(u_mat, c_mat)
         idx = np.argsort(_tok(nd), axis=1, kind="stable")[:, :take]
-        sel = cids[idx]
-        if cids_only:
-            return list(sel)  # one int64 ndarray per row → list<bigint>
         vals = np.take_along_axis(nd, idx, axis=1)
         return [
             [{"nd": float(v), "cid": int(c)} for v, c in zip(vr, cr)]
-            for vr, cr in zip(vals, sel)
+            for vr, cr in zip(vals, cids[idx])
         ]
 
     def kernel(batches):
         for pdf in batches:
             for lo in range(0, len(pdf), chunk):
                 part = pdf.iloc[lo : lo + chunk]
-                cols = {"id": part["id"].to_numpy()}
-                if raw is not None:
-                    v_mat = np.vstack(part["v"].to_numpy()).astype("float64")
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = v_mat * v_mat
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    u_mat = v_mat / np.sqrt(acc)[:, None]
-                    if with_u:
-                        # emit_raw: float32 passthrough, no numeric
-                        # conversion — the scoring kernel re-derives u
-                        cols["u"] = (
-                            part["v"].to_numpy()
-                            if emit_raw
-                            else list(u_mat)
-                        )
-                else:
-                    u_mat = np.vstack(part["u"].to_numpy()).astype(
-                        "float64", copy=False
-                    )
-                    if with_u:
-                        # passthrough, no numeric conversion — exact
-                        cols["u"] = part["u"].to_numpy()
-                cols["t1"] = _top(u_mat[:, :d_half], cids1, c1m, take1)
-                cols["t2"] = _top(u_mat[:, d_half:], cids2, c2m, take2)
-                yield pd.DataFrame(cols)
+                u_mat = kernels.unit_rows(kernels.matrix(part["v"]))
+                yield pd.DataFrame({
+                    "id": part["id"].to_numpy(),
+                    "v": part["v"].to_numpy(),
+                    "t1": _top(u_mat[:, :d_half], cids1, c1m, take1),
+                    "t2": _top(u_mat[:, d_half:], cids2, c2m, take2),
+                })
 
-    if emit_raw and (raw is None or not with_u):
-        raise ValueError("emit_raw requires raw input and with_u")
-    u_type = (
-        pts.schema[raw[1]].dataType.simpleString()
-        if emit_raw
-        else "array<double>"
-    )
-    u_field = f"u {u_type}, " if with_u else ""
-    t_type = (
-        "array<bigint>" if cids_only else "array<struct<nd: double, cid: bigint>>"
-    )
-    if raw is not None:
-        id_col, vec_col = raw
-        # same cluster-width repartition _double_base applies: the
-        # parquet scan splits into few large partitions, and the
-        # kernel fuses into the scan stage — the skinny float32
-        # exchange buys full-width parallelism (r8's measured fix)
-        src = pts.repartition(
-            pts.sparkSession.sparkContext.defaultParallelism
-        ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    else:
-        src = pts.select("id", "u")
-    return src.mapInPandas(
-        kernel,
-        schema=f"id bigint, {u_field}t1 {t_type}, t2 {t_type}",
+    ensure_package_on_workers(pts.sparkSession)
+    v_type = pts.schema["v"].dataType.simpleString()
+    t_type = "array<struct<nd: double, cid: bigint>>"
+    return pts.mapInPandas(
+        kernel, schema=f"id bigint, v {v_type}, t1 {t_type}, t2 {t_type}"
     )
 
 
@@ -2014,6 +1827,50 @@ def cosine_topk_kmeans_multiprobe(
     )
 
 
+def _assign_raw_quant(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cells: dict[str, tuple[DataFrame, slice]],
+) -> DataFrame:
+    """(id, v, *cells): quantized-exact nearest cell for each named
+    centroid set, scored over a slice of the dimensions, in ONE
+    Arrow/NumPy pass over the RAW table — the
+    ``assign_clusters_quant_blas`` arithmetic (the kernel
+    unit-normalizes bit-exactly itself, then one ``argmax(U @ Cᵀ)``
+    over 2^20-rounded integers per set; ties → lowest cid) with the
+    raw float32 vector passed through as ``v`` for the packed search
+    blocks, so neither the assignment boundary nor the packing
+    shuffle carries float64. ``cells`` maps an output column to
+    (centroids, dims): one full-width set for trained IVF, one per
+    half for the IMI grid."""
+    import numpy as np
+
+    models = []
+    for col, (cent, dims) in cells.items():
+        cids, C = _model_matrix(cent)
+        models.append((col, dims, cids, kernels.quantize(C)))
+
+    def _assign(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            U = kernels.quantize(kernels.unit_rows(kernels.matrix(pdf["v"])))
+            out = {"id": pdf["id"], "v": pdf["v"]}
+            for col, dims, cids, C in models:
+                out[col] = cids[np.argmax(U[:, dims] @ C.T, axis=1)]
+            yield pd.DataFrame(out)
+
+    ensure_package_on_workers(df.sparkSession)
+    v_type = df.schema[vec_col].dataType.simpleString()
+    cell_types = "".join(f", {col} long" for col in cells)
+    return _raw_points(df, id_col, vec_col).mapInPandas(
+        _assign, schema=f"id long, v {v_type}{cell_types}"
+    )
+
+
 def cosine_topk_kmeans_blas(
     df: DataFrame,
     k_neighbors: int = 5,
@@ -2025,8 +1882,6 @@ def cosine_topk_kmeans_blas(
     train_df: DataFrame | None = None,
     blas_assign: bool = False,
     cent: DataFrame | None = None,
-    quant: bool = False,
-    raw: bool = True,
 ) -> DataFrame:
     """Trained IVF at BLAS speed: the production composition. k-means
     cells from ``kmeans_centroids`` provide the candidate pruning
@@ -2035,38 +1890,27 @@ def cosine_topk_kmeans_blas(
     matmul kernel provides the throughput, exactly
     ``cosine_topk_bucketed_blas`` with learned cells instead of sign
     bits. ``n_sub`` sub-splits oversized cells by id-hash (the salt
-    for skewed clusters; size so one block is ~64-256 MB at scale).
-    With ``quant=False`` float accumulation order differs from the
-    SQL fold at ulp level, so that mode is rows-only;
-    ``cosine_topk_kmeans`` is the oracle-checked exactness twin over
-    the SAME cells. ``quant=True`` scores the packed cells with the
+    for skewed clusters); default ``_derive_n_sub`` over the
+    ``n_clusters`` cells. The packed cells are scored with the
     QUANTIZED-EXACT kernel (``_blas_topk_from_combos``) — integer
-    dots of 2^20-rounded unit vectors, bit-replayable by the oracle
-    — and with ``blas_assign`` also routes the n·k assignment
-    through the quantized dgemm (``assign_clusters_quant_blas``), so
-    BOTH n^1.5 terms stay matmul-speed AND hash-verified. ``train_df``
-    (a digest sample in the production shape — qs23) restricts the
-    trainer's input; assignment and search stay full-corpus.
-    ``blas_assign`` moves the n·k assignment scoring into the same
-    Arrow/NumPy kernel (one ``argmax(U @ Cᵀ)`` mapInPandas pass, the
-    ``kmeans_centroids_blas`` shape) — with k = √n cells the
-    assignment is the OTHER n^1.5 term, so at scale it needs the
-    matmul constant as much as the search does. np.argmax takes the
-    first maximum, matching the fold's ties-to-lowest-cid order up
-    to ulp accumulation differences (requires a long-typed id).
-    ``cent`` accepts a PRE-TRAINED centroid frame (the
-    train-once-serve-many split; qs23 passes the memoized shared
-    'ivf:' model).
+    dots of 2^20-rounded unit vectors, bit-replayable by the oracle;
+    ``cosine_topk_kmeans`` is the raw-float exactness twin over the
+    SAME cells. ``train_df`` (a digest sample in the production
+    shape — qs23) restricts the trainer's input; assignment and
+    search stay full-corpus. ``cent`` accepts a PRE-TRAINED centroid
+    frame (the train-once-serve-many split; qs23 passes the memoized
+    shared 'ivf:' model).
 
-    ``raw=True`` (default, ``blas_assign`` only): the assignment
-    kernel takes the RAW embedding table, replays ``_unit_vectors``'s
-    chain bit-exactly itself (the ``assign_clusters_quant_blas``
-    raw-path argument) and passes the raw float32 vector through to
-    the packed search blocks, whose kernel re-normalizes the same way
-    (``_blas_topk_from_combos(raw=True)``). No JVM HOF normalize, and
-    the assignment boundary + packing shuffle carry float32 — half
-    the bytes. Emitted rows are bit-identical (pytest-pinned); the
-    fold-assignment path (``blas_assign=False``) is untouched."""
+    ``blas_assign`` moves the n·k assignment scoring into the
+    quantized dgemm (``_assign_raw_quant``) — with k = √n cells the
+    assignment is the OTHER n^1.5 term, so at scale it needs the
+    matmul constant as much as the search does — and both n^1.5
+    terms stay hash-verified. The assignment kernel takes the RAW
+    embedding table and passes the raw float32 vector through to the
+    packed search blocks, whose kernel re-normalizes the same way:
+    no JVM HOF normalize, float32 across both boundaries. Without it
+    the cells come from the fold ``assign_clusters`` (qs8's shape),
+    whose unit vectors the search kernel only rounds."""
     if cent is None:
         cent = kmeans_centroids(
             train_df if train_df is not None else df,
@@ -2075,159 +1919,19 @@ def cosine_topk_kmeans_blas(
             k=n_clusters,
             n_iter=n_iter,
         )
-    pack_raw = raw and blas_assign
     if blas_assign:
-        import numpy as np
-
-        qscale = float(_ASSIGN_QSCALE)
-        rows = sorted((r["cid"], list(r["c"])) for r in cent.collect())
-        C = np.asarray([c for _, c in rows], dtype="float64")
-        if quant:
-            # quantized-exact assignment dots (the
-            # assign_clusters_quant_blas arithmetic, keeping u in the
-            # output row for the packed search blocks)
-            C = np.floor(C * qscale + 0.5)
-        cids = np.asarray([cid for cid, _ in rows], dtype="int64")
-        if raw:
-            vec_t = df.schema[vec_col].dataType.simpleString()
-            # same cluster-width repartition _double_base applies —
-            # the n·k kernel must not fuse into a few fat scan splits
-            pts = df.repartition(
-                df.sparkSession.sparkContext.defaultParallelism
-            ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("u"))
-        else:
-            vec_t = "array<double>"
-            pts = _unit_vectors(df, id_col, vec_col)
-
-        def _assign(batches):
-            import numpy as _np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                U = _np.stack(
-                    [_np.asarray(u, dtype="float64") for u in pdf["u"]]
-                )
-                if raw:
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = U * U
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    U = U / _np.sqrt(acc)[:, None]
-                if quant:
-                    U = _np.floor(U * qscale + 0.5)
-                best = cids[_np.argmax(U @ C.T, axis=1)]
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "v": pdf["u"], "bucket": best}
-                )
-
-        asg = pts.mapInPandas(
-            _assign, schema=f"id long, v {vec_t}, bucket long"
+        asg = _assign_raw_quant(
+            df, id_col, vec_col, {"bucket": (cent, slice(None))}
         )
     else:
         asg = assign_clusters(df, cent, id_col, vec_col).select(
             "id", F.col("u").alias("v"), F.col("cid").alias("bucket")
         )
     if n_sub is None:
-        # expected cell bytes = scan_bytes / k; sub-split so the
-        # average packed block stays task-sized (see
-        # cosine_topk_bucketed_blas — output rows are invariant)
-        est = _scan_bytes_est(df)
-        n_sub = (
-            max(1, math.ceil(est / n_clusters / _BLAS_BLOCK_BYTES))
-            if est
-            else 1
-        )
-    if n_sub > 1:
-        asg = asg.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
-        packed = asg.groupBy("bucket", "sub").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = (
-            packed.alias("a")
-            .join(packed.alias("b"), F.col("a.bucket") == F.col("b.bucket"))
-            .select(
-                F.col("a.items").alias("q_items"),
-                F.col("b.items").alias("d_items"),
-            )
-        )
-    else:
-        packed = asg.groupBy("bucket").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = packed.select(
-            F.col("items").alias("q_items"), F.col("items").alias("d_items")
-        )
-    return _blas_topk_from_combos(combos, k_neighbors, quant=quant, raw=pack_raw)
-
-
-
-def kmeans_centroids_blas(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    n_iter: int = 2,
-) -> "list":
-    """Throughput twin of ``kmeans_centroids``: same seeded init and
-    Lloyd's structure, but each round is ONE ``mapInPandas`` pass
-    emitting per-partition partial (cluster, count, sum-vector) rows
-    — the MLlib KMeans shape. Assignment is a NumPy matmul (argmax
-    ties to lowest cid via argmax-first semantics) and the driver
-    combines O(partitions × k) partials into new centroids — model
-    state only, never data. BLAS accumulation differs from the SQL
-    fold at ulp level, so this trainer has no oracle; the exact
-    trainer is the hash-verified twin (agreement on separable data
-    asserted in tests). Returns the centroid list [(cid, [c...])].
-    """
-    import numpy as np
-
-    from spotify_pipeline_gcp_spark.pyfiles import ensure_package_on_workers
-
-    spark = df.sparkSession
-    ensure_package_on_workers(spark)
-    pts = _unit_vectors(df, id_col, vec_col)
-    init = _seeded_init(pts, k).collect()
-    cent = np.stack(
-        [
-            np.asarray(r["c"], dtype="float64")
-            for r in sorted(init, key=lambda r: r["cid"])
-        ]
+        n_sub = _derive_n_sub(df, n_clusters)
+    return _blas_topk_from_combos(
+        _cell_combos(asg, ["bucket"], n_sub), k_neighbors, raw=blas_assign
     )
-
-    d = cent.shape[1]
-    for _ in range(n_iter):
-        C = cent  # closure capture: k x d ndarray, ~KBs
-
-        def partials(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                U = np.stack([np.asarray(u, dtype="float64") for u in pdf["u"]])
-                cids = np.argmax(U @ C.T, axis=1)
-                rows = []
-                for cid in np.unique(cids):
-                    members = U[cids == cid]
-                    rows.append(
-                        (int(cid), int(members.shape[0]), members.sum(axis=0).tolist())
-                    )
-                yield pd.DataFrame(rows, columns=["cid", "cnt", "psum"])
-
-        agg = pts.select("u").mapInPandas(
-            partials, schema="cid long, cnt long, psum array<double>"
-        ).collect()
-        sums = np.zeros((k, d))
-        counts = np.zeros(k)
-        for r in agg:
-            sums[r["cid"]] += np.asarray(r["psum"])
-            counts[r["cid"]] += r["cnt"]
-        live = counts > 0
-        means = sums[live] / counts[live, None]
-        cent = means / np.linalg.norm(means, axis=1, keepdims=True)
-    return [(i, cent[i].tolist()) for i in range(cent.shape[0])]
 
 
 def _widen_for_scoring(
@@ -3115,68 +2819,30 @@ def cosine_topk_kmeans_blas_trained(
     n_clusters: int = 8,
     n_iter: int = 2,
     n_sub: int | None = None,
-    quant: bool = False,
 ) -> DataFrame:
     """End-to-end BLAS trained ANN: a matmul trainer feeding the
     bucket-packed BLAS search — training AND search vectorized, the
-    full-throughput production path.
-
-    ``quant=False``: the ``kmeans_centroids_blas`` raw-float trainer
-    — rows-only like raw-float qs8 was; the all-DataFrame qs7 is the
-    exactness twin. ``quant=True`` (qs10's graduated r12 shape): the
+    full-throughput production path (qs10's graduated r12 shape): the
     ``kmeans_centroids_quant_on`` trainer — every Lloyd assignment a
     QUANTIZED dgemm — then quantized dgemm corpus assignment and
     quantized-exact packed search via ``cosine_topk_kmeans_blas``:
     the ONLY fully-dgemm pipeline in the family (train + assign +
     search), and every score an integer the SQL oracle replays, so
-    it is hash-verified end to end."""
-    spark = df.sparkSession
-    if quant:
-        pts = _unit_vectors(df, id_col, vec_col)
-        cent = kmeans_centroids_quant_on(pts, k=n_clusters, n_iter=n_iter)
-        return cosine_topk_kmeans_blas(
-            df,
-            k_neighbors=k_neighbors,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_sub=n_sub,
-            blas_assign=True,
-            cent=cent,
-            quant=True,
-        )
-    cent_rows = kmeans_centroids_blas(df, id_col, vec_col, k=n_clusters, n_iter=n_iter)
-    cent = spark.createDataFrame(cent_rows, "cid long, c array<double>")
-    asg = assign_clusters(df, cent, id_col, vec_col).select(
-        "id", F.col("u").alias("v"), F.col("cid").alias("bucket")
+    it is hash-verified end to end. The all-DataFrame qs7 is the
+    raw-float exactness twin."""
+    cent = kmeans_centroids_quant_on(
+        _unit_vectors(df, id_col, vec_col), k=n_clusters, n_iter=n_iter
     )
-    if n_sub is None:
-        est = _scan_bytes_est(df)
-        n_sub = (
-            max(1, math.ceil(est / n_clusters / _BLAS_BLOCK_BYTES))
-            if est
-            else 1
-        )
-    if n_sub > 1:
-        asg = asg.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
-        packed = asg.groupBy("bucket", "sub").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = (
-            packed.alias("a")
-            .join(packed.alias("b"), F.col("a.bucket") == F.col("b.bucket"))
-            .select(
-                F.col("a.items").alias("q_items"),
-                F.col("b.items").alias("d_items"),
-            )
-        )
-    else:
-        packed = asg.groupBy("bucket").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = packed.select(
-            F.col("items").alias("q_items"), F.col("items").alias("d_items")
-        )
-    return _blas_topk_from_combos(combos, k_neighbors)
+    return cosine_topk_kmeans_blas(
+        df,
+        k_neighbors=k_neighbors,
+        id_col=id_col,
+        vec_col=vec_col,
+        n_clusters=n_clusters,
+        n_sub=n_sub,
+        blas_assign=True,
+        cent=cent,
+    )
 
 
 def cosine_topk_imi_multiprobe_blas(
@@ -3189,10 +2855,6 @@ def cosine_topk_imi_multiprobe_blas(
     nprobe_each: int = 2,
     train_df: DataFrame | None = None,
     cents: tuple[DataFrame, DataFrame] | None = None,
-    quant: bool = False,
-    work_rows: int | None = None,
-    probe_kernel: bool = True,
-    raw: bool = True,
 ) -> DataFrame:
     """Multiprobe IMI at BLAS throughput — the last cell of the
     recall-knob × kernel matrix: qs24's 2×2 product probe grid (each
@@ -3208,116 +2870,61 @@ def cosine_topk_imi_multiprobe_blas(
     query's ≤nprobe² probed cells are distinct and each database
     point lives in exactly one cell, so a pair arises in at most one
     block — the same uniqueness argument as the fold multiprobe).
-    With ``quant=False`` the float dgemm accumulation differs from
-    the fold at ulp level → rows-only; ``cosine_topk_imi`` multiprobe
-    (qs24) is the hash-verified twin over the SAME model and probe
-    grid, agreement pytest-pinned. ``quant=True`` (qs28's graduated
-    r12 shape) keeps the FOLD assignment and probe rankings (already
-    oracle-replayed — qs24's chain) and scores the blocks with the
-    QUANTIZED-EXACT kernel, making the query hash-verified. ``cents``
-    accepts the pre-trained half-quantizers (qs28 passes the memoized
-    shared 'imi:' model)."""
+    qs28's graduated r12 shape: the assignment and probe rankings
+    replay the FLOAT fold (already oracle-replayed — qs24's chain)
+    and the blocks are scored with the QUANTIZED-EXACT kernel, making
+    the query hash-verified; ``cosine_topk_imi`` multiprobe (qs24) is
+    the fold twin over the SAME model and probe grid, agreement
+    pytest-pinned. ``cents`` accepts the pre-trained half-quantizers
+    (qs28 passes the memoized shared 'imi:' model)."""
     from pyspark import StorageLevel
 
-    pts = _unit_vectors(df, id_col, vec_col)
     h = _half_dim(df, vec_col)
     if cents is not None:
         cent1, cent2 = cents
     else:
-        tpts = (
-            _unit_vectors(train_df, id_col, vec_col)
-            if train_df is not None
-            else pts
+        tpts = _unit_vectors(
+            train_df if train_df is not None else df, id_col, vec_col
         )
         cent1, cent2 = kmeans_centroids_on_halves(
             tpts, h, k=k_each, n_iter=n_iter
         )
-    # ONE fold-scoring chain total (r14 — the qs28 stageprof
-    # attributed ~280 s of the 377.8 s rung row to THREE scoring
-    # chains: imi_assign's pass plus two separate probe passes, each
-    # rebuilding the scan→unit-vector map; an intermediate two-chain
-    # shape still paid 2×~80 s): both halves' top-n probe lists come
-    # from ONE scored pass, and the assignment is ``t[0]`` (probe
-    # rank 1 — the ranking's (−dot, cid) order is identical to the
-    # assignment argmax's, ``_topn_probes``' documented contract).
-    # Session 4 moved that pass from the tagged-union crossJoin+fold
-    # (``_topn_probe_ranks_halves`` — kept as the A/B-pinned fold
-    # form, ``probe_kernel=False``) to its BIT-EXACT vectorized twin
-    # (``_topn_probe_ranks_halves_blas`` — same double bits, same tie
-    # order, no exchange, no ``work_rows`` sorter guard needed).
-    # The per-id probe row (id + two ≤nprobe struct arrays) is
-    # consumed twice (all rank combos → query side, rank-1 pair →
-    # database side); a DISK_ONLY localCheckpoint pins it so neither
-    # consumer re-runs the scoring. Output is bit-identical to the
-    # imi_assign shape (same dots, same tie order) — the oracle and
-    # the qs24 agreement pytest are unchanged.
-    if probe_kernel:
-        # the kernel emits u alongside the probe lists (bit-lossless
-        # Arrow passthrough), so BOTH packing consumers read (id, u,
-        # probes) straight off the one checkpoint — no pts join-back,
-        # no second/third corpus scan + re-normalize (session 4: the
-        # two join-side stages were 52 s + 43 s of the 102 s rung row)
-        both = _topn_probe_ranks_halves_blas(
-            df,
-            cent1,
-            cent2,
-            h,
-            nprobe_each,
-            with_u=True,
-            cids_only=False,
-            # the kernel unit-normalizes bit-exactly itself: no JVM HOF
-            # pass, float32 across the Arrow boundary (see the helper)
-            raw=(id_col, vec_col),
-            # raw: u passes through as the RAW float32 vector, so the
-            # checkpoint and both packing exchanges carry half the
-            # bytes; the scoring kernel re-normalizes bit-exactly
-            emit_raw=raw,
-        ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-        d_side = both.select(
-            "id",
-            "u",
-            F.col("t1")[0]["cid"].alias("cid1"),
-            F.col("t2")[0]["cid"].alias("cid2"),
-        )
-        q_side = (
-            both.select("id", "u", F.explode("t1").alias("p1"), "t2")
-            .select("id", "u", F.col("p1.cid").alias("cid1"), F.explode("t2").alias("p2"))
-            .select("id", "u", "cid1", F.col("p2.cid").alias("cid2"))
-        )
-    else:
-        both = _topn_probe_ranks_halves(
-            pts, cent1, cent2, h, nprobe_each, work_rows=work_rows
-        ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-        d_ids = both.select(
-            "id",
-            F.col("t1")[0]["cid"].alias("cid1"),
-            F.col("t2")[0]["cid"].alias("cid2"),
-        )
-        d_side = pts.join(d_ids, "id")
-        q_keys = (
-            both.select("id", F.explode("t1").alias("p1"), "t2")
-            .select(
-                "id", F.col("p1.cid").alias("cid1"), F.explode("t2").alias("p2")
-            )
-            .select("id", "cid1", F.col("p2.cid").alias("cid2"))
-        )
-        q_side = pts.join(q_keys, "id")
+    # ONE scoring pass total (r14 — the qs28 stageprof attributed
+    # ~280 s of the 377.8 s rung row to THREE fold scoring chains):
+    # both halves' top-n probe lists come from ONE row-local pass of
+    # the bit-exact vectorized fold twin, and the assignment is
+    # ``t[0]`` (probe rank 1 — the ranking's (−dot, cid) order is
+    # identical to the assignment argmax's, ``_topn_probes``'
+    # documented contract). The per-id probe row (id, raw v, two
+    # ≤nprobe struct arrays) is consumed twice (all rank combos →
+    # query side, rank-1 pair → database side); a DISK_ONLY
+    # localCheckpoint pins it so neither consumer re-runs the
+    # scoring, and neither joins the corpus back (measured: the two
+    # join-side stages were 52 s + 43 s of the 102 s rung row).
+    both = _topn_probe_ranks_halves_blas(
+        _raw_points(df, id_col, vec_col), cent1, cent2, h, nprobe_each
+    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    d_side = both.select(
+        "id",
+        "v",
+        F.col("t1")[0]["cid"].alias("cid1"),
+        F.col("t2")[0]["cid"].alias("cid2"),
+    )
+    q_side = (
+        both.select("id", "v", F.explode("t1").alias("p1"), "t2")
+        .select("id", "v", F.col("p1.cid").alias("cid1"), F.explode("t2").alias("p2"))
+        .select("id", "v", "cid1", F.col("p2.cid").alias("cid2"))
+    )
     d_packed = d_side.groupBy("cid1", "cid2").agg(
-        F.collect_list(F.struct(F.col("id"), F.col("u").alias("v"))).alias(
-            "d_items"
-        )
+        F.collect_list(F.struct("id", "v")).alias("d_items")
     )
     q_packed = q_side.groupBy("cid1", "cid2").agg(
-        F.collect_list(F.struct(F.col("id"), F.col("u").alias("v"))).alias(
-            "q_items"
-        )
+        F.collect_list(F.struct("id", "v")).alias("q_items")
     )
     combos = q_packed.join(d_packed, ["cid1", "cid2"]).select(
         "q_items", "d_items"
     )
-    return _blas_topk_from_combos(
-        combos, k_neighbors, quant=quant, raw=raw and probe_kernel
-    )
+    return _blas_topk_from_combos(combos, k_neighbors, raw=True)
 
 
 def cosine_topk_imi_blas(
@@ -3328,54 +2935,34 @@ def cosine_topk_imi_blas(
     k_each: int = 4,
     n_iter: int = 2,
     train_df: DataFrame | None = None,
-    blas_assign: bool = False,
     cents: tuple[DataFrame, DataFrame] | None = None,
-    quant: bool = False,
-    raw: bool = True,
 ) -> DataFrame:
     """The search-sized IMI at BLAS throughput — ``cosine_topk_imi``'s
     model (same half-quantizer trainer, so with the same ``train_df``
-    the product cells are IDENTICAL) searched with the bucket-packed
-    Arrow/NumPy matmul kernel instead of the codegen fold: each
-    product cell (~256 vectors at the search sizing) packs into one
-    block that scores against itself in a single dgemm — no candidate
-    join at all, the ``cosine_topk_kmeans_blas_trained`` recipe with
-    the (cid1, cid2) product grid as the bucket key. The self-join
-    search stays LINEAR (~256·n multiply-adds — the IMI property);
-    the kernel changes the constant, exactly the qs16→qs23 move
-    applied to the index family whose search term already scales.
-    Float accumulation order differs from the SQL fold at ulp level,
-    so this is rows-only (the qs4/qs6/qs8/qs10/qs23 convention);
-    ``cosine_topk_imi`` is the hash-verified exactness twin over the
-    SAME cells, agreement pinned in tests/test_similarity.py.
+    the trained centroids are IDENTICAL) searched with the
+    bucket-packed Arrow/NumPy matmul kernel instead of the codegen
+    fold: each product cell (~256 vectors at the search sizing) packs
+    into one block that scores against itself in a single dgemm — no
+    candidate join at all, the ``cosine_topk_kmeans_blas_trained``
+    recipe with the (cid1, cid2) product grid as the bucket key. The
+    self-join search stays LINEAR (~256·n multiply-adds — the IMI
+    property); the kernel changes the constant, exactly the
+    qs16→qs23 move applied to the index family whose search term
+    already scales.
 
-    ``blas_assign`` moves the Θ(n^1.5/16) half-assignment scoring —
-    what dominates this operator's wall once the search is dgemm —
-    into the same NumPy kernel family (the ``cosine_topk_kmeans_blas``
-    recipe: O(k·d) centroid collect, per-batch ``argmax(U @ C.T)``
-    per half; argmax-first ties to the lowest cid, matching
-    ``imi_assign``'s (dot, -cid) struct-max at EXACT ties). Caveat
-    (r9, ADVICE): dgemm accumulation order differs from the fold at
-    ulp level, so when two cells' dots are within an ulp the two
-    assigners can legitimately disagree — "product cells IDENTICAL
-    to the fold" is a data-dependent observation (it holds on the
-    test corpora, pinned in tests/test_similarity.py), not an
-    arithmetic guarantee.
-
-    ``quant=True`` (requires ``blas_assign`` — qs26's graduated r12
-    shape): half-assignments AND within-cell search score QUANTIZED
-    integer dots — bit-replayable by the SQL oracle under any dgemm
-    accumulation order, so the query is hash-verified end to end;
-    ``imi_assign``'s float fold and its oracle consumers
-    (qs17/qs24/qs25) are untouched."""
-    if quant and not blas_assign:
-        raise ValueError(
-            "quant=True requires blas_assign=True — the quantized "
-            "fold twin is cosine_topk_imi (float, oracle-checked); "
-            "quant exists to make the dgemm route hash-verifiable"
-        )
+    qs26's graduated r12 shape: the Θ(n^1.5/16) half-assignment
+    scoring — what dominates this operator's wall once the search is
+    dgemm — runs in the same NumPy kernel family
+    (``_assign_raw_quant``, one 2^20-rounded ``argmax(U @ Cᵀ)`` per
+    half, ties to the lowest cid), and the within-cell search scores
+    QUANTIZED integer dots too — bit-replayable by the SQL oracle
+    under any dgemm accumulation order, so the query is hash-verified
+    end to end. Because the assignment argmax is quantized, the
+    product cells can differ from ``imi_assign``'s float fold where
+    two cells' dots sit within 2^-20 — identically in every engine;
+    ``imi_assign``'s fold and its oracle consumers (qs17/qs24/qs25)
+    are untouched."""
     h = _half_dim(df, vec_col)
-    pack_raw = raw and blas_assign
     if cents is not None:
         # pre-trained half-quantizers (the train-once-serve-many
         # split; qs26 passes the memoized 'imi:' model here)
@@ -3387,69 +2974,12 @@ def cosine_topk_imi_blas(
         cent1, cent2 = kmeans_centroids_on_halves(
             tpts, h, k=k_each, n_iter=n_iter
         )
-    if blas_assign:
-        import numpy as np
-
-        qscale = float(_ASSIGN_QSCALE)
-        r1 = sorted((r["cid"], list(r["c"])) for r in cent1.collect())
-        r2 = sorted((r["cid"], list(r["c"])) for r in cent2.collect())
-        C1 = np.asarray([c for _, c in r1], dtype="float64")
-        cids1 = np.asarray([cid for cid, _ in r1], dtype="int64")
-        C2 = np.asarray([c for _, c in r2], dtype="float64")
-        cids2 = np.asarray([cid for cid, _ in r2], dtype="int64")
-        if quant:
-            C1 = np.floor(C1 * qscale + 0.5)
-            C2 = np.floor(C2 * qscale + 0.5)
-        if raw:
-            # raw float32 in, raw float32 through to the packed blocks
-            # (half the assignment-boundary + packing-shuffle bytes);
-            # the kernel replays _unit_vectors' chain bit-exactly and
-            # the search kernel re-normalizes the same way (raw=True)
-            vec_t = df.schema[vec_col].dataType.simpleString()
-            pts = df.repartition(
-                df.sparkSession.sparkContext.defaultParallelism
-            ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("u"))
-        else:
-            vec_t = "array<double>"
-            pts = _unit_vectors(df, id_col, vec_col)
-
-        def _assign(batches):
-            import numpy as _np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                U = _np.stack(
-                    [_np.asarray(u, dtype="float64") for u in pdf["u"]]
-                )
-                if raw:
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = U * U
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    U = U / _np.sqrt(acc)[:, None]
-                S = _np.floor(U * qscale + 0.5) if quant else U
-                b1 = cids1[_np.argmax(S[:, :h] @ C1.T, axis=1)]
-                b2 = cids2[_np.argmax(S[:, h:] @ C2.T, axis=1)]
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "u": pdf["u"], "cid1": b1, "cid2": b2}
-                )
-
-        import pandas as pd  # noqa: F401 — worker-side dependency
-
-        asg = pts.mapInPandas(
-            _assign,
-            schema=f"id long, u {vec_t}, cid1 long, cid2 long",
-        )
-    else:
-        asg = imi_assign(_unit_vectors(df, id_col, vec_col), cent1, cent2, h)
-    packed = asg.select(
-        "cid1", "cid2", F.struct(F.col("id"), F.col("u").alias("v")).alias("item")
-    ).groupBy("cid1", "cid2").agg(F.collect_list("item").alias("items"))
-    combos = packed.select(
-        F.col("items").alias("q_items"), F.col("items").alias("d_items")
+    asg = _assign_raw_quant(
+        df,
+        id_col,
+        vec_col,
+        {"cid1": (cent1, slice(None, h)), "cid2": (cent2, slice(h, None))},
     )
-    return _blas_topk_from_combos(combos, k_neighbors, quant=quant, raw=pack_raw)
+    return _blas_topk_from_combos(
+        _cell_combos(asg, ["cid1", "cid2"]), k_neighbors, raw=True
+    )

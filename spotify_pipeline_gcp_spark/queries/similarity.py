@@ -280,7 +280,7 @@ def _ivf_kmeans_oracle(
     — an exact dyadic double, no 1e-6 display rounding needed).
     ``quant_final`` additionally replays quantized dots in the final
     assignment + probe steps (the ``assign_clusters_quant_blas``
-    route the blas_assign+quant engines take); ``quant_iters``
+    route the blas_assign engines take); ``quant_iters``
     extends the same quantized scoring to the per-ITERATION Lloyd
     assignments (the ``kmeans_centroids_quant_on`` throughput
     trainer — qs10's fully-dgemm pipeline); with all three off, the
@@ -988,18 +988,19 @@ def qs4_cosine_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver never holds vector data.
 
     Graduated from rows-only to HASH-VERIFIED in r12 via
-    quantized-exact scoring (``quant=True``): unit vectors from the
-    JVM fold, rounded at 2^20 in the kernel, scored by a dgemm whose
-    integer dots are exact in float64 (d=64 dot ≤ 2^46 < 2^53) — so
-    the DuckDB oracle replays every score bit-for-bit and the rank
-    order is deterministic. The 2^-20 quantization moves only pairs
+    quantized-exact scoring, the operator's only mode: the packed
+    blocks carry the raw float32 embeddings, the kernel unit-normalizes
+    them bit-exactly like the JVM fold, rounds at 2^20, and scores by a
+    dgemm whose integer dots are exact in float64 (d=64 dot ≤ 2^46 <
+    2^53) — so the DuckDB oracle replays every score bit-for-bit and
+    the rank order is deterministic. The 2^-20 quantization moves only pairs
     within ~1e-6 of a rank boundary, identically in every engine;
     qs2 remains the raw-float exact-fold baseline (agreement pinned
     in tests/test_similarity.py)."""
     from spotify_pipeline_gcp_spark.operators.similarity import cosine_topk_blas
 
     emb = table(spark, sf_dir, "embeddings")
-    return cosine_topk_blas(emb, k=5, quant=True).withColumnRenamed(
+    return cosine_topk_blas(emb, k=5).withColumnRenamed(
         "cosine", "cosine_q"
     )
 
@@ -1056,9 +1057,9 @@ def qs6_cosine_topk_ivf_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    return cosine_topk_bucketed_blas(
-        emb, k=5, n_bits=4, quant=True
-    ).withColumnRenamed("cosine", "cosine_q")
+    return cosine_topk_bucketed_blas(emb, k=5, n_bits=4).withColumnRenamed(
+        "cosine", "cosine_q"
+    )
 
 
 @register(
@@ -1091,7 +1092,7 @@ def qs8_cosine_topk_ivf_kmeans_blas(spark: SparkSession, sf_dir: str) -> DataFra
     ensure_package_on_workers(spark)
     emb = table(spark, sf_dir, "embeddings")
     return cosine_topk_kmeans_blas(
-        emb, k_neighbors=5, n_clusters=16, n_iter=2, quant=True
+        emb, k_neighbors=5, n_clusters=16, n_iter=2
     ).withColumnRenamed("cosine", "cosine_q")
 
 
@@ -1307,7 +1308,7 @@ def qs10_ann_full_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_package_on_workers(spark)
     emb = table(spark, sf_dir, "embeddings")
     return cosine_topk_kmeans_blas_trained(
-        emb, k_neighbors=5, n_clusters=16, n_iter=2, quant=True
+        emb, k_neighbors=5, n_clusters=16, n_iter=2
     ).withColumnRenamed("cosine", "cosine_q")
 
 
@@ -1445,7 +1446,6 @@ def qs30_cosine_topk_bucketed_blas_sized(
         emb,
         k=5,
         n_bits=n_bits,
-        quant=True,
         max_bucket=MAX_SIGN_BUCKET,
     ).withColumnRenamed("cosine", "cosine_q")
 
@@ -3555,7 +3555,6 @@ def qs23_cosine_topk_ivf_blas_sized(
         n_iter=2,
         blas_assign=True,
         cent=cent,
-        quant=True,
     ).withColumnRenamed("cosine", "cosine_q")
 
 
@@ -3937,9 +3936,7 @@ def qs26_cosine_topk_imi_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
         k_neighbors=5,
         k_each=k_each,
         n_iter=2,
-        blas_assign=True,
         cents=cents,
-        quant=True,
     ).withColumnRenamed("cosine", "cosine_q")
 
 
@@ -3999,13 +3996,6 @@ def qs28_cosine_topk_imi_multiprobe_blas(
         n_iter=2,
         nprobe_each=2,
         cents=cents,
-        quant=True,
-        # only consumed by the probe_kernel=False fold escape path:
-        # bounds the tagged scored stream's per-task sorter slice —
-        # the 2 M-row rung died without it (see _topn_probe_ranks_halves).
-        # The default bit-exact kernel path computes probes row-locally
-        # and needs no sorter guard (_topn_probe_ranks_halves_blas).
-        work_rows=n * 2 * k_each,
     ).withColumnRenamed("cosine", "cosine_q")
 
 

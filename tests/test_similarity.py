@@ -99,8 +99,7 @@ def test_blas_topk_boundary_ties_break_by_id(spark):
     # dot. With k=2 the boundary falls INSIDE the tie group — the
     # kernel must keep the LOWEST neighbor ids (10, 11), which the
     # naive argpartition-by-score selection gets wrong whenever the
-    # partition happens to keep a higher id. Also asserted on the
-    # raw-float kernel: exact duplicates tie there too.
+    # partition happens to keep a higher id.
     dup = [1.0, 2.0, 3.0, 4.0]
     rows = [
         (1, [4.0, 3.0, 2.0, 1.0]),
@@ -112,21 +111,18 @@ def test_blas_topk_boundary_ties_break_by_id(spark):
         (21, [-4.0, -3.0, -2.0, -1.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for quant in (False, True):
-        got = {
-            (r.query_id, r.rank): r.neighbor_id
-            for r in cosine_topk_blas(
-                emb, k=2, n_blocks=1, quant=quant
-            ).collect()
-        }
-        assert got[(1, 1)] == 10 and got[(1, 2)] == 11, (quant, got)
-        # the tie group members rank each other ahead of everyone
-        assert got[(10, 1)] == 11 and got[(10, 2)] == 12, (quant, got)
-        assert got[(11, 1)] == 10 and got[(11, 2)] == 12, (quant, got)
+    got = {
+        (r.query_id, r.rank): r.neighbor_id
+        for r in cosine_topk_blas(emb, k=2, n_blocks=1).collect()
+    }
+    assert got[(1, 1)] == 10 and got[(1, 2)] == 11, got
+    # the tie group members rank each other ahead of everyone
+    assert got[(10, 1)] == 11 and got[(10, 2)] == 12, got
+    assert got[(11, 1)] == 10 and got[(11, 2)] == 12, got
 
 
 def test_blas_quant_scores_are_exact_fixed_point(spark):
-    # The r12 graduation contract (qs4/qs6): every quant-mode score is
+    # The r12 graduation contract (qs4/qs6): every BLAS score is
     # qdot / 2^40 with qdot an INTEGER — the property that makes the
     # dgemm bit-replayable by the DuckDB oracle regardless of
     # accumulation order. Also: quantized ranking agrees with the
@@ -138,7 +134,7 @@ def test_blas_quant_scores_are_exact_fixed_point(spark):
     sf_dir = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(80)
     q2 = float(_ASSIGN_QSCALE) ** 2
-    quant = cosine_topk_blas(emb, k=3, quant=True).collect()
+    quant = cosine_topk_blas(emb, k=3).collect()
     assert len(quant) > 0
     for r in quant:
         scaled = r.cosine * q2
@@ -155,8 +151,8 @@ def test_blas_quant_scores_are_exact_fixed_point(spark):
 
 
 def test_bucketed_blas_quant_agrees_with_fold_buckets(spark):
-    # quant=True must not move the sign buckets (sign(u) == sign(v)):
-    # same candidate pairs as the oracle-checked fold twin qs3.
+    # quantized scoring must not move the sign buckets (sign(u) ==
+    # sign(v)): same candidate pairs as the oracle-checked fold twin qs3.
     from spotify_pipeline_gcp_spark.operators.similarity import (
         cosine_topk_bucketed_blas,
     )
@@ -169,9 +165,7 @@ def test_bucketed_blas_quant_agrees_with_fold_buckets(spark):
     }
     quant = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk_bucketed_blas(
-            emb, k=3, n_bits=4, quant=True
-        ).collect()
+        for r in cosine_topk_bucketed_blas(emb, k=3, n_bits=4).collect()
     }
     assert fold == quant
 
@@ -205,8 +199,8 @@ def test_multiprobe_recall_at_least_single_probe(spark):
 
 def test_ivf_blas_matches_fold_bucketed(spark):
     # the BLAS hybrid must produce the same (query, neighbor, rank)
-    # triples as the oracle-checked fold twin qs3 (ulp-level cosine
-    # noise must not reorder ranks on this data)
+    # triples as the oracle-checked fold twin qs3 (the 2^-20
+    # quantization must not reorder ranks on this data)
     from spotify_pipeline_gcp_spark.operators.similarity import (
         cosine_topk_bucketed_blas,
     )
@@ -322,9 +316,10 @@ def test_kmeans_blas_matches_fold_kmeans(spark):
 
 
 def test_blas_trainer_agrees_on_separable_data(spark):
-    # on well-separated clusters the matmul trainer must learn the
-    # same partition of points as the exact fold trainer (ulp noise
-    # cannot flip assignments when margins are wide)
+    # on well-separated clusters the quantized matmul trainer
+    # (kmeans_centroids_quant_on) must learn the same partition of
+    # points as the exact fold trainer (2^-20 rounding cannot flip
+    # assignments when margins are wide)
     import random
 
     from spotify_pipeline_gcp_spark.operators.similarity import (
@@ -1020,15 +1015,17 @@ def test_multiprobe_blas_imi_matches_multiprobe_fold_imi(spark):
     assert fold == blas and len(fold) > 0
 
 
-def test_probe_kernel_bit_exact_vs_fold(spark):
-    # _topn_probe_ranks_halves_blas (qs28's session-4 vectorized probe
-    # pass) must reproduce the crossJoin+fold form BIT-FOR-BIT — same
+def test_probe_ranks_blas_bit_exact_vs_fold(spark):
+    # _topn_probe_ranks_halves_blas (qs28's vectorized probe pass,
+    # raw float32 in, unit-normalized in the kernel) must reproduce
+    # the crossJoin+fold form over _unit_vectors BIT-FOR-BIT — same
     # ids, same probe cids in the same order, same nd double bits —
     # because qs28's oracle replays the FLOAT fold chain and the query
     # is hash-verified. Compared via repr() of the structs (repr of a
     # float is bit-faithful for doubles).
     from spotify_pipeline_gcp_spark.operators.similarity import (
         _half_dim,
+        _raw_points,
         _topn_probe_ranks_halves,
         _topn_probe_ranks_halves_blas,
         _unit_vectors,
@@ -1036,9 +1033,7 @@ def test_probe_kernel_bit_exact_vs_fold(spark):
         kmeans_centroids_on_halves,
     )
     from spotify_pipeline_gcp_spark.queries.compat import table
-    from spotify_pipeline_gcp_spark.pyfiles import ensure_package_on_workers
 
-    ensure_package_on_workers(spark)
     sf_dir = "/root/testdata/sf0.001"
     emb = table(spark, sf_dir, "embeddings")
     pts = _unit_vectors(emb, "vec_id", "embedding")
@@ -1046,45 +1041,27 @@ def test_probe_kernel_bit_exact_vs_fold(spark):
     k = imi_cells_for(emb.count())
     cent1, cent2 = kmeans_centroids_on_halves(pts, h, k=k, n_iter=2)
 
-    def snap(df):
+    def snap(rows):
         return {
             r["id"]: (
                 [(repr(e["nd"]), e["cid"]) for e in r["t1"]],
                 [(repr(e["nd"]), e["cid"]) for e in r["t2"]],
             )
-            for r in df.collect()
+            for r in rows
         }
 
-    fold = snap(_topn_probe_ranks_halves(pts, cent1, cent2, h, 2))
-    blas = snap(_topn_probe_ranks_halves_blas(pts, cent1, cent2, h, 2))
-    assert fold == blas and len(fold) > 0
+    fold = snap(_topn_probe_ranks_halves(pts, cent1, cent2, h, 2).collect())
+    raw = _raw_points(emb, "vec_id", "embedding")
+    rows = _topn_probe_ranks_halves_blas(raw, cent1, cent2, h, 2).collect()
+    assert snap(rows) == fold and len(fold) > 0
 
-    # with_u/cids_only (qs28's shape) must select the same probe cids
-    # in the same rank order AND pass u through bit-losslessly
-    withu = _topn_probe_ranks_halves_blas(
-        pts, cent1, cent2, h, 2, with_u=True, cids_only=True
-    )
-    wu_rows = withu.collect()
-    cid_seq = {r["id"]: (list(r["t1"]), list(r["t2"])) for r in wu_rows}
-    fold_cids = {
-        i: ([c for _, c in t1], [c for _, c in t2])
-        for i, (t1, t2) in fold.items()
+    # the raw vector passes through bit-losslessly (qs28's packing
+    # sides read it from the kernel output, not a corpus join-back)
+    src_v = {
+        r["vec_id"]: [repr(x) for x in r["embedding"]] for r in emb.collect()
     }
-    assert cid_seq == fold_cids
-    src_u = {r["id"]: [repr(x) for x in r["u"]] for r in pts.collect()}
-    ker_u = {r["id"]: [repr(x) for x in r["u"]] for r in wu_rows}
-    assert ker_u == src_u
-
-    # raw path (qs28's deployed shape): the kernel unit-normalizes
-    # float32 input itself — probes AND the emitted u doubles must be
-    # bit-identical to the JVM _unit_vectors fold chain
-    raw = _topn_probe_ranks_halves_blas(
-        emb, cent1, cent2, h, 2, with_u=True, raw=("vec_id", "embedding")
-    )
-    raw_rows = raw.collect()
-    assert snap(raw) == fold
-    raw_u = {r["id"]: [repr(x) for x in r["u"]] for r in raw_rows}
-    assert raw_u == src_u
+    ker_v = {r["id"]: [repr(x) for x in r["v"]] for r in rows}
+    assert ker_v == src_v
 
 
 def test_model_memo_shares_and_reproduces(spark):
@@ -1298,102 +1275,245 @@ def test_sized_blas_buckets_match_sized_fold_buckets(spark):
     assert fold == blas and len(fold) > 0
 
 
-def test_raw_pack_paths_bit_equal_jvm_unit_paths(spark):
-    """raw=True (float32 packing + in-kernel normalize) must emit
-    BIT-IDENTICAL rows to raw=False (JVM cast/fold-normalize) for all
-    three packed-block kernels — the raw path replays _unit_vectors'
-    chain exactly (exact widening, sequential fold norm, sqrt, one
-    division per element), so every score, rank and pair must match
-    including the float bits (the hash-verification contract)."""
+def _jvm_quant_topk(q_side, d_side, keys, k):
+    """JVM reference for the packed-block kernels: (query_id,
+    neighbor_id, cosine, rank) scored by the SQL fold over
+    ``_unit_vectors``' u — quantized at 2^20, exact integer dot, /
+    2^40 — for every (q, d) pair sharing the ``keys`` cell (q != d),
+    ranked (cosine desc, neighbor_id). ``q_side``/``d_side`` are
+    (id, u, *keys)."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
     from spotify_pipeline_gcp_spark.operators.similarity import (
+        _ASSIGN_QSCALE,
+        _qdot_exact,
+        _quantize_vec,
+    )
+
+    q2 = float(_ASSIGN_QSCALE) ** 2
+    q = q_side.select(
+        F.col("id").alias("query_id"),
+        _quantize_vec(F.col("u")).alias("qq"),
+        *[F.col(c).alias(f"q_{c}") for c in keys],
+    )
+    d = d_side.select(
+        F.col("id").alias("neighbor_id"),
+        _quantize_vec(F.col("u")).alias("qd"),
+        *[F.col(c).alias(f"d_{c}") for c in keys],
+    )
+    cond = [F.col(f"q_{c}") == F.col(f"d_{c}") for c in keys]
+    pairs = q.join(d, cond).where(F.col("query_id") != F.col("neighbor_id"))
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        (_qdot_exact(F.col("qq"), F.col("qd")).cast("double") / F.lit(q2)).alias(
+            "cosine"
+        ),
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(
+        F.col("rank") <= k
+    )
+
+
+def test_raw_pack_paths_bit_equal_jvm_unit_paths(spark):
+    """The raw float32 packing (in-kernel normalize) of the three
+    packed-block kernels must emit BIT-IDENTICAL rows to the JVM unit
+    path — ``_unit_vectors``' fold normalize, then the SQL quantized
+    integer dot over the same cells — so every score, rank and pair
+    matches including the float bits (the hash-verification
+    contract)."""
+    from pyspark.sql import functions as F
+
+    from spotify_pipeline_gcp_spark.operators.similarity import (
+        _ASSIGN_QSCALE,
+        _qdot_exact,
+        _quantize_vec,
+        _unit_vectors,
         cosine_topk_blas,
         cosine_topk_bucketed_blas,
+        sign_bucket,
         sign_bucket_pairs_blas,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(150)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(150).cache()
+    pts = _unit_vectors(emb, "vec_id", "embedding")
 
-    for quant in (False, True):
-        a = sorted(
-            map(tuple, cosine_topk_blas(emb, k=3, quant=quant, raw=True).collect())
+    a = sorted(map(tuple, cosine_topk_blas(emb, k=3).collect()))
+    b = sorted(
+        map(
+            tuple,
+            _jvm_quant_topk(
+                pts.withColumn("all", F.lit(0)), pts.withColumn("all", F.lit(0)),
+                ["all"], 3,
+            ).collect(),
         )
-        b = sorted(
-            map(tuple, cosine_topk_blas(emb, k=3, quant=quant, raw=False).collect())
-        )
-        assert a == b and len(a) > 0, f"cosine_topk_blas quant={quant}"
+    )
+    assert a == b and len(a) > 0, "cosine_topk_blas"
 
-        a = sorted(
-            map(
-                tuple,
-                cosine_topk_bucketed_blas(
-                    emb, k=3, n_bits=4, quant=quant, raw=True
-                ).collect(),
-            )
+    def bucketed(n_bits):
+        # sign buckets on the RAW embedding, as the operators compute them
+        codes = emb.select(
+            F.col("vec_id").alias("id"),
+            sign_bucket("embedding", n_bits).alias("bucket"),
         )
-        b = sorted(
-            map(
-                tuple,
-                cosine_topk_bucketed_blas(
-                    emb, k=3, n_bits=4, quant=quant, raw=False
-                ).collect(),
-            )
-        )
-        assert a == b and len(a) > 0, f"bucketed_blas quant={quant}"
+        return pts.join(codes, "id")
+
+    cells = bucketed(4)
+    a = sorted(
+        map(tuple, cosine_topk_bucketed_blas(emb, k=3, n_bits=4).collect())
+    )
+    b = sorted(map(tuple, _jvm_quant_topk(cells, cells, ["bucket"], 3).collect()))
+    assert a == b and len(a) > 0, "bucketed_blas"
 
     # threshold -1 keeps EVERY in-bucket pair: the assertion then
     # covers the full quantized score surface, not just high-cosine
     # survivors (random sf0.001 vectors have no 0.45+ neighbors)
+    q2 = float(_ASSIGN_QSCALE) ** 2
+    cells = bucketed(3).select(
+        "id", "bucket", _quantize_vec(F.col("u")).alias("q")
+    )
+    ref = (
+        cells.alias("a")
+        .join(cells.alias("b"), "bucket")
+        .where(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            (_qdot_exact(F.col("a.q"), F.col("b.q")).cast("double") / F.lit(q2)).alias(
+                "cosine_q"
+            ),
+        )
+    )
     a = sorted(
         map(
             tuple,
-            sign_bucket_pairs_blas(emb, threshold=-1.0, n_bits=3, raw=True).collect(),
+            sign_bucket_pairs_blas(emb, threshold=-1.0, n_bits=3).collect(),
         )
     )
-    b = sorted(
-        map(
-            tuple,
-            sign_bucket_pairs_blas(emb, threshold=-1.0, n_bits=3, raw=False).collect(),
-        )
-    )
+    b = sorted(map(tuple, ref.collect()))
     assert a == b and len(a) > 0, "sign_bucket_pairs_blas"
+    emb.unpersist()
 
 
 def test_raw_pack_trained_paths_bit_equal_jvm_unit_paths(spark):
-    """Wave 2: the trained/IMI BLAS operators' raw=True mode (raw
-    float32 through assignment kernel + packing, normalize replayed
-    in-kernel) must emit BIT-IDENTICAL rows to raw=False in the
-    quant (hash-verified) shapes the registered queries use
-    (qs23/qs26/qs28/qs10)."""
+    """The trained/IMI BLAS operators (raw float32 through the
+    assignment kernel + packing, normalize replayed in-kernel) must
+    emit BIT-IDENTICAL rows to the JVM unit path over the SAME model:
+    ``_unit_vectors``, the SQL quantized argmax assignment
+    (``_argmax_assign_quant``; the float fold probe ranks for
+    multiprobe, as the operator ranks them) and the SQL quantized
+    integer dot within each cell — the hash-verified shapes the
+    registered queries use (qs23/qs26/qs28/qs10)."""
+    from pyspark.sql import functions as F
+
     from spotify_pipeline_gcp_spark.operators.similarity import (
+        _argmax_assign_quant,
+        _half_dim,
+        _topn_probe_ranks_halves,
+        _unit_vectors,
         cosine_topk_imi_blas,
         cosine_topk_imi_multiprobe_blas,
         cosine_topk_kmeans_blas,
+        kmeans_centroids,
+        kmeans_centroids_on_halves,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200).cache()
+    pts = _unit_vectors(emb, "vec_id", "embedding")
 
-    for fn, kw in (
-        (
-            cosine_topk_kmeans_blas,
-            dict(k_neighbors=3, n_clusters=4, n_iter=2,
-                 blas_assign=True, quant=True),
+    def check(got, q_side, d_side, keys, name):
+        a = sorted(map(tuple, got.collect()))
+        b = sorted(map(tuple, _jvm_quant_topk(q_side, d_side, keys, 3).collect()))
+        assert a == b and len(a) > 0, name
+
+    cent = kmeans_centroids(emb, "vec_id", "embedding", k=4, n_iter=2)
+    cells = _argmax_assign_quant(pts, cent).withColumnRenamed("cid", "bucket")
+    check(
+        cosine_topk_kmeans_blas(
+            emb, k_neighbors=3, n_clusters=4, blas_assign=True, cent=cent
         ),
-        (
-            cosine_topk_imi_blas,
-            dict(k_neighbors=3, k_each=3, n_iter=2,
-                 blas_assign=True, quant=True),
+        cells, cells, ["bucket"], "cosine_topk_kmeans_blas",
+    )
+
+    h = _half_dim(emb, "embedding")
+    cent1, cent2 = kmeans_centroids_on_halves(pts, h, k=3, n_iter=2)
+    half1 = pts.select("id", F.slice("u", 1, h).alias("u"))
+    half2 = pts.select("id", F.slice("u", h + 1, h).alias("u"))
+    asg1 = _argmax_assign_quant(half1, cent1).select(
+        "id", F.col("cid").alias("cid1")
+    )
+    asg2 = _argmax_assign_quant(half2, cent2).select(
+        "id", F.col("cid").alias("cid2")
+    )
+    cells = pts.join(asg1, "id").join(asg2, "id")
+    check(
+        cosine_topk_imi_blas(emb, k_neighbors=3, cents=(cent1, cent2)),
+        cells, cells, ["cid1", "cid2"], "cosine_topk_imi_blas",
+    )
+
+    probes = _topn_probe_ranks_halves(pts, cent1, cent2, h, 2).join(pts, "id")
+    d_side = probes.select(
+        "id", "u",
+        F.col("t1")[0]["cid"].alias("cid1"),
+        F.col("t2")[0]["cid"].alias("cid2"),
+    )
+    q_side = (
+        probes.select("id", "u", F.explode("t1").alias("p1"), "t2")
+        .select("id", "u", F.col("p1.cid").alias("cid1"), F.explode("t2").alias("p2"))
+        .select("id", "u", "cid1", F.col("p2.cid").alias("cid2"))
+    )
+    check(
+        cosine_topk_imi_multiprobe_blas(
+            emb, k_neighbors=3, nprobe_each=2, cents=(cent1, cent2)
         ),
-        (
-            cosine_topk_imi_multiprobe_blas,
-            dict(k_neighbors=3, k_each=3, n_iter=2, nprobe_each=2,
-                 quant=True),
-        ),
-    ):
-        a = sorted(map(tuple, fn(emb, raw=True, **kw).collect()))
-        b = sorted(map(tuple, fn(emb, raw=False, **kw).collect()))
-        assert a == b and len(a) > 0, fn.__name__
+        q_side, d_side, ["cid1", "cid2"], "cosine_topk_imi_multiprobe_blas",
+    )
+    emb.unpersist()
+
+
+def test_kernel_unit_rows_bit_equal_unit_vectors(spark):
+    """kernels.unit_rows — the normalize every BLAS kernel runs on the
+    raw float32 packing — must reproduce _unit_vectors' JVM fold
+    chain BIT-FOR-BIT (repr of every double), so the kernels' scores
+    are the ones the oracles replay. Covers sf0.001 plus hand-made
+    rows with -0.0, float32-subnormal and large-magnitude
+    components."""
+    import numpy as np
+
+    from spotify_pipeline_gcp_spark.operators import kernels
+    from spotify_pipeline_gcp_spark.operators.similarity import _unit_vectors
+
+    sf_dir = "/root/testdata/sf0.001"
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    sub = float(np.float32(1e-45))  # smallest float32 subnormal
+    big = float(np.finfo(np.float32).max)
+    d = 64
+    hand = [
+        (-1, [-0.0] * (d - 1) + [1.0]),
+        (-2, [sub] * d),
+        (-3, [big] * d),
+        (-4, [big, sub, -0.0, -big] + [0.25] * (d - 4)),
+        (-5, [float(np.float32(3.0e-39)), -1.5e-3] * (d // 2)),
+    ]
+    df = emb.unionByName(spark.createDataFrame(hand, emb.schema))
+
+    jvm = {
+        r["id"]: [repr(x) for x in r["u"]]
+        for r in _unit_vectors(df, "vec_id", "embedding").collect()
+    }
+    rows = df.collect()
+    mat = kernels.unit_rows(kernels.matrix([r["embedding"] for r in rows]))
+    ker = {
+        r["vec_id"]: [repr(x) for x in u]
+        for r, u in zip(rows, mat.tolist())
+    }
+    assert ker == jvm and len(jvm) == emb.count() + len(hand)
 
 
 def test_ivfpq_encode_raw_bit_equal_jvm_unit(spark):
@@ -1456,17 +1576,15 @@ def test_scan_bytes_est_guard_and_block_sizing(spark):
     assert _scan_bytes_est(emb.where(F.col("label") % 2 == 0)) is not None
     assert _scan_bytes_est(emb.groupBy("label").count()) is None
     # block count is a pure execution knob: derived default == any
-    # explicit count, row for row (quant scores are integer-exact, so
-    # even ties rank identically)
+    # explicit count, row for row (scores are integer-exact, so even
+    # ties rank identically)
     small = emb.limit(60)
     want = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk_blas(small, k=3, quant=True).collect()
+        for r in cosine_topk_blas(small, k=3).collect()
     }
     got = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk_blas(
-            small, k=3, quant=True, n_blocks=11
-        ).collect()
+        for r in cosine_topk_blas(small, k=3, n_blocks=11).collect()
     }
     assert want == got

@@ -11,7 +11,6 @@ Variants (composable with '+'):
              to N inside the scope (e.g. few4): keeps the r14 job-count
              win but coalesces the trainer's model-sized reduce stages
   blas1    — OPENBLAS_NUM_THREADS=1 for driver + python workers
-  raw0     — wave-kernel ``raw`` default forced False (r13 packing)
 
 Each invocation runs ONE variant in ONE fresh process:
   python tools/ab_r15.py <variant> <cores> [query ...]
@@ -21,7 +20,6 @@ stdout (single line) and appends to /tmp/ab_r15.json.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import sys
@@ -93,24 +91,6 @@ def _apply_variant(variant: str) -> None:
             S._no_aqe = _few
         elif part == "blas1":
             pass  # handled pre-session in main()
-        elif part == "raw0":
-            for nm in (
-                "cosine_topk_blas",
-                "cosine_topk_bucketed_blas",
-                "sign_bucket_pairs_blas",
-                "cosine_topk_kmeans_blas",
-                "cosine_topk_imi_blas",
-                "cosine_topk_imi_multiprobe_blas",
-                "assign_clusters_quant_blas",
-            ):
-                orig = getattr(S, nm)
-
-                @functools.wraps(orig)
-                def forced(*a, _orig=orig, **kw):
-                    kw["raw"] = False
-                    return _orig(*a, **kw)
-
-                setattr(S, nm, forced)
         else:
             raise SystemExit(f"unknown variant part: {part}")
 
