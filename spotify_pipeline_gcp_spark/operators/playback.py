@@ -9,14 +9,25 @@ IMPROVED and documented.
 Differences from the reference, by design:
 - No Python UDFs: ``complete_year`` / ``json_values_from_key`` are
   native expressions (functions/exprs.py) — plans stay in codegen.
-- ``collect_list`` output is ``array_sort``-ed (IMPROVED): the
-  reference's bagging (``playback_pipeline.py:177-184``) inherits
-  nondeterministic row order; sorting makes output stable across
+- The artist bag is sorted (IMPROVED): the reference's bagging
+  (``playback_pipeline.py:177-184``) inherits nondeterministic
+  ``collect_list`` row order; sorting makes output stable across
   retries/partitionings — required for idempotent re-runs at scale.
 - The artist bag is kept as a typed array-of-struct column and
   projected with higher-order functions; the JSON round-trip
   (``to_json`` then regex, ``playback_pipeline.py:179,186-187``)
-  disappears. ``artist_names``/``artist_ids`` outputs are identical.
+  disappears.
+- The bag is built from the play's DISTINCT items (IMPROVED): each
+  distinct artist list of a (played_at, track id) counts once. The
+  reference bags every exploded artist of every copy of a play, so a
+  play delivered twice (a retried fetch, or a backfill replaying a
+  day) lands with each artist twice (``"Solo Artist, Solo Artist"``).
+  On plays delivered once, ``artist_names``/``artist_ids`` equal the
+  reference's.
+- The fact table is one aggregate, not the reference's two explodes,
+  left join and distinct (``playback_pipeline.py:161-225,278-309``):
+  each play key's distinct tracks and artist bag come out of one
+  ``groupBy``, so the plan has one shuffle before the global sort.
 - No eager ``show()``/``count()`` between transforms (the reference
   re-executes its whole DAG ~7 times, ``playback_pipeline.py:110,130,
   134,189,190,267,313``); callers act once per sink.
@@ -27,171 +38,103 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spotify_pipeline_gcp_spark.functions.exprs import complete_year
-from spotify_pipeline_gcp_spark.schemas import (
-    ALBUMS_COLUMNS,
-    ARTISTS_COLUMNS,
-    PLAYBACK_HIST_COLUMNS,
-)
+from spotify_pipeline_gcp_spark.functions.exprs import complete_year, duration_cols
+from spotify_pipeline_gcp_spark.schemas import PLAYBACK_HIST_COLUMNS
+
+# The artists of the play's distinct artist lists, sorted by (name, id,
+# uri); NULL when the play key has a NULL part, as the reference's key
+# join misses there.
+_ARTIST_BAG = """IF(played_at IS NULL OR track.id IS NULL, NULL, array_sort(flatten(
+    collect_set(transform(track.artists,
+        a -> named_struct('name', a.name, 'id', a.id, 'uri', a.uri))))))"""
 
 
 def explode_items(raw: DataFrame) -> DataFrame:
     """Unnest the ``items`` array to one row per play event.
 
     Ref P1/P2: ``select(explode('items'))`` + ``items.*`` star-expand
-    (``playback_pipeline.py:92,116,162,197``).
+    (``playback_pipeline.py:92,116,162,197``). Columns: ``played_at``,
+    ``track``.
     """
-    return raw.select(F.explode("items").alias("item")).select("item.*")
+    return raw.selectExpr("inline(items)")
 
 
-def parse_albums(raw: DataFrame) -> DataFrame:
+def parse_albums(items: DataFrame) -> DataFrame:
     """Album dimension: 9 columns, distinct.
 
     Ref ``parse_albums`` (``playback_pipeline.py:91-112``): explode ->
     nested projection/rename -> year-padding UDF -> drop_duplicates.
     """
-    items = explode_items(raw)
-    return (
-        items.select(
-            F.col("track.album.album_type").alias("album_type"),
-            F.col("track.album.href").alias("album_href"),
-            F.col("track.album.id").alias("album_id"),
-            F.col("track.album.name").alias("album_name"),
-            complete_year(F.col("track.album.release_date")).alias(
-                "album_release_date"
-            ),
-            F.col("track.album.release_date_precision").alias(
-                "album_release_date_precision"
-            ),
-            F.col("track.album.total_tracks").alias("total_tracks"),
-            F.col("track.album.type").alias("type"),
-            F.col("track.album.uri").alias("album_uri"),
-        )
-        .select(*ALBUMS_COLUMNS)
-        .dropDuplicates()
-    )
+    return items.select(
+        F.expr("track.album.album_type"),
+        F.expr("track.album.href AS album_href"),
+        F.expr("track.album.id AS album_id"),
+        F.expr("track.album.name AS album_name"),
+        complete_year("track.album.release_date").alias("album_release_date"),
+        F.expr("track.album.release_date_precision AS album_release_date_precision"),
+        F.expr("track.album.total_tracks"),
+        F.expr("track.album.type"),
+        F.expr("track.album.uri AS album_uri"),
+    ).dropDuplicates()
 
 
-def parse_artists(raw: DataFrame) -> DataFrame:
+def parse_artists(items: DataFrame) -> DataFrame:
     """Artist dimension: 5 columns, distinct.
 
     Ref ``parse_artists`` (``playback_pipeline.py:115-136``): double
     explode (items, then track.artists), doubly-nested projection
     (``external_urls.spotify``, ``:121``), distinct.
     """
-    items = explode_items(raw)
-    artists = items.select(
-        F.explode("track.artists").alias("artist")
+    return items.selectExpr(
+        """inline(transform(track.artists, a -> named_struct(
+            'artist_spotify_url', a.external_urls.spotify,
+            'artist_href', a.href, 'artist_id', a.id,
+            'artist_name', a.name, 'artist_uri', a.uri)))"""
+    ).dropDuplicates()
+
+
+def build_playback_hist(items: DataFrame) -> DataFrame:
+    """Fact table: one row per distinct track play, 15 columns, sorted.
+
+    Ref ``parse_tracks`` (``playback_pipeline.py:196-225``: flatten
+    track + album, ``round(duration_ms/1000, 2)`` / ``/60000``,
+    year-padding, distinct), ``bag_artists`` (``:161-193``: group the
+    exploded artists by (played_at, track id), comma-join names and
+    ids), their composite-key left join (``:278-287``), the 15-column
+    contract (``:289-307``) and the global sort on ``played_at``
+    (``:310``).
+
+    Here one ``groupBy(played_at, track.id)`` yields both sides: the
+    ``collect_set`` of the play's 13 track columns, exploded back to
+    rows (the distinct tracks), and the sorted bag of the artists in
+    the play's distinct artist lists. ``artist_names``/``artist_ids``
+    are NULL where the reference's left join misses: a NULL
+    ``played_at`` or track id, or a play with no artists.
+    """
+    track = F.struct(
+        F.col("played_at"),
+        F.expr("track.duration_ms"),
+        *duration_cols("track.duration_ms"),
+        F.expr("track.href AS track_href"),
+        F.expr("track.id AS track_id"),
+        F.expr("track.name AS track_name"),
+        F.expr("track.uri AS track_uri"),
+        F.expr("track.popularity"),
+        F.expr("track.album.id AS album_id"),
+        F.expr("track.album.name AS album_name"),
+        complete_year("track.album.release_date").alias("album_release_date"),
+        F.expr("track.album.uri AS album_uri"),
+    )
+    plays = items.groupBy("played_at", F.expr("track.id")).agg(
+        F.collect_set(track).alias("tracks"), F.expr(_ARTIST_BAG).alias("bag")
     )
     return (
-        artists.select(
-            F.col("artist.external_urls.spotify").alias("artist_spotify_url"),
-            F.col("artist.href").alias("artist_href"),
-            F.col("artist.id").alias("artist_id"),
-            F.col("artist.name").alias("artist_name"),
-            F.col("artist.uri").alias("artist_uri"),
+        plays.selectExpr(
+            "inline(tracks)",
+            "IF(size(bag) > 0, array_join(bag.name, ', '), NULL) AS artist_names",
+            "IF(size(bag) > 0, array_join(bag.id, ', '), NULL) AS artist_ids",
         )
-        .select(*ARTISTS_COLUMNS)
-        .dropDuplicates()
-    )
-
-
-def bag_artists(raw: DataFrame) -> DataFrame:
-    """Re-nest each play's artists into sorted CSV name/id/uri strings.
-
-    Ref ``bag_artists`` (``playback_pipeline.py:161-193``): explode
-    artists, group by (played_at, track id), ``to_json(collect_list(
-    struct(...)))``, then regex-extract names/ids back out of the JSON
-    string (``:186-187``). Here the bag stays a typed array; names and
-    ids are projected with ``transform`` + ``array_join``. IMPROVED:
-    the bag is sorted (by artist name, then id) for determinism.
-    """
-    items = explode_items(raw)
-    exploded = items.select(
-        "played_at",
-        F.col("track.id").alias("track_id"),
-        F.explode("track.artists").alias("artist"),
-    )
-    bagged = (
-        exploded.groupBy("played_at", "track_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("artist.name").alias("artist_name"),
-                        F.col("artist.id").alias("artist_id"),
-                        F.col("artist.uri").alias("artist_uri"),
-                    )
-                )
-            ).alias("bagged_artists")
-        )
-    )
-    return bagged.select(
-        "played_at",
-        F.col("track_id").alias("id"),
-        F.array_join(
-            F.transform("bagged_artists", lambda a: a.artist_name), ", "
-        ).alias("artist_names"),
-        F.array_join(
-            F.transform("bagged_artists", lambda a: a.artist_id), ", "
-        ).alias("artist_ids"),
-    )
-
-
-def parse_tracks(raw: DataFrame) -> DataFrame:
-    """Track-play fact precursor: flatten track + album, derive durations.
-
-    Ref ``parse_tracks`` (``playback_pipeline.py:196-225``): explode ->
-    projection -> widen-then-drop album flatten (``:212-218``) ->
-    ``round(duration_ms/1000, 2)`` / ``/60000`` (``:219-220``) ->
-    year-padding -> distinct.
-    """
-    items = explode_items(raw)
-    return (
-        items.select(
-            "played_at",
-            F.col("track.duration_ms").alias("duration_ms"),
-            F.col("track.href").alias("track_href"),
-            F.col("track.id").alias("track_id"),
-            F.col("track.name").alias("track_name"),
-            F.col("track.popularity").alias("popularity"),
-            F.col("track.uri").alias("track_uri"),
-            F.col("track.album.id").alias("album_id"),
-            F.col("track.album.name").alias("album_name"),
-            complete_year(F.col("track.album.release_date")).alias(
-                "album_release_date"
-            ),
-            F.col("track.album.uri").alias("album_uri"),
-        )
-        .withColumn("duration_s", F.round(F.col("duration_ms") / 1000, 2))
-        .withColumn("duration_min", F.round(F.col("duration_ms") / 60000, 2))
-        .dropDuplicates()
-    )
-
-
-def build_playback_hist(tracks: DataFrame, bagged: DataFrame) -> DataFrame:
-    """Fact table: tracks ⟕ bagged artists, 15-column contract, sorted.
-
-    Ref J1 composite-key left join (``playback_pipeline.py:278-287``),
-    final 15-col projection (``:289-307``), distinct (``:309``), global
-    sort on ``played_at`` (``:310``). The bag side is one row per play
-    (≤ the fact side), so it is broadcast — no shuffle of the fact.
-    At warehouse scale the broadcast threshold / AQE makes this call;
-    the hint documents intent for the common small-dim case.
-    """
-    joined = tracks.join(
-        F.broadcast(bagged),
-        on=(tracks.played_at == bagged.played_at)
-        & (tracks.track_id == bagged.id),
-        how="left",
-    ).select(
-        tracks["*"],
-        bagged["artist_names"],
-        bagged["artist_ids"],
-    )
-    return (
-        joined.select(*PLAYBACK_HIST_COLUMNS)
-        .dropDuplicates()
+        .select(*PLAYBACK_HIST_COLUMNS)
         .orderBy("played_at")
     )
 
@@ -200,12 +143,14 @@ def run_clean_zone(raw: DataFrame) -> dict[str, DataFrame]:
     """Full clean-zone job: raw document -> three normalized tables.
 
     Ref ``playback_pipeline.py:258-320`` (one day's landing JSON ->
-    albums/artists/playback_hist CSVs).
+    albums/artists/playback_hist CSVs). ``items`` is exploded once and
+    all three tables are built from that frame.
     """
+    items = explode_items(raw)
     return {
-        "albums": parse_albums(raw),
-        "artists": parse_artists(raw),
-        "playback_hist": build_playback_hist(parse_tracks(raw), bag_artists(raw)),
+        "albums": parse_albums(items),
+        "artists": parse_artists(items),
+        "playback_hist": build_playback_hist(items),
     }
 
 

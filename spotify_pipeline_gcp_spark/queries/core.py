@@ -20,7 +20,7 @@ from spotify_pipeline_gcp_spark.queries.compat import fixed, sql_fixed, table
 
 def _bag_parts(li: DataFrame) -> DataFrame:
     """A1 analog: sorted CSV bag of part keys per order (see
-    operators/playback.py::bag_artists for the nested-source original,
+    operators/playback.py::build_playback_hist for the nested-source original,
     ref ``playback_pipeline.py:161-193``)."""
     return li.groupBy("l_orderkey").agg(
         F.array_join(

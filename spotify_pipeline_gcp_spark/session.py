@@ -52,6 +52,16 @@ def get_spark(
       executor sizing.
     - ``spark.sql.parquet.filterPushdown`` / nested schema pruning:
       scans read only the columns/row-groups a query needs.
+    - ``spark.sql.sources.parallelPartitionDiscovery.threshold`` 1024
+      (Spark's default is 32): a read of up to 1024 root paths (a
+      landing day's glob expands to one path per user document) lists
+      them on the driver instead of as a one-task-per-path Spark job.
+      In a ``local[n]`` session that job runs in the driver's own JVM,
+      so it buys no parallelism: on a 4-core box a 40-file day glob
+      listed in ~30 ms on the driver vs ~360 ms as a job, and a
+      1,000-file backfill glob in ~0.12 s vs ~3.6 s. Past 1024 paths
+      the job is kept, as it overlaps per-path latency when the paths
+      live in a remote object store.
     """
     cpus = cpus or default_parallelism()
     builder = (
@@ -78,6 +88,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "33554432")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.ui.enabled", "false")
         # RocksDB state store: streaming state lives on local disk
         # instead of the executor heap. The default HDFSBacked store

@@ -6,7 +6,9 @@ inference (``playback_pipeline_curated.py:173``), Parquet (``:190``),
 and driver-side object-store listing to discover files
 (``:163-166,181-183``). Here every read takes a declared schema
 (inference is opt-in for exploration only) and file discovery is path
-globs — Spark's distributed listing, not a driver loop. Partition
+globs expanded by Spark's file index, not a hand-written loop over
+object-store listings; ``session.get_spark`` has the index list up to
+1024 globbed paths on the driver rather than in a Spark job. Partition
 pruning comes from layout (``year=/month=/day=``) instead of string
 arithmetic on paths (``main.py:46``).
 """

@@ -31,6 +31,11 @@ def test_backfill_consolidates_days(spark, tmp_path):
     # grain stays (played_at, track_id) across the whole range
     keys = [(r.played_at, r.track_id) for r in hist]
     assert len(keys) == len(set(keys)) == 4
+    # the replayed play, and the play delivered twice within day 1, bag
+    # their artists once (the reference repeats them per copy)
+    for r in hist:
+        if r.track_id in ("t1", "t3"):
+            assert (r.artist_names, r.artist_ids) == ("Solo Artist", "a1")
     # dims deduped across days too
     assert out["albums"].count() == len(
         {r.album_id for r in out["albums"].collect()}

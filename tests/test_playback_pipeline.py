@@ -6,13 +6,15 @@ Each behavior cites the reference it mirrors; deliberate improvements
 
 from __future__ import annotations
 
+import json
+import uuid
+
 from spotify_pipeline_gcp_spark.operators.playback import (
-    bag_artists,
     build_playback_hist,
     curate,
+    explode_items,
     parse_albums,
     parse_artists,
-    parse_tracks,
     run_clean_zone,
 )
 from spotify_pipeline_gcp_spark.schemas import (
@@ -21,10 +23,13 @@ from spotify_pipeline_gcp_spark.schemas import (
     PLAYBACK_HIST_COLUMNS,
     PLAYBACK_DOC,
 )
+from spotify_pipeline_gcp_spark.sinks.writers import write_parquet
+from spotify_pipeline_gcp_spark.sources.readers import read_json
+from tests.conftest import playback_doc
 
 
 def test_parse_albums_contract_and_year_padding(raw_playback):
-    albums = parse_albums(raw_playback)
+    albums = parse_albums(explode_items(raw_playback))
     assert albums.columns == ALBUMS_COLUMNS
     rows = {r.album_id: r for r in albums.collect()}
     # bare year padded to YYYY-12-31 (ref playback_pipeline.py:151-158)
@@ -37,7 +42,7 @@ def test_parse_albums_contract_and_year_padding(raw_playback):
 
 
 def test_parse_artists_distinct_and_nested_url(raw_playback):
-    artists = parse_artists(raw_playback)
+    artists = parse_artists(explode_items(raw_playback))
     assert artists.columns == ARTISTS_COLUMNS
     rows = {r.artist_id: r for r in artists.collect()}
     assert len(rows) == 3  # a1, a2, a3 — deduped across plays
@@ -47,7 +52,8 @@ def test_parse_artists_distinct_and_nested_url(raw_playback):
 
 def test_bag_artists_sorted_csv(raw_playback):
     bags = {
-        (r.played_at, r.id): r for r in bag_artists(raw_playback).collect()
+        (r.played_at, r.track_id): r
+        for r in build_playback_hist(explode_items(raw_playback)).collect()
     }
     duet = bags[("2026-08-12T09:00:00.000Z", "t2")]
     # multi-artist bag joined ", "; sorted by name (deliberate
@@ -56,12 +62,14 @@ def test_bag_artists_sorted_csv(raw_playback):
     assert duet.artist_ids == "a3, a2"
     solo = bags[("2026-08-12T08:00:00.000Z", "t1")]
     assert solo.artist_names == "Solo Artist"
+    # a play delivered twice bags its artists once (IMPROVED: the
+    # reference bags both copies, "Solo Artist, Solo Artist")
+    twice = bags[("2026-08-12T10:00:00.000Z", "t3")]
+    assert (twice.artist_names, twice.artist_ids) == ("Solo Artist", "a1")
 
 
 def test_playback_hist_grain_and_contract(raw_playback):
-    hist = build_playback_hist(
-        parse_tracks(raw_playback), bag_artists(raw_playback)
-    )
+    hist = build_playback_hist(explode_items(raw_playback))
     assert hist.columns == PLAYBACK_HIST_COLUMNS
     rows = hist.collect()
     # duplicate play collapsed (ref :309); same track at a different
@@ -88,9 +96,7 @@ def test_empty_day(spark, empty_playback_json_path):
 
 
 def test_curate_adds_audit_and_date_cast(raw_playback):
-    hist = build_playback_hist(
-        parse_tracks(raw_playback), bag_artists(raw_playback)
-    )
+    hist = build_playback_hist(explode_items(raw_playback))
     curated = curate(hist)
     # audit column first (ref playback_pipeline_curated.py:174-175)
     assert curated.columns[0] == "upload_timestamp"
@@ -100,5 +106,38 @@ def test_curate_adds_audit_and_date_cast(raw_playback):
     padded = next(r for r in curated.collect() if r.track_id == "t1")
     assert str(padded.album_release_date) == "1999-12-31"
     # no-date table: guard stays static (albums has the column; artists not)
-    artists_curated = curate(parse_artists(raw_playback))
+    artists_curated = curate(parse_artists(explode_items(raw_playback)))
     assert artists_curated.columns[0] == "upload_timestamp"
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs ``action()`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_clean_zone_job_counts(spark, raw_playback, tmp_path):
+    # a landing day's glob past Spark's default listing threshold (32
+    # paths) is listed on the driver: the read itself runs no job
+    day = tmp_path / "landing"
+    day.mkdir()
+    for u in range(40):
+        (day / f"user_{u}.json").write_text(json.dumps(playback_doc()))
+    glob = str(day / "user_*.json")
+    assert _jobs_run(spark, lambda: read_json(spark, glob, PLAYBACK_DOC)) == 0
+    # the three clean tables: one shuffle per dimension's distinct, and
+    # the fact's aggregate + range sort (its sample, shuffle and write)
+    tables = run_clean_zone(raw_playback)
+
+    def write_all():
+        for name, df in tables.items():
+            write_parquet(df, str(tmp_path / "clean" / name))
+
+    assert _jobs_run(spark, write_all) <= 8

@@ -182,6 +182,169 @@ def test_cell_means_partition_invariant(spark, rows):
     assert a == b  # exact equality, not approx
 
 
+def _reference_playback_hist(raw):
+    """The fact table built the reference job's way, over the
+    document's distinct items: distinct track rows (``parse_tracks``)
+    left-joined on (played_at, track id) to the sorted bag of exploded
+    artists (``bag_artists``, ``playback_pipeline.py:161-225,278-310``),
+    then distinct and sorted."""
+    from pyspark.sql import functions as F
+
+    from spotify_pipeline_gcp_spark.functions.exprs import complete_year
+    from spotify_pipeline_gcp_spark.schemas import PLAYBACK_HIST_COLUMNS
+
+    items = (
+        raw.select(F.explode("items").alias("item"))
+        .select("item.*")
+        .dropDuplicates()
+    )
+    tracks = (
+        items.select(
+            "played_at",
+            F.col("track.duration_ms").alias("duration_ms"),
+            F.col("track.href").alias("track_href"),
+            F.col("track.id").alias("track_id"),
+            F.col("track.name").alias("track_name"),
+            F.col("track.popularity").alias("popularity"),
+            F.col("track.uri").alias("track_uri"),
+            F.col("track.album.id").alias("album_id"),
+            F.col("track.album.name").alias("album_name"),
+            complete_year(F.col("track.album.release_date")).alias(
+                "album_release_date"
+            ),
+            F.col("track.album.uri").alias("album_uri"),
+        )
+        .withColumn("duration_s", F.round(F.col("duration_ms") / 1000, 2))
+        .withColumn("duration_min", F.round(F.col("duration_ms") / 60000, 2))
+        .dropDuplicates()
+    )
+    bagged = (
+        items.select(
+            "played_at",
+            F.col("track.id").alias("track_id"),
+            F.explode("track.artists").alias("artist"),
+        )
+        .groupBy("played_at", "track_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col("artist.name").alias("artist_name"),
+                        F.col("artist.id").alias("artist_id"),
+                        F.col("artist.uri").alias("artist_uri"),
+                    )
+                )
+            ).alias("b")
+        )
+        .select(
+            "played_at",
+            F.col("track_id").alias("id"),
+            F.array_join(F.transform("b", lambda a: a.artist_name), ", ").alias(
+                "artist_names"
+            ),
+            F.array_join(F.transform("b", lambda a: a.artist_id), ", ").alias(
+                "artist_ids"
+            ),
+        )
+    )
+    joined = tracks.join(
+        bagged,
+        on=(tracks.played_at == bagged.played_at) & (tracks.track_id == bagged.id),
+        how="left",
+    ).select(tracks["*"], bagged["artist_names"], bagged["artist_ids"])
+    return joined.select(*PLAYBACK_HIST_COLUMNS).dropDuplicates().orderBy("played_at")
+
+
+_artist = st.builds(
+    lambda i, name: {
+        "external_urls": {"spotify": f"https://open.example.com/artist/{i}"},
+        "href": f"https://api.example.com/artists/{i}",
+        "id": i,
+        "name": name,
+        "uri": None if i is None else f"spotify:artist:{i}",
+    },
+    st.sampled_from(["a1", "a2", "a3", None]),
+    st.sampled_from(["Solo", 'Smith, John "JJ"', "Band B", None]),
+)
+_artists = st.none() | st.lists(st.none() | _artist, max_size=3)
+
+
+def _track(track_id, artists, release_date, duration_ms):
+    return {
+        "album": {
+            "id": "alb1",
+            "name": "Album One",
+            "release_date": release_date,
+            "release_date_precision": "year"
+            if release_date and len(release_date) == 4
+            else "day",
+            "uri": "spotify:album:alb1",
+        },
+        "artists": artists,
+        "duration_ms": duration_ms,
+        "href": None if track_id is None else f"https://api/tracks/{track_id}",
+        "id": track_id,
+        "name": f"Song {track_id}",
+        "popularity": 50,
+        "uri": None if track_id is None else f"spotify:track:{track_id}",
+    }
+
+
+# one track per id (NULL id included), as the source returns it: a play
+# key (played_at, track id) can only repeat an identical item
+_catalog = st.lists(
+    st.tuples(
+        _artists,
+        st.sampled_from(["1999", "2020-05-17", "2001-03", None]),
+        st.none() | st.integers(0, 500_000),
+    ),
+    min_size=1,
+    max_size=4,
+).map(lambda specs: [_track(i, *s) for i, s in zip(["t1", "t2", "t3", None], specs)])
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    catalog=_catalog,
+    plays=st.lists(
+        st.tuples(
+            st.sampled_from(
+                ["2026-08-12T08:00:00.000Z", "2026-08-12T09:00:00.000Z", None]
+            ),
+            st.integers(0, 3),
+        ),
+        max_size=10,
+    ),
+)
+def test_playback_hist_matches_join_reference(spark, catalog, plays):
+    # the one-aggregate fact equals the tracks ⟕ artist-bag construction
+    # over distinct items on duplicate plays, one track at two times,
+    # NULL/empty artists and NULL artist elements, NULL keys, bare-year
+    # dates and an empty document, and keeps played_at in global order
+    import json
+
+    from spotify_pipeline_gcp_spark.operators.playback import (
+        build_playback_hist,
+        explode_items,
+    )
+    from spotify_pipeline_gcp_spark.schemas import PLAYBACK_DOC
+
+    doc = {
+        "items": [
+            {"played_at": at, "track": catalog[i % len(catalog)]}
+            for at, i in plays
+        ]
+    }
+    raw = spark.read.schema(PLAYBACK_DOC).json(
+        spark.sparkContext.parallelize([json.dumps(doc)])
+    )
+    got = build_playback_hist(explode_items(raw)).collect()
+    want = _reference_playback_hist(raw).collect()
+    assert sorted(map(tuple, got), key=repr) == sorted(map(tuple, want), key=repr)
+    at = [r.played_at for r in got]
+    assert at == sorted(at, key=lambda p: (p is not None, p or ""))
+
+
 def test_qt_all_literal_tolerates_missing_codes(spark):
     # ADVICE r8: a sub-codebook missing a mid-range cid (empty Lloyd
     # cluster) must yield a 0 table slot, not a plan-build KeyError —

@@ -37,9 +37,13 @@ def test_playback_source_declared_schema(spark):
     assert captured["params"] == {"limit": 50, "after": 123}
     # declared nested schema, no inference
     assert df.schema["items"].dataType.typeName() == "array"
-    from spotify_pipeline_gcp_spark.operators.playback import parse_tracks
+    from spotify_pipeline_gcp_spark.operators.playback import (
+        build_playback_hist,
+        explode_items,
+    )
 
-    assert parse_tracks(df).count() == 4  # dup play collapsed
+    # dup play collapsed
+    assert build_playback_hist(explode_items(df)).count() == 4
 
 
 def test_missing_fetcher_is_explicit(spark):
