@@ -185,20 +185,28 @@ _SCAN_CHEAP_NODES = frozenset(
 )
 
 
+def _derived_nodes(plan) -> set[str]:
+    """Node names of an optimized logical ``plan`` (a JVM plan object)
+    outside ``_SCAN_CHEAP_NODES`` — empty exactly when the plan is
+    projections/filters over leaf relations."""
+    import re
+
+    nodes = {
+        m.group(1)
+        for m in re.finditer(
+            r"^[\s:+\-]*'?([A-Za-z][A-Za-z0-9]*)", plan.treeString(), re.M
+        )
+    }
+    return nodes - _SCAN_CHEAP_NODES
+
+
 def _sizing_count(df: DataFrame, op: str) -> int:
     """Row count for slice-bound auto-sizing, GUARDED so it can never
     re-execute a derived plan (r13 verdict item #7): when Catalyst's
     optimized plan contains anything beyond projections/filters over
     leaf relations, the caller must pass ``n_docs`` — any upper bound
     on the row count works, it only sizes the repartition."""
-    import re
-
-    tree = df._jdf.queryExecution().optimizedPlan().treeString()
-    nodes = {
-        m.group(1)
-        for m in re.finditer(r"^[\s:+\-]*'?([A-Za-z][A-Za-z0-9]*)", tree, re.M)
-    }
-    heavy = nodes - _SCAN_CHEAP_NODES
+    heavy = _derived_nodes(df._jdf.queryExecution().optimizedPlan())
     if heavy:
         raise ValueError(
             f"{op}: auto-sizing needs a row count, but the input is a "
@@ -242,7 +250,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | None = None,
-    _shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard.
 
@@ -259,11 +266,11 @@ def ngram_jaccard_pairs(
     key, so the whole operator is ONE exchange-producing subplan (the
     exploded posting list, reused for both join sides) plus the pair
     aggregate — no separate sizes aggregate, no post-join size
-    lookups. With ``max_shingle_df`` (or an injected ``_shingles``
-    table) document frequency is a corpus-wide property, so the
-    row-based shape with its explicit size aggregate is used instead.
+    lookups. With ``max_shingle_df`` document frequency is a
+    corpus-wide property, so the row-based shape with its explicit
+    size aggregate is used instead.
     """
-    if _shingles is None and max_shingle_df is None:
+    if max_shingle_df is None:
         # explode_outer, deliberately: the >= n-token filter already
         # guarantees a non-empty shingle array, and non-outer explode
         # triggers InferFiltersFromGenerate, which inlines the whole
@@ -299,7 +306,7 @@ def ngram_jaccard_pairs(
         return common.select(
             "doc_a", "doc_b", jac.alias("jaccard")
         ).where(F.col("jaccard") >= threshold)
-    # Capped / injected-postings shape: per-doc distinct shingles
+    # Capped shape: per-doc distinct shingles
     # come ROW-LOCALLY from shingle_sets (the corpus-wide
     # dropDuplicates shuffle of 500M string rows went in r10), and
     # ONE explicit hash-repartition on the shingle feeds the
@@ -307,14 +314,11 @@ def ngram_jaccard_pairs(
     # over each task's ~all-distinct shingle stream while fighting
     # the shuffle sorter for execution memory (the r10
     # UNABLE_TO_ACQUIRE_MEMORY failure shape).
-    if _shingles is not None:
-        ex = _shingles.repartition(F.col("shingle"))
-    else:
-        ex = (
-            shingle_sets(df, id_col, text_col, n)
-            .select("doc_id", F.explode_outer("sh").alias("shingle"))
-            .repartition(F.col("shingle"))
-        )
+    ex = (
+        shingle_sets(df, id_col, text_col, n)
+        .select("doc_id", F.explode_outer("sh").alias("shingle"))
+        .repartition(F.col("shingle"))
+    )
     # Group-local pair generation instead of a posting-list self-join
     # (r13): the self-join shape made the capped posting list a
     # MULTI-consumer subplan (hot-shingle count, anti-join, two join
@@ -347,27 +351,26 @@ def ngram_jaccard_pairs(
     id_type = dict(ex.dtypes)["doc_id"]
     w = Window.partitionBy("shingle")
     base = ex.where(F.col("shingle").isNotNull())
-    if max_shingle_df is not None:
-        # Cap BEFORE building any array (r14): the r13 shape
-        # collect_list'ed EVERY group's full inverted list and only
-        # then filtered on size(docs) — for an over-cap boilerplate
-        # shingle shared by m docs that materializes O(m²) transient
-        # bytes in the window's output projection (each of the m rows
-        # copies the m-element array) plus a non-spillable m-element
-        # collect_list buffer in one task — the exact hot-key case the
-        # cap exists to drop, and the case the old anti-join handled
-        # in O(m). A bare count(*) window attaches the group's DF to
-        # each row WITHOUT materializing the list, so over-cap groups
-        # cost O(m) and are gone before the collect_list window below
-        # ever buffers an array (all survivors are ≤ max_df elements).
-        # Both windows partition on the same key, so Catalyst places
-        # the filter between two WindowExec nodes over ONE
-        # exchange+sort (plan-asserted in test_plans).
-        base = (
-            base.withColumn("df", F.count(F.lit(1)).over(w))
-            .where(F.col("df") <= F.lit(max_shingle_df))
-            .drop("df")
-        )
+    # Cap BEFORE building any array (r14): the r13 shape
+    # collect_list'ed EVERY group's full inverted list and only
+    # then filtered on size(docs) — for an over-cap boilerplate
+    # shingle shared by m docs that materializes O(m²) transient
+    # bytes in the window's output projection (each of the m rows
+    # copies the m-element array) plus a non-spillable m-element
+    # collect_list buffer in one task — the exact hot-key case the
+    # cap exists to drop, and the case the old anti-join handled
+    # in O(m). A bare count(*) window attaches the group's DF to
+    # each row WITHOUT materializing the list, so over-cap groups
+    # cost O(m) and are gone before the collect_list window below
+    # ever buffers an array (all survivors are ≤ max_df elements).
+    # Both windows partition on the same key, so Catalyst places
+    # the filter between two WindowExec nodes over ONE
+    # exchange+sort (plan-asserted in test_plans).
+    base = (
+        base.withColumn("df", F.count(F.lit(1)).over(w))
+        .where(F.col("df") <= F.lit(max_shingle_df))
+        .drop("df")
+    )
     aug = base.withColumn("docs", F.collect_list("doc_id").over(w))
     one = aug.where(F.col("doc_id") == F.col("docs")[0])
     pair_rows = F.expr(
@@ -409,35 +412,6 @@ def ngram_jaccard_pairs(
         sized.where(F.col("doc_b").isNotNull())
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
-    )
-
-
-def _minhash_wide(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """(doc_id, m0..m{k-1}): per-doc min of k salted hashes.
-
-    All k hashes are projected as sibling columns of ONE shingle row
-    and reduced by k ``min`` aggregates in ONE groupBy — no seed
-    explode (which would multiply shuffle volume k×) and no second
-    aggregation. The md5 count is identical; the rows moved are not.
-
-    SCALE WARNING (r12): these are ``min(string)`` aggregates over
-    full 32-char digests — no mutable fixed-width buffer, so Spark
-    plans ObjectHashAggregate and falls back to SORT-BASED
-    aggregation at its 128-key threshold, sorting the whole exploded
-    shingle stream per task (the measured 5 M-doc 4 g OOM class).
-    128-bit values don't fit a long, so this family cannot take the
-    hex→long round-trip that fixed ``_minhash_wide_sliced`` — keep
-    this variant for bounded inputs; the sliced family is the
-    at-scale default everywhere in the registry."""
-    hashed = sh.select(
-        "doc_id",
-        *[
-            F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-    )
-    return hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(num_hashes)]
     )
 
 
@@ -495,68 +469,26 @@ def _minhash_wide_sliced(sh: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-# Bounded-inputs-only contract for the ``salted`` hash family: its
-# ``min(string)`` aggregates degrade to SORT-BASED aggregation (the
-# ObjectHashAggregate 128-key fallback), sorting the whole exploded
-# shingle stream per task — the measured 5 M-doc 4 g OOM class. The
-# guard bound is deliberately far below the measured death point.
-_SALTED_MAX_DOCS = 100_000
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     num_hashes: int = 8,
-    _shingles: DataFrame | None = None,
-    hash_family: str = "sliced",
-    salted_max_docs: int = _SALTED_MAX_DOCS,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """MinHash signatures: (doc_id, seed, minhash) — one row per seed.
 
-    Default hash family is the SLICED one (``_minhash_wide_sliced``):
+    The hash family is the SLICED one (``_minhash_wide_sliced``):
     each md5 digest yields four independent 32-bit words, so k hashes
     cost ceil(k/4) md5 calls per shingle instead of k — the dominant
-    CPU term of signature generation. ``hash_family="salted"`` keeps
-    the one-md5-per-hash family (``_minhash_wide``) for callers that
-    want full-width 128-bit min values. Constant output size per
+    CPU term of signature generation. Constant output size per
     document regardless of length: this is what makes near-dup
-    feasible at 100 TB (signatures table is ~k * 8 bytes/doc sliced).
+    feasible at 100 TB (signatures table is ~k * 8 bytes/doc).
     Computed wide (one aggregation) and unpivoted to the tall shape
     AFTER the aggregation, when rows = docs, not docs × shingles.
     """
-    sh = (
-        _shingles
-        if _shingles is not None
-        else shingles(df, id_col, text_col, n, distinct=False)
-    )
-    if hash_family == "sliced":
-        wide = _minhash_wide_sliced(sh, num_hashes)
-    elif hash_family == "salted":
-        # Enforce the documented bounded-inputs-only contract (r13):
-        # the salted family's min(string) aggregates sort-fallback on
-        # large exploded shingle streams (see _SALTED_MAX_DOCS). One
-        # eager count on the input frame is acceptable here precisely
-        # BECAUSE the family is for small corpora; callers holding a
-        # derived frame pass ``n_docs`` so the guard never re-executes
-        # the upstream plan. Raise the bound explicitly if the heap
-        # budget has been verified.
-        n_rows = n_docs if n_docs is not None else df.count()
-        if n_rows > salted_max_docs:
-            raise ValueError(
-                f"hash_family='salted' is bounded-inputs-only: got "
-                f"{n_rows} docs > salted_max_docs={salted_max_docs}. Its "
-                "min(string) aggregates degrade to sort-based aggregation "
-                "(per-task sort of the exploded shingle stream — the "
-                "measured multi-million-doc OOM class). Use the default "
-                "'sliced' family at scale, or raise salted_max_docs after "
-                "verifying the heap budget."
-            )
-        wide = _minhash_wide(sh, num_hashes)
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    sh = shingles(df, id_col, text_col, n, distinct=False)
+    wide = _minhash_wide_sliced(sh, num_hashes)
     stack = ", ".join(f"{i}, m{i}" for i in range(num_hashes))
     return wide.select(
         "doc_id",
@@ -895,7 +827,7 @@ def simhash(
     (which would multiply shuffle rows ``bits``×) and no second
     aggregation; the map-side combine collapses token rows to one row
     per (partition, doc) before the exchange. Same wide-aggregation
-    trick as ``_minhash_wide``. As of r10 the per-bit counters are
+    trick as ``_minhash_wide_sliced``. As of r10 the per-bit counters are
     PACKED 3-per-long into 20-bit lanes: bit j's '1'-count over a
     doc's tokens is non-negative and bounded by the doc's token count
     (< 2^20, guarded by a ``raise_error`` on giant docs), so

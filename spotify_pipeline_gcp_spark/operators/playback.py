@@ -168,18 +168,25 @@ def run_backfill(raw_multi_day: DataFrame) -> dict[str, DataFrame]:
 
 
 def curate(df: DataFrame) -> DataFrame:
-    """Curated-zone transform: audit column first, typed date, distinct.
+    """Curated-zone transform: audit column first, typed date.
 
     Ref ``playback_pipeline_curated.py:174-176,192-198``: add
     ``upload_timestamp = current_timestamp()`` as first column, cast
-    ``album_release_date`` to DATE when present, drop duplicates.
+    ``album_release_date`` to DATE when present.
     The column-presence guard survives because albums/artists lack the
     date column — but here it is a static schema check, not a runtime
     probe of inferred columns.
+
+    Input contract: one clean-zone table, distinct by construction
+    (``parse_albums``/``parse_artists`` end in ``dropDuplicates``;
+    ``build_playback_hist`` is one ``groupBy`` whose tracks come from
+    ``collect_set``). The reference's trailing ``dropDuplicates``
+    guarded its CSV re-reads; here it would be a full-row hash
+    shuffle per day that removes no row, so it is not repeated.
     """
     out = df.select(F.current_timestamp().alias("upload_timestamp"), "*")
     if "album_release_date" in df.columns:
         out = out.withColumn(
             "album_release_date", F.to_date("album_release_date")
         )
-    return out.dropDuplicates()
+    return out

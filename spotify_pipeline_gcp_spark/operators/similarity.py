@@ -15,7 +15,9 @@ path is the drop-in replacement where throughput demands it (see
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -127,25 +129,18 @@ _BLAS_BLOCK_BYTES = 32 << 20
 def _scan_bytes_est(df: DataFrame) -> int | None:
     """Optimizer-estimated input bytes for BLAS block sizing, ONLY
     when the plan is projections/filters over leaf relations (the
-    ``_sizing_count`` guard reused): there the estimate is backed by
-    real file sizes, while derived plans (joins, aggregates,
-    generates) carry estimates wrong by orders of magnitude in either
-    direction — and a wrong block count costs B^2 useless combos or
-    an OOM-sized block. Returns None for derived frames; callers fall
-    back to the cores floor (and can pass the block count
-    explicitly). No job runs: statistics come from the file index."""
-    import re
-
-    from spotify_pipeline_gcp_spark.operators.dedup import _SCAN_CHEAP_NODES
+    ``_derived_nodes`` guard ``_sizing_count`` uses): there the
+    estimate is backed by real file sizes, while derived plans (joins,
+    aggregates, generates) carry estimates wrong by orders of
+    magnitude in either direction — and a wrong block count costs B^2
+    useless combos or an OOM-sized block. Returns None for derived
+    frames; callers fall back to the cores floor (and can pass the
+    block count explicitly). No job runs: statistics come from the
+    file index."""
+    from spotify_pipeline_gcp_spark.operators.dedup import _derived_nodes
 
     plan = df._jdf.queryExecution().optimizedPlan()
-    nodes = {
-        m.group(1)
-        for m in re.finditer(
-            r"^[\s:+\-]*'?([A-Za-z][A-Za-z0-9]*)", plan.treeString(), re.M
-        )
-    }
-    if nodes - _SCAN_CHEAP_NODES:
+    if _derived_nodes(plan):
         return None
     return int(plan.stats().sizeInBytes())
 
@@ -184,6 +179,74 @@ def _cell_combos(asg: DataFrame, keys: list[str], n_sub: int = 1) -> DataFrame:
         )
     packed = asg.groupBy(*keys).agg(F.collect_list(F.struct("id", "v")).alias("items"))
     return packed.select(F.col("items").alias("q_items"), F.col("items").alias("d_items"))
+
+
+def _fold_topk(pts: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank): the exact-fold top-k of an
+    assigned point frame scored against ITSELF — the fold counterpart
+    of ``_cell_combos`` + ``_blas_topk_from_combos``, and the one
+    candidate/score/rank block every fold ANN path runs.
+
+    ``pts`` is (id, u | v + norm, cells…, probe_rank…): ``u`` scores
+    as the fold dot of unit vectors, ``v``/``norm`` as dot / (norm ·
+    norm); columns named ``probe_rank…`` are probe ranks and every
+    other column is a cell key. The self-join pairs points sharing
+    all cells, drops self-pairs and keeps database rows at probe rank
+    1 — inside the join condition, so both sides stay ONE subplan
+    and, behind a caller's cell repartition, ReuseExchange scores the
+    probe table once. ``cosine`` is ``fixed(cosine, 6)``, the value
+    the oracles replay, ranked by (cosine desc, neighbor_id).
+
+    The frame's shape picks the window:
+    - no cells: one ``query_id`` window (exact all-pairs);
+    - cells, one probe: a cell-local (cells…, query_id) window — all
+      of a query's candidates share its cell, so the rank is global,
+      and the join's cell partitioning satisfies the window: the
+      candidate stream is never re-exchanged on query_id and
+      WindowGroupLimit prunes during the local sort (r8);
+    - cells and probe ranks: two-level top-k — the per-(cell, query)
+      top-k with no exchange, then a global re-rank over ≤ nprobe·k
+      rows per query. Each (query, neighbor) pair exists once (the
+      neighbor's single rank-1 cell), so this equals the direct
+      ``query_id`` window."""
+    from pyspark.sql import Window as W
+
+    from spotify_pipeline_gcp_spark.queries.compat import fixed
+
+    ranks = [c for c in pts.columns if c.startswith("probe_rank")]
+    cells = [c for c in pts.columns if c not in ("id", "u", "v", "norm", *ranks)]
+    cond = functools.reduce(
+        operator.and_,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in cells]
+        + [F.col(f"b.{c}") == F.lit(1) for c in ranks]
+        + [F.col("a.id") != F.col("b.id")],
+    )
+    if "u" in pts.columns:
+        cos = _dot_pre(F.col("a.u"), F.col("b.u"))
+    else:
+        cos = _dot_pre(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm"))
+    pairs = pts.alias("a").join(pts.alias("b"), cond).select(
+        *[F.col(f"a.{c}").alias(c) for c in cells],
+        F.col("a.id").alias("query_id"),
+        F.col("b.id").alias("neighbor_id"),
+        fixed(cos, 6).alias("cosine"),
+    )
+    order = (F.col("cosine").desc(), F.col("neighbor_id"))
+    keys = [*cells, "query_id"]
+    if cells and ranks:
+        w_cell = W.partitionBy(*keys).orderBy(*order)
+        pairs = (
+            pairs.withColumn("crank", F.row_number().over(w_cell))
+            .where(F.col("crank") <= k)
+            .drop("crank", *cells)
+        )
+        keys = ["query_id"]
+    w = W.partitionBy(*keys).orderBy(*order)
+    return (
+        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
 
 
 def _raw_points(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -239,30 +302,15 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k nearest neighbors per vector by cosine.
+    """Exact top-k nearest neighbors per vector by cosine (qs2).
 
     Brute force: n² dot products, then a ranking window partitioned
-    by the query id. Correctness baseline for the bucketed variant.
+    by the query id (``_fold_topk`` with no cells); ``cosine`` is the
+    fixed-point score. Correctness baseline for the bucketed variant.
     At scale, broadcast one side in blocks (the classic block-matmul
     layout) or switch to ``cosine_topk_bucketed``.
     """
-    from pyspark.sql import Window as W
-
-    base = _double_base(df, id_col, vec_col)
-    a, b = base.alias("a"), base.alias("b")
-    cos = _dot_pre(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm"))
-    pairs = a.join(b, F.col("a.id") != F.col("b.id")).select(
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+    return _fold_topk(_double_base(df, id_col, vec_col), k)
 
 
 def index_size_for(n_vectors: int, target_cell: int = 256) -> int:
@@ -403,41 +451,14 @@ def cosine_topk_bucketed(
     blocks (equi-join on the code), cutting candidate volume by
     ~2^n_bits for balanced buckets. Recall loss is the standard ANN
     trade; probe more buckets (multi-probe) to recover it. With
-    trained coarse centroids this is exactly IVF-flat.
+    trained coarse centroids this is exactly IVF-flat (qs3). Ranking is
+    cell-local (``_fold_topk``): at the 100× ladder point that saves
+    a query_id exchange of the entire candidate set (~256·n rows).
     """
-    from pyspark.sql import Window as W
-
     base = _double_base(df, id_col, vec_col).withColumn(
         "bucket", sign_bucket("v", n_bits)
     )
-    a, b = base.alias("a"), base.alias("b")
-    cos = _dot_pre(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm"))
-    pairs = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.bucket").alias("bucket"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine"),
-    )
-    # cell-local top-k (the qs19 r8 rewrite's trick): a query's
-    # candidates all live in its own bucket, so ranking within
-    # (bucket, query_id) equals the global per-query rank — and the
-    # equi-join's hash-partitioning on bucket already satisfies the
-    # window's clustering, so the FULL pair stream is never
-    # re-exchanged on query_id; WindowGroupLimit prunes to k during
-    # the local sort. At the 100× ladder point that exchange is the
-    # entire candidate set (~256·n rows) — this removes it.
-    w = W.partitionBy("bucket", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _fold_topk(base, k)
 
 
 def cosine_topk_multiprobe(
@@ -454,12 +475,12 @@ def cosine_topk_multiprobe(
     recall single-probe (qs3) loses, at (n_bits+1)× candidate cost —
     still ~2^n_bits/(n_bits+1) cheaper than brute force. This is the
     standard multi-probe LSH refinement; with trained centroids it is
-    IVF nprobe>1. Probes are generated by exploding XOR-flipped
-    codes, so candidate generation stays a pure equi-join on the
-    probe code — same shuffle shape as qs3, just a wider build side.
+    IVF nprobe>1 (qs5). Probes are generated by exploding XOR-flipped
+    codes into ranked probe rows — rank 1 is the vector's own bucket,
+    the one the database side keeps — so candidate generation stays a
+    pure equi-join on the probe code, ranked by ``_fold_topk``'s
+    two-level top-k.
     """
-    from pyspark.sql import Window as W
-
     base = _double_base(df, id_col, vec_col).withColumn(
         "bucket", sign_bucket("v", n_bits)
     )
@@ -468,26 +489,11 @@ def cosine_topk_multiprobe(
         *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_bits)],
     )
     probes = base.select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.explode(probe_codes).alias("probe"),
-    )
-    b = base.alias("b")
-    cos = _dot_pre(F.col("qv"), F.col("b.v")) / (F.col("qnorm") * F.col("b.norm"))
-    pairs = probes.join(
-        b,
-        (F.col("probe") == F.col("b.bucket"))
-        & (F.col("query_id") != F.col("b.id")),
+        "id", "v", "norm", F.posexplode(probe_codes).alias("pos", "bucket")
     ).select(
-        "query_id", F.col("b.id").alias("neighbor_id"), cos.alias("cosine")
+        "id", "v", "norm", "bucket", (F.col("pos") + 1).alias("probe_rank")
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return pairs.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= k
-    )
+    return _fold_topk(probes, k)
 
 
 def cosine_topk_blas(
@@ -1361,9 +1367,8 @@ def cosine_topk_kmeans(
     fixed sign-hyperplanes on clustered embeddings (recall at equal
     candidate volume); candidate generation stays a pure equi-join on
     the cluster id. Cosine over unit vectors = the fold dot product,
-    so results stay oracle-checkable end-to-end, training included."""
-    from pyspark.sql import Window as W
-
+    so results stay oracle-checkable end-to-end, training included
+    (qs7)."""
     cent = kmeans_centroids(df, id_col, vec_col, k=n_clusters, n_iter=n_iter)
     # hash-repartition by the join key: both self-join sides then
     # demand the SAME exchange, so ReuseExchange computes the
@@ -1371,30 +1376,7 @@ def cosine_topk_kmeans(
     # uses on its posting list) — free at scale, where the equi-join
     # would shuffle on cid anyway
     asg = assign_clusters(df, cent, id_col, vec_col).repartition(F.col("cid"))
-    a, b = asg.alias("a"), asg.alias("b")
-    cos = _dot_pre(F.col("a.u"), F.col("b.u"))
-    pairs = a.join(
-        b,
-        (F.col("a.cid") == F.col("b.cid")) & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid").alias("cid"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine"),
-    )
-    # cell-local top-k: rank within (cid, query_id) equals the global
-    # per-query rank (single-probe — every candidate shares the
-    # query's cell), and the cid partitioning from the join satisfies
-    # the window's clustering, so the n·√n pair stream is never
-    # re-exchanged on query_id; WindowGroupLimit prunes during sort.
-    w = W.partitionBy("cid", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k_neighbors)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _fold_topk(asg, k_neighbors)
 
 
 def cell_fill_report(
@@ -1802,29 +1784,11 @@ def cosine_topk_kmeans_multiprobe(
     ABOVE the exchange. ReuseExchange then computes the n·k scoring
     once and the second side replays the shuffle files — the shuffle
     carries n·nprobe rows instead of n, a small trade for halving
-    the dominant cross-join+fold cost."""
-    from pyspark.sql import Window as W
-
+    the dominant cross-join+fold cost (qs11)."""
     cent = kmeans_centroids(df, id_col, vec_col, k=n_clusters, n_iter=n_iter)
     pts = _unit_vectors(df, id_col, vec_col)
     probes = _topn_probes(pts, cent, nprobe).repartition(F.col("cid"))
-    cos = _dot_pre(F.col("a.u"), F.col("b.u"))
-    pairs = probes.alias("a").join(
-        probes.alias("b"),
-        (F.col("a.cid") == F.col("b.cid"))
-        & (F.col("b.probe_rank") == F.lit(1))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return pairs.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= k_neighbors
-    )
+    return _fold_topk(probes, k_neighbors)
 
 
 def _assign_raw_quant(
@@ -2066,8 +2030,6 @@ def cosine_topk_imi(
     SQL and is hash-verified end to end (qs17). Candidates stay a
     pure equi-join on the two cell ids; ties → lowest cid per level.
     """
-    from pyspark.sql import Window as W
-
     d_half = _half_dim(df, vec_col)
     if k_each is None:
         k_each = imi_cells_for(df.count())
@@ -2076,34 +2038,7 @@ def cosine_topk_imi(
         pts, d_half, k=k_each, n_iter=n_iter
     )
     asg = imi_assign(pts, cent1, cent2, d_half).repartition("cid1", "cid2")
-    a, b = asg.alias("a"), asg.alias("b")
-    cos = _dot_pre(F.col("a.u"), F.col("b.u"))
-    pairs = a.join(
-        b,
-        (F.col("a.cid1") == F.col("b.cid1"))
-        & (F.col("a.cid2") == F.col("b.cid2"))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid1").alias("cid1"),
-        F.col("a.cid2").alias("cid2"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine"),
-    )
-    # cell-local top-k: rank within (cid1, cid2, query_id) equals the
-    # global per-query rank (single probe — all candidates share the
-    # query's product cell), and the join's (cid1, cid2) hash
-    # partitioning satisfies the window's clustering — the ~256·n
-    # candidate stream is never re-exchanged on query_id;
-    # WindowGroupLimit prunes to k during the local sort.
-    w = W.partitionBy("cid1", "cid2", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k_neighbors)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _fold_topk(asg, k_neighbors)
 
 
 def kmeans_centroids_on_halves(

@@ -17,6 +17,10 @@ from spotify_pipeline_gcp_spark.operators.similarity import (
     _ASSIGN_QSCALE,
     _dot_pre,
     _double_base,
+    _fold_topk,
+    cosine_topk,
+    cosine_topk_bucketed,
+    cosine_topk_multiprobe,
     drop_hot_buckets,
     sign_bits_for,
     sign_bucket,
@@ -647,39 +651,12 @@ def qs7_cosine_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed sign-cuts on clustered data at equal candidate volume
     (recall asserted vs qs2 in tests/test_similarity.py); qs8 is the
     BLAS-kernel throughput twin of this same search."""
-    from spotify_pipeline_gcp_spark.operators.similarity import (
-        assign_clusters,
-        kmeans_centroids,
-    )
+    from spotify_pipeline_gcp_spark.operators.similarity import cosine_topk_kmeans
 
     emb = table(spark, sf_dir, "embeddings")
-    cent = kmeans_centroids(emb, "vec_id", "embedding", k=16, n_iter=2)
-    # repartition by the join key so ReuseExchange computes the
-    # assignment subplan once for both self-join sides
-    asg = assign_clusters(emb, cent, "vec_id", "embedding").repartition(
-        F.col("cid")
-    )
-    a, b = asg.alias("a"), asg.alias("b")
-    cos = fixed(_dot_pre(F.col("a.u"), F.col("b.u")), 6)
-    pairs = a.join(
-        b,
-        (F.col("a.cid") == F.col("b.cid")) & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid").alias("cid"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # cell-local top-k (r8): single probe ⇒ (cid, query_id) rank
-    # equals the global rank; no query_id re-exchange of the pairs
-    w = W.partitionBy("cid", "query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cosine_r", "rank")
-    )
+    return cosine_topk_kmeans(
+        emb, k_neighbors=5, n_clusters=16, n_iter=2
+    ).withColumnRenamed("cosine", "cosine_r")
 
 
 @register(
@@ -711,44 +688,13 @@ def qs11_cosine_topk_ivf_kmeans_multiprobe(
     shared cid exchange, so ReuseExchange runs the n·k scoring pass
     once instead of twice."""
     from spotify_pipeline_gcp_spark.operators.similarity import (
-        _topn_probes,
-        _unit_vectors,
-        kmeans_centroids,
+        cosine_topk_kmeans_multiprobe,
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    cent = kmeans_centroids(emb, "vec_id", "embedding", k=16, n_iter=2)
-    pts = _unit_vectors(emb, "vec_id", "embedding")
-    probes = _topn_probes(pts, cent, 2).repartition(F.col("cid"))
-    cos = fixed(_dot_pre(F.col("a.u"), F.col("b.u")), 6)
-    pairs = probes.alias("a").join(
-        probes.alias("b"),
-        (F.col("a.cid") == F.col("b.cid"))
-        & (F.col("b.probe_rank") == F.lit(1))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid").alias("cid"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # two-level top-k (r8, see qs14): per-(cell, query) top-5 with no
-    # exchange, then a global re-rank over ≤ 2·5 rows per query
-    w_cell = W.partitionBy("cid", "query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    pruned = (
-        pairs.withColumn("crank", F.row_number().over(w_cell))
-        .where(F.col("crank") <= 5)
-        .drop("crank", "cid")
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-    )
+    return cosine_topk_kmeans_multiprobe(
+        emb, k_neighbors=5, n_clusters=16, n_iter=2, nprobe=2
+    ).withColumnRenamed("cosine", "cosine_r")
 
 
 @register(
@@ -765,38 +711,6 @@ def qs1_embed_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return with_norm(emb).select(
         "vec_id", "label", fixed(F.col("norm"), 6).alias("norm_r")
-    )
-
-
-def _ranked_pairs(base: DataFrame, same_bucket: bool, k: int) -> DataFrame:
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.id") != F.col("b.id")
-    if same_bucket:
-        cond = cond & (F.col("a.bucket") == F.col("b.bucket"))
-    cos = fixed(
-        _dot_pre(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm")),
-        6,
-    )
-    head = [F.col("a.bucket").alias("bucket")] if same_bucket else []
-    pairs = a.join(b, cond).select(
-        *head,
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # bucketed shape: cell-local ranking (r8) — (bucket, query_id)
-    # rank equals the global rank at one probe, and the bucket
-    # equi-join's partitioning satisfies the window, so the candidate
-    # stream is never re-exchanged on query_id. The exact all-pairs
-    # shape has no key to localize on; it keeps the query_id window.
-    keys = ["bucket", "query_id"] if same_bucket else ["query_id"]
-    w = W.partitionBy(*keys).orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_r", "rank")
     )
 
 
@@ -821,9 +735,7 @@ def qs2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n² dot products + ranking window. The correctness reference for
     the bucketed scale path (qs3)."""
     emb = table(spark, sf_dir, "embeddings")
-    return _ranked_pairs(
-        _double_base(emb, "vec_id", "embedding"), same_bucket=False, k=5
-    )
+    return cosine_topk(emb, k=5).withColumnRenamed("cosine", "cosine_r")
 
 
 @register(
@@ -860,10 +772,9 @@ def qs3_cosine_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     grow candidates n²/16 (measured x43.6 on x10 data). qs13 is this
     exact query with bits sized from the corpus count."""
     emb = table(spark, sf_dir, "embeddings")
-    base = _double_base(emb, "vec_id", "embedding").withColumn(
-        "bucket", sign_bucket("v", 4)
+    return cosine_topk_bucketed(emb, k=5, n_bits=4).withColumnRenamed(
+        "cosine", "cosine_r"
     )
-    return _ranked_pairs(base, same_bucket=True, k=5)
 
 
 @register(
@@ -898,49 +809,11 @@ def qs5_cosine_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape): each query also probes the n_bits buckets one sign-flip
     away, recovering boundary-loss recall at (n_bits+1)x candidate
     cost — the IVF nprobe>1 pattern. Candidate generation remains an
-    equi-join on the probe code."""
+    equi-join on the probe code, ranked two-level (per-(probe, query)
+    top-5, then a global re-rank over ≤ 5·5 rows per query)."""
     emb = table(spark, sf_dir, "embeddings")
-    base = _double_base(emb, "vec_id", "embedding").withColumn(
-        "bucket", sign_bucket("v", 4)
-    )
-    probe_codes = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(4)],
-    )
-    probes = base.select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.explode(probe_codes).alias("probe"),
-    )
-    b = base.alias("b")
-    cos = fixed(
-        _dot_pre(F.col("qv"), F.col("b.v")) / (F.col("qnorm") * F.col("b.norm")), 6
-    )
-    pairs = probes.join(
-        b,
-        (F.col("probe") == F.col("b.bucket")) & (F.col("query_id") != F.col("b.id")),
-    ).select(
-        "probe", "query_id", F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # two-level top-k (r8, see qs14): per-(probe, query) top-5 with
-    # no exchange beyond the probe equi-join, then a global re-rank
-    # over ≤ 5·5 rows per query (each neighbor pairs once — its one
-    # bucket matches at most one of the query's 5 distinct probes)
-    w_cell = W.partitionBy("probe", "query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    pairs = (
-        pairs.withColumn("crank", F.row_number().over(w_cell))
-        .where(F.col("crank") <= 5)
-        .drop("crank", "probe")
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return pairs.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= 5
+    return cosine_topk_multiprobe(emb, k=5, n_bits=4).withColumnRenamed(
+        "cosine", "cosine_r"
     )
 
 
@@ -1153,7 +1026,7 @@ def qs9_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket", sign_bucket("v", n_bits)
         )
     )
-    return _ranked_pairs(base, same_bucket=True, k=3)
+    return _fold_topk(base, 3).withColumnRenamed("cosine", "cosine_r")
 
 
 @register(
@@ -1366,8 +1239,6 @@ def qs13_cosine_topk_bucketed_sized(spark: SparkSession, sf_dir: str) -> DataFra
     scale, so oracle rows are unchanged where the driver checks them;
     queries inside a dropped mega-bucket return no neighbors (the
     qd3b/qd9b posting-cap recall trade)."""
-    from spotify_pipeline_gcp_spark.operators.similarity import sign_bits_for
-
     emb = table(spark, sf_dir, "embeddings")
     n_bits = sign_bits_for(emb.count())
     base = drop_hot_buckets(
@@ -1375,7 +1246,7 @@ def qs13_cosine_topk_bucketed_sized(spark: SparkSession, sf_dir: str) -> DataFra
             "bucket", sign_bucket("v", n_bits)
         )
     )
-    return _ranked_pairs(base, same_bucket=True, k=5)
+    return _fold_topk(base, 5).withColumnRenamed("cosine", "cosine_r")
 
 
 @register(
@@ -1515,45 +1386,9 @@ def qs14_cosine_topk_ivf_kmeans_sized(
     )
     pts = _unit_vectors(emb, "vec_id", "embedding")
     probes = _topn_probes(pts, cent, 2).repartition(F.col("cid"))
-    a, b = probes.alias("a"), probes.alias("b")
-    cos = fixed(_dot_pre(F.col("a.u"), F.col("b.u")), 6)
-    pairs = a.join(
-        b,
-        (F.col("a.cid") == F.col("b.cid"))
-        & (F.col("b.probe_rank") == F.lit(1))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid").alias("cid"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # TWO-LEVEL top-k (r8): with nprobe=2 a query's candidates span
-    # two cells, so a single cell-local window can't rank globally —
-    # instead prune to the per-(cell, query) top-5 first (no
-    # exchange: the cid join partitioning satisfies the window, and
-    # WindowGroupLimit cuts the n·√n·2 pair stream to ≤ 2·5 rows per
-    # query during the local sort), then re-rank that tiny stream
-    # globally per query. Each (query, neighbor) pair exists once
-    # (the neighbor's single rank-1 cell), and the global top-5 is a
-    # subset of the per-cell top-5s, so the result is identical to
-    # the direct query_id window — only the exchange shrinks from
-    # the full candidate stream to ≤ 10 rows per query.
-    w_cell = W.partitionBy("cid", "query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    pruned = (
-        pairs.withColumn("crank", F.row_number().over(w_cell))
-        .where(F.col("crank") <= 5)
-        .drop("crank", "cid")
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-    )
+    # two-level top-k: the n·√n·2 pair stream is cut to ≤ 2·5 rows
+    # per query before the one query_id exchange
+    return _fold_topk(probes, 5).withColumnRenamed("cosine", "cosine_r")
 
 
 def _pq_sub_chain(
@@ -2172,32 +2007,7 @@ def qs17_cosine_topk_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg = imi_assign(
         pts, cent1, cent2, 32, work_rows=n * 2 * k_each
     ).repartition("cid1", "cid2")
-    a, b = asg.alias("a"), asg.alias("b")
-    cos = fixed(_dot_pre(F.col("a.u"), F.col("b.u")), 6)
-    pairs = a.join(
-        b,
-        (F.col("a.cid1") == F.col("b.cid1"))
-        & (F.col("a.cid2") == F.col("b.cid2"))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid1").alias("cid1"),
-        F.col("a.cid2").alias("cid2"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # cell-local top-k (r8): single probe ⇒ all of a query's
-    # candidates share its product cell; the (cid1, cid2) join
-    # partitioning satisfies the window, so the ~256·n candidate
-    # stream is never re-exchanged on query_id
-    w = W.partitionBy("cid1", "cid2", "query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cosine_r", "rank")
-    )
+    return _fold_topk(asg, 5).withColumnRenamed("cosine", "cosine_r")
 
 
 @register(
@@ -2352,29 +2162,7 @@ def qs16_cosine_topk_ivf_sample_trained(
     asg = assign_clusters(emb, cent, "vec_id", "embedding").repartition(
         F.col("cid")
     )
-    a, b = asg.alias("a"), asg.alias("b")
-    cos = fixed(_dot_pre(F.col("a.u"), F.col("b.u")), 6)
-    pairs = a.join(
-        b,
-        (F.col("a.cid") == F.col("b.cid")) & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid").alias("cid"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # cell-local top-k (r8): single probe ⇒ a query's candidates all
-    # share its cell, so (cid, query_id) ranking equals the global
-    # rank and the cid exchange from the join already satisfies the
-    # window — the n·√n pair stream is never re-shuffled on query_id
-    w = W.partitionBy("cid", "query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cosine_r", "rank")
-    )
+    return _fold_topk(asg, 5).withColumnRenamed("cosine", "cosine_r")
 
 
 from spotify_pipeline_gcp_spark.queries.compat import (  # noqa: E402
@@ -3607,55 +3395,25 @@ def qs24_cosine_topk_imi_multiprobe(
     p1 = _topn_probes(
         pts.select("id", F.slice("u", 1, h).alias("u")), cent1, 2
     ).select(
-        "id", F.col("cid").alias("cid1"), F.col("probe_rank").alias("pr1")
+        "id",
+        F.col("cid").alias("cid1"),
+        F.col("probe_rank").alias("probe_rank1"),
     )
     p2 = _topn_probes(
         pts.select("id", F.slice("u", h + 1, h).alias("u")), cent2, 2
     ).select(
-        "id", F.col("cid").alias("cid2"), F.col("probe_rank").alias("pr2")
+        "id",
+        F.col("cid").alias("cid2"),
+        F.col("probe_rank").alias("probe_rank2"),
     )
     prb = (
         pts.join(p1, "id")
         .join(p2, "id")
         .repartition(F.col("cid1"), F.col("cid2"))
     )
-    a, b = prb.alias("a"), prb.alias("b")
-    cos = fixed(_dot_pre(F.col("a.u"), F.col("b.u")), 6)
-    pairs = a.join(
-        b,
-        (F.col("a.cid1") == F.col("b.cid1"))
-        & (F.col("a.cid2") == F.col("b.cid2"))
-        & (F.col("b.pr1") == F.lit(1))
-        & (F.col("b.pr2") == F.lit(1))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.col("a.cid1").alias("cid1"),
-        F.col("a.cid2").alias("cid2"),
-        F.col("a.id").alias("query_id"),
-        F.col("b.id").alias("neighbor_id"),
-        cos.alias("cosine_r"),
-    )
-    # two-level top-k (r8, see qs14): the 2×2 product probes span 4
-    # cells per query — prune to the per-(product-cell, query) top-5
-    # with no exchange (the (cid1, cid2) join partitioning satisfies
-    # the window), then re-rank ≤ 4·5 rows per query globally. Each
-    # (query, neighbor) pair exists once: the neighbor's single
-    # rank-(1,1) cell matches at most one of the query's probes.
-    w_cell = W.partitionBy("cid1", "cid2", "query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    pruned = (
-        pairs.withColumn("crank", F.row_number().over(w_cell))
-        .where(F.col("crank") <= 5)
-        .drop("crank", "cid1", "cid2")
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("neighbor_id")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-    )
+    # two-level top-k over the 2×2 product probes: ≤ 4·5 rows per
+    # query reach the global re-rank
+    return _fold_topk(prb, 5).withColumnRenamed("cosine", "cosine_r")
 
 
 def _imi_adc_oracle(d: int, m: int, k_pq: int, n_iter: int, topk: int) -> str:

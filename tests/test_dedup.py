@@ -129,34 +129,6 @@ def test_capped_jaccard_string_ids(spark):
     ]
 
 
-def test_minhash_salted_bounded_inputs_guard(spark):
-    """The ``salted`` hash family is bounded-inputs-only (its
-    min(string) aggregates sort-fallback on large exploded shingle
-    streams); the guard must refuse oversized corpora loudly instead
-    of letting the hazard be reached by accident, while small frames
-    and an explicitly raised bound still work."""
-    import pytest
-
-    docs = _docs(spark)
-    # small frame, default bound: works and agrees with itself
-    sigs = minhash_signatures(
-        docs, "doc_id", "text", num_hashes=4, hash_family="salted"
-    )
-    assert sigs.count() == 4 * len(DOCS)
-    # same frame over a tiny explicit bound: refused
-    with pytest.raises(ValueError, match="bounded-inputs-only"):
-        minhash_signatures(
-            docs, "doc_id", "text", num_hashes=4,
-            hash_family="salted", salted_max_docs=2,
-        ).count()
-    # raising the bound back re-admits the same call
-    ok = minhash_signatures(
-        docs, "doc_id", "text", num_hashes=4,
-        hash_family="salted", salted_max_docs=10,
-    )
-    assert ok.count() == 4 * len(DOCS)
-
-
 def test_minhash_lsh_row_count_hint_same_pairs(spark):
     """``n_docs`` skips the eager probe without changing results."""
     base = {

@@ -17,6 +17,7 @@ from spotify_pipeline_gcp_spark.operators.playback import (
     parse_artists,
     run_clean_zone,
 )
+from spotify_pipeline_gcp_spark.plans.inspect import exchange_count
 from spotify_pipeline_gcp_spark.schemas import (
     ALBUMS_COLUMNS,
     ARTISTS_COLUMNS,
@@ -108,6 +109,10 @@ def test_curate_adds_audit_and_date_cast(raw_playback):
     # no-date table: guard stays static (albums has the column; artists not)
     artists_curated = curate(parse_artists(explode_items(raw_playback)))
     assert artists_curated.columns[0] == "upload_timestamp"
+    # the input is distinct by construction: curate adds no shuffle
+    # and drops no row
+    assert exchange_count(curate(hist)) == exchange_count(hist)
+    assert curate(hist).count() == hist.count()
 
 
 def _jobs_run(spark, action) -> int:

@@ -345,6 +345,88 @@ def test_playback_hist_matches_join_reference(spark, catalog, plays):
     assert at == sorted(at, key=lambda p: (p is not None, p or ""))
 
 
+def _fold_topk_reference(vecs, cells, probes, k, unit):
+    """(query_id, neighbor_id, cosine, rank) rows by the fold contract,
+    in pure Python: left-fold dots, ``math.sqrt`` norms, the
+    ``floor(x*1e6+0.5)/1e6`` score, then (-score, neighbor_id) order
+    over the candidates whose rank-1 cell is one the query probes."""
+    import math
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    norm = {i: math.sqrt(dot(v, v)) for i, v in vecs.items()}
+
+    def score(i, j):
+        if unit:
+            c = dot([x / norm[i] for x in vecs[i]], [x / norm[j] for x in vecs[j]])
+        else:
+            c = dot(vecs[i], vecs[j]) / (norm[i] * norm[j])
+        return math.floor(c * 1e6 + 0.5) / 1e6
+
+    rows = set()
+    for i in vecs:
+        probed = None if cells is None else {cells[i], *probes.get(i, ())}
+        cand = sorted(
+            ((-score(i, j), j) for j in vecs
+             if j != i and (probed is None or cells[j] in probed)),
+        )
+        for r, (neg, j) in enumerate(cand[:k], start=1):
+            rows.add((i, j, -neg, r))
+    return rows
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    points=st.lists(
+        st.tuples(
+            st.lists(st.integers(-2, 2), min_size=4, max_size=4).filter(any),
+            st.integers(0, 2),
+            st.integers(1, 2),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    shape=st.sampled_from(["all-pairs", "one probe", "two probes"]),
+    unit=st.booleans(),
+    k=st.integers(1, 4),
+)
+def test_fold_topk_matches_python_reference(spark, points, shape, unit, k):
+    # _fold_topk, the one fold ANN ranking block, against a pure-Python
+    # replay of its contract. Small integer components make exact
+    # duplicates and k-boundary score ties common; the input's shape
+    # (no cells / cells / cells + probe ranks) picks the window.
+    from spotify_pipeline_gcp_spark.operators.similarity import (
+        _double_base,
+        _fold_topk,
+        _unit_vectors,
+    )
+
+    vecs = {i: [float(x) for x in v] for i, (v, _, _) in enumerate(points)}
+    emb = spark.createDataFrame(
+        list(vecs.items()), "vec_id long, embedding array<float>"
+    )
+    pts = (_unit_vectors if unit else _double_base)(emb, "vec_id", "embedding")
+    cells, probes = None, {}
+    if shape != "all-pairs":
+        cells = {i: c for i, (_, c, _) in enumerate(points)}
+        if shape == "two probes":
+            # the second probe is always another cell than the query's own
+            probes = {i: [(c + d) % 3] for i, (_, c, d) in enumerate(points)}
+        ranked = [(i, c, 1) for i, c in cells.items()] + [
+            (i, p, 2) for i, ps in probes.items() for p in ps
+        ]
+        assign = spark.createDataFrame(ranked, "id long, cell long, probe_rank long")
+        pts = pts.join(assign, "id")
+        if shape == "one probe":
+            pts = pts.drop("probe_rank")
+    got = {tuple(r) for r in _fold_topk(pts, k).collect()}
+    assert got == _fold_topk_reference(vecs, cells, probes, k, unit)
+
+
 def test_qt_all_literal_tolerates_missing_codes(spark):
     # ADVICE r8: a sub-codebook missing a mid-range cid (empty Lloyd
     # cluster) must yield a 0 table slot, not a plan-build KeyError —

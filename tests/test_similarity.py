@@ -445,11 +445,11 @@ def test_sized_bucketed_matches_manual_bits(spark):
     # qs13's auto-sized plan must equal qs3's shape run with the SAME
     # bit count computed by hand — the sizing is the only difference
     from spotify_pipeline_gcp_spark.operators.similarity import (
+        _fold_topk,
         sign_bits_for,
     )
     from spotify_pipeline_gcp_spark.queries.similarity import (
         _double_base,
-        _ranked_pairs,
         sign_bucket,
     )
     from spotify_pipeline_gcp_spark.queries.compat import table
@@ -462,7 +462,7 @@ def test_sized_bucketed_matches_manual_bits(spark):
     )
     manual = {
         (r.query_id, r.neighbor_id, r.rank)
-        for r in _ranked_pairs(base, same_bucket=True, k=5).collect()
+        for r in _fold_topk(base, 5).collect()
     }
     from spotify_pipeline_gcp_spark.queries.similarity import (
         qs13_cosine_topk_bucketed_sized,
