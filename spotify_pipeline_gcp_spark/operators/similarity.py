@@ -16,8 +16,16 @@ path is the drop-in replacement where throughput demands it (see
 from __future__ import annotations
 
 import functools
+import glob
+import hashlib
+import json
 import math
 import operator
+import os
+import shutil
+import tempfile
+import time
+import uuid
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1435,18 +1443,8 @@ def write_index_manifest(
     threshold without touching the corpus. FAISS deployments persist
     exactly this state between add-without-train loops; a 100 TB
     maintainer then pays O(|delta|·k) per batch instead of the ×149
-    corpus recount the self-contained qs22 query measures.
-
-    The write stages everything into a uuid-suffixed tmp directory
-    that renames into place, so a reader never sees a HALF-WRITTEN
-    manifest and a concurrent builder loses only its redundant copy.
-    Replacing a stale manifest is two renames (old aside, new in) —
-    POSIX rename cannot replace a non-empty directory, so a reader
-    racing exactly between them can see the path MISSING for a
-    moment (never partial); ``read_index_manifest`` absorbs that
-    transient with one retry. The aside-dir is deleted only AFTER
-    the new manifest is live, so mid-read file handles on the old
-    generation stay valid through the swap on POSIX semantics.
+    corpus recount the self-contained qs22 query measures. The
+    staged write and atomic swap are ``_write_store``'s.
 
     Worker-side dependency: the corpus assignment routes through
     ``assign_clusters_quant_blas`` (``mapInPandas`` dgemm — bit-exact
@@ -1455,13 +1453,6 @@ def write_index_manifest(
     ships this package. Callers with delta-sized corpora that must
     stay pure-JVM can assign via ``assign_clusters_quant`` and write
     the same layout."""
-    import json
-    import os
-    import shutil
-    import uuid
-
-    from spotify_pipeline_gcp_spark.pyfiles import ensure_package_on_workers
-
     # the ONE n·k pass in the manifest lifecycle — at 2 M × √n cells
     # the interpreted fold form is the >600 s build wall
     # (SCALE_BENCH_r10's qst7 timeout); quantized-exact dgemm scores
@@ -1477,52 +1468,94 @@ def write_index_manifest(
     cells = asg.groupBy("cid").agg(
         F.count(F.lit(1)).cast("long").alias("n_indexed")
     )
-    token = uuid.uuid4().hex[:12]
-    tmp = f"{path}.tmp.{token}"
-    centroids.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-    cells.write.mode("overwrite").parquet(os.path.join(tmp, "cells"))
-    with open(os.path.join(tmp, "meta.json"), "w") as fh:
-        json.dump(meta or {}, fh)
-    old = None
-    if os.path.isdir(path):
-        # replacing a STALE manifest: move it aside — but keep it on
-        # disk until the replacement is live (see docstring)
-        old = f"{path}.old.{token}"
-        try:
-            os.rename(path, old)
-        except OSError:
-            old = None
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # lost a build race: a complete manifest is already in place
-        shutil.rmtree(tmp, ignore_errors=True)
-    if old is not None:
-        shutil.rmtree(old, ignore_errors=True)
+    _write_store(path, {"centroids": centroids, "cells": cells}, meta or {})
 
 
 def read_index_manifest(spark, path: str):
     """(centroids_df, cells_df, meta_dict) from a
-    ``write_index_manifest`` directory. One retry absorbs the
-    transient between a concurrent replacer's two renames (the path
-    can be briefly MISSING mid-swap — never half-written; see the
-    writer's docstring)."""
-    import json
-    import os
-    import time
+    ``write_index_manifest`` directory; the meta read absorbs a
+    concurrent replacer's swap (``_read_store_meta``)."""
+    meta = _read_store_meta(path)
+    cent, cells = (
+        spark.read.parquet(os.path.join(path, part))
+        for part in ("centroids", "cells")
+    )
+    return cent, cells, meta
 
-    def _read():
-        cent = spark.read.parquet(os.path.join(path, "centroids"))
-        cells = spark.read.parquet(os.path.join(path, "cells"))
-        with open(os.path.join(path, "meta.json")) as fh:
-            meta = json.load(fh)
-        return cent, cells, meta
 
+def _store_dir(sf_dir: str, name: str) -> str:
+    """``<root>/<name>_<md5(abspath(sf_dir))[:16]>``: the deterministic
+    per-corpus location of a persisted serving store, which lets a
+    later process (a bench's timed reps after its warm-up, a deployed
+    maintainer) REUSE the one-time build. The root is
+    ``SPARK_GRAFT_MANIFEST_DIR``, default
+    ``$TMPDIR/spark_graft_manifests``; a deployment pins it to durable
+    storage. ``name`` carries the layout version, so a layout change
+    is a new name, never a misread store."""
+    root = os.environ.get("SPARK_GRAFT_MANIFEST_DIR") or os.path.join(
+        tempfile.gettempdir(), "spark_graft_manifests"
+    )
+    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
+    return os.path.join(root, f"{name}_{key}")
+
+
+def _read_store_meta(path: str) -> dict | None:
+    """The ``meta.json`` of a ``_write_store`` directory, or None when
+    there is none. A store that is missing while a ``<path>.old.*``
+    sibling exists is a concurrent replacer between its two renames
+    (see ``_write_store``): one retry absorbs that transient, and a
+    store that was never built costs no wait."""
+    for retry in (False, True):
+        try:
+            with open(os.path.join(path, "meta.json")) as fh:
+                return json.load(fh)
+        except OSError:
+            if retry or not glob.glob(glob.escape(path) + ".old.*"):
+                return None
+            time.sleep(0.2)
+
+
+def _write_store(path: str, frames: dict[str, DataFrame], meta: dict) -> None:
+    """The one staged write + atomic swap of every persisted store
+    (index manifest, PQ and IVFPQ serving stores, trained models):
+    each named frame lands as parquet ``path/<name>`` and ``meta``
+    as ``path/meta.json``.
+
+    Everything is staged into a uuid-suffixed ``<path>.tmp.<token>``
+    that renames into place, so a reader never sees a HALF-WRITTEN
+    store and a concurrent builder loses only its redundant copy. A
+    write that raises (a failed part, a dead executor, the lazy build
+    itself) removes the staging dir and re-raises, leaving the
+    previous generation in place. Replacing a stale store is two
+    renames (old aside, new in) — POSIX rename cannot replace a
+    non-empty directory, so a reader racing exactly between them can
+    see the path MISSING for a moment (never partial);
+    ``_read_store_meta`` absorbs that transient with one retry. The
+    aside-dir is deleted only AFTER the new store is live, so
+    mid-read file handles on the old generation stay valid through
+    the swap on POSIX semantics."""
+    token = uuid.uuid4().hex[:12]
+    tmp = f"{path}.tmp.{token}"
     try:
-        return _read()
-    except Exception:
-        time.sleep(0.2)
-        return _read()
+        for name, frame in frames.items():
+            frame.write.mode("overwrite").parquet(os.path.join(tmp, name))
+        with open(os.path.join(tmp, "meta.json"), "w") as fh:
+            json.dump(meta, fh)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    old = f"{path}.old.{token}"
+    try:
+        os.rename(path, old)
+    except OSError:
+        old = None  # first build: nothing to move aside
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        # lost a build race: a complete store is already in place
+        shutil.rmtree(tmp, ignore_errors=True)
+    if old is not None:
+        shutil.rmtree(old, ignore_errors=True)
 
 
 def maintain_index(

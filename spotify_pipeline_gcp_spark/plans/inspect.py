@@ -16,11 +16,19 @@ from contextlib import redirect_stdout
 from pyspark.sql import DataFrame
 
 
-def formatted_plan(df: DataFrame) -> str:
+def _explain(df: DataFrame) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain(mode="formatted")
     return buf.getvalue()
+
+
+def formatted_plan(df: DataFrame) -> str:
+    """The formatted physical plan as first planned. Explained on a
+    fresh projection of ``df``: once ``df`` itself has run an action,
+    its adaptive plan prints both the final and the initial plan, and
+    every parser below would count each operator twice."""
+    return _explain(df.select("*"))
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
@@ -57,5 +65,7 @@ def exchange_count(df: DataFrame) -> int:
 
 def codegen_spans(df: DataFrame) -> int:
     """WholeStageCodegen regions — wider is better (fewer interpreted
-    boundaries)."""
-    return len(set(re.findall(r"codegen id : (\d+)", formatted_plan(df))))
+    boundaries). Read from ``df``'s own plan: adaptive execution
+    assigns codegen ids only when the frame runs, so this is 0 until
+    ``df`` has run an action."""
+    return len(set(re.findall(r"codegen id : (\d+)", _explain(df))))

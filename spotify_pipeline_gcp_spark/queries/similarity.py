@@ -9,6 +9,10 @@ so the top-k cut is engine-independent.
 
 from __future__ import annotations
 
+import hashlib
+import os
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -18,6 +22,9 @@ from spotify_pipeline_gcp_spark.operators.similarity import (
     _dot_pre,
     _double_base,
     _fold_topk,
+    _read_store_meta,
+    _store_dir,
+    _write_store,
     cosine_topk,
     cosine_topk_bucketed,
     cosine_topk_multiprobe,
@@ -113,6 +120,13 @@ def _train_frac(n: int, k: int, per_centroid: int = 32) -> float:
 _MODEL_MEMO: dict[tuple, object] = {}
 
 
+# The per-corpus serving stores' on-disk names (``_store_dir``); each
+# name carries its layout version.
+_manifest_dir = partial(_store_dir, name="ivfm_v3")
+_pq_store_dir = partial(_store_dir, name="pqstore_v1")
+_ivfpq_store_dir = partial(_store_dir, name="ivfpqstore_v4")
+
+
 def _content_probe(df: DataFrame) -> dict:
     """Content-sensitive staleness fingerprint shared by every
     persisted model/manifest/store (qs22b's discipline): count +
@@ -154,10 +168,8 @@ def _memo_model(spark: SparkSession, key: tuple, build, src: DataFrame | None = 
     table the trainer samples from) when provided; parquet round-trips
     the float64 centroid/codebook entries exactly (the read_pq_store
     precedent, hash-verified by qst8), so stored-model serving is
-    bit-identical to in-line training. Writes stage into a uuid tmp
-    dir and rename in (the write_index_manifest discipline)."""
-    import os
-
+    bit-identical to in-line training. The write is the one persisted
+    store path, ``operators/similarity.py::_write_store``."""
     store = os.environ.get("SPARK_GRAFT_MODEL_STORE")
     if store:
         return _store_model(spark, store, key, build, src)
@@ -167,85 +179,43 @@ def _memo_model(spark: SparkSession, key: tuple, build, src: DataFrame | None = 
     return _MODEL_MEMO[full]
 
 
-def _reassemble(spark: SparkSession, path: str, meta: dict):
-    import os
-
-    frames = [
-        spark.read.parquet(os.path.join(path, f"part{i}"))
-        for i in range(int(meta["n_parts"]))
-    ]
-    kind = meta["kind"]
-    if kind == "single":
-        return frames[0]
-    return tuple(frames) if kind == "tuple" else frames
-
-
 def _store_model(
     spark: SparkSession, store: str, key: tuple, build, src: DataFrame | None
 ):
-    import hashlib
-    import json
-    import os
-    import shutil
-    import uuid
-
     path = os.path.join(
         store, "model_" + hashlib.md5(repr(key).encode()).hexdigest()[:16]
     )
     fingerprint = _content_probe(src) if src is not None else None
-    meta = None
-    if os.path.isdir(path):
-        try:
-            with open(os.path.join(path, "meta.json")) as fh:
-                meta = json.load(fh)
-        except OSError:
-            meta = None
-    if meta and meta.get("key") == repr(key) and (
-        fingerprint is None or meta.get("fingerprint") == fingerprint
+    meta = _read_store_meta(path) or {}
+    if meta.get("key") != repr(key) or (
+        fingerprint is not None and meta.get("fingerprint") != fingerprint
     ):
-        return _reassemble(spark, path, meta)
-    val = build()
-    frames = list(val) if isinstance(val, (list, tuple)) else [val]
-    token = uuid.uuid4().hex[:12]
-    tmp = f"{path}.tmp.{token}"
-    for i, frame in enumerate(frames):
+        val = build()
+        frames = list(val) if isinstance(val, (list, tuple)) else [val]
+        meta = {
+            "key": repr(key),
+            "n_parts": len(frames),
+            "kind": (
+                "list"
+                if isinstance(val, list)
+                else "tuple" if isinstance(val, tuple) else "single"
+            ),
+            "fingerprint": fingerprint,
+        }
         # literal model frames are O(k*d) — one file keeps the
         # round-trip row order deterministic
-        frame.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, f"part{i}")
+        _write_store(
+            path, {f"part{i}": f.coalesce(1) for i, f in enumerate(frames)}, meta
         )
-    with open(os.path.join(tmp, "meta.json"), "w") as fh:
-        json.dump(
-            {
-                "key": repr(key),
-                "n_parts": len(frames),
-                "kind": (
-                    "list"
-                    if isinstance(val, list)
-                    else "tuple" if isinstance(val, tuple) else "single"
-                ),
-                "fingerprint": fingerprint,
-            },
-            fh,
-        )
-    old = None
-    if os.path.isdir(path):
-        old = f"{path}.old.{token}"
-        try:
-            os.rename(path, old)
-        except OSError:
-            old = None
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    if old is not None:
-        shutil.rmtree(old, ignore_errors=True)
     # serve THIS call from the persisted frames too, so first-call and
     # recurring-call values share one code path (and one row order)
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    return _reassemble(spark, path, meta)
+    frames = [
+        spark.read.parquet(os.path.join(path, f"part{i}"))
+        for i in range(int(meta["n_parts"]))
+    ]
+    if meta["kind"] == "single":
+        return frames[0]
+    return tuple(frames) if meta["kind"] == "tuple" else frames
 
 
 def _ivf_kmeans_oracle(
@@ -1688,26 +1658,12 @@ def _ivfpq_model(spark, sf_dir: str, emb: DataFrame, n: int, k: int):
     return cent, books
 
 
-def _ivfpq_store_dir(sf_dir: str) -> str:
-    """Deterministic per-sf_dir IVFPQ serving-store location
-    (env-overridable via SPARK_GRAFT_MANIFEST_DIR): coarse centroids +
-    PQ codebooks + the ASSIGNED-AND-ENCODED corpus (id, cell, codes),
-    persisted once at build — the full FAISS IVFADC index on disk."""
-    import hashlib
-    import os
-    import tempfile
-
-    root = os.environ.get("SPARK_GRAFT_MANIFEST_DIR") or os.path.join(
-        tempfile.gettempdir(), "spark_graft_manifests"
-    )
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    return os.path.join(root, f"ivfpqstore_v4_{key}")
-
-
 def ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     """Build-if-stale guard for the composed IVF+PQ SERVING store
-    (qs19b): the 'ivfpq:' model qs19/qs27 train (same memoized
-    literals), the corpus assignment, and the PQ codes all persist —
+    (qs19b): coarse centroids + PQ codebooks + the ASSIGNED-AND-ENCODED
+    corpus (id, cell, codes) — the full FAISS IVFADC index on disk.
+    The 'ivfpq:' model is the one qs19/qs27 train (same memoized
+    literals), and the corpus assignment and PQ codes persist too —
     so serving pays only the cell join + ADC + top-k, and the n·k
     assignment runs ONCE, at build, at dgemm throughput — fused with
     the PQ encode into a single corpus pass
@@ -1718,13 +1674,9 @@ def ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     is QUANTIZED-EXACT (integer dots below 2^53 — dgemm order cannot
     shift them, see ``_ASSIGN_QSCALE``), so unlike the raw-float BLAS
     twins this build is HASH-VERIFIED: qs19b's oracle replays the
-    quantized assignment. Staleness fingerprint, staged write, and
-    atomic rename follow ensure_pq_store."""
-    import json
-    import os
-    import shutil
-    import uuid
-
+    quantized assignment. The staleness fingerprint is
+    ``_content_probe`` over the full table; the staged write and
+    atomic swap are ``operators/similarity.py::_write_store``'s."""
     from spotify_pipeline_gcp_spark.operators.similarity import (
         _tagged_books,
         ivfpq_assign_encode_quant_blas,
@@ -1736,20 +1688,11 @@ def ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     emb = table(spark, sf_dir, "embeddings")
     path = _ivfpq_store_dir(sf_dir)
     fingerprint = _content_probe(emb)
-    meta = None
-    if os.path.isdir(path):
-        try:
-            with open(os.path.join(path, "meta.json")) as fh:
-                meta = json.load(fh)
-        except OSError:
-            meta = None
-    if not meta or meta.get("fingerprint") != fingerprint:
+    if (_read_store_meta(path) or {}).get("fingerprint") != fingerprint:
         ensure_package_on_workers(spark)
         n = fingerprint["n"]
         k = trained_cells_for(n)
         cent, books = _ivfpq_model(spark, sf_dir, emb, n, k)
-        token = uuid.uuid4().hex[:12]
-        tmp = f"{path}.tmp.{token}"
         # the entire corpus side — cell assignment AND all m code
         # selections — is ONE fused dgemm pass writing (id, cid,
         # codes) straight to the staging dir (FAISS's index.add()
@@ -1771,58 +1714,33 @@ def ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
             u_col="embedding",
             raw=True,
         )
-        cent.write.mode("overwrite").parquet(os.path.join(tmp, "cents"))
-        _tagged_books(books).select(
-            F.col("q").alias("s"), "cid", "c"
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "books"))
-        assigned.write.mode("overwrite").parquet(
-            os.path.join(tmp, "assigned")
+        _write_store(
+            path,
+            {
+                "cents": cent,
+                "books": _tagged_books(books).select(
+                    F.col("q").alias("s"), "cid", "c"
+                ),
+                "assigned": assigned,
+            },
+            {"m": m, "d_sub": d_sub, "k": k, "fingerprint": fingerprint},
         )
-        with open(os.path.join(tmp, "meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "m": m,
-                    "d_sub": d_sub,
-                    "k": k,
-                    "fingerprint": fingerprint,
-                },
-                fh,
-            )
-        old = None
-        if os.path.isdir(path):
-            old = f"{path}.old.{token}"
-            try:
-                os.rename(path, old)
-            except OSError:
-                old = None
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
     return path
 
 
-def read_ivfpq_store(spark: SparkSession, path: str):
-    """(books: list[DataFrame], assigned: DataFrame, meta) from an
-    ``ensure_ivfpq_store`` directory. Parquet round-trips the float64
-    codebook entries and int64 cells/codes exactly, so ADC scores
-    from the store are bit-identical to the build-time values.
-
-    Like ``read_pq_store`` (r14): the codebooks are model state and
-    come back as LOCAL frames — one scan+collect here instead of a
-    per-consumer parquet scan + filter + sort job each time they are
-    collected into literal tables. ``assigned`` (the corpus) stays a
-    distributed scan."""
-    import json
-    import os
-
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    tagged = spark.read.parquet(os.path.join(path, "books"))
-    brows = tagged.select("s", "cid", "c").collect()
-    books = [
+def _local_books(spark: SparkSession, path: str, m: int) -> list[DataFrame]:
+    """The m PQ sub-codebooks of a store's ``books`` part (s, cid, c)
+    as LOCAL frames (r14): codebooks are O(m·k_pq·d_sub) model state
+    that consumers collect into literal lookup tables — qst8 once per
+    MICRO-BATCH — and a local frame makes that a no-job
+    LocalTableScan instead of a parquet scan + filter + sort job every
+    time. One scan+collect here, float64 round-trip exact."""
+    brows = (
+        spark.read.parquet(os.path.join(path, "books"))
+        .select("s", "cid", "c")
+        .collect()
+    )
+    return [
         spark.createDataFrame(
             sorted(
                 ((int(r["cid"]), list(r["c"])) for r in brows
@@ -1830,10 +1748,20 @@ def read_ivfpq_store(spark: SparkSession, path: str):
             ),
             "cid long, c array<double>",
         )
-        for s in range(int(meta["m"]))
+        for s in range(m)
     ]
+
+
+def read_ivfpq_store(spark: SparkSession, path: str):
+    """(books: list[DataFrame], assigned: DataFrame, meta) from an
+    ``ensure_ivfpq_store`` directory. Parquet round-trips the float64
+    codebook entries and int64 cells/codes exactly, so ADC scores
+    from the store are bit-identical to the build-time values. The
+    codebooks come back as local frames (``_local_books``);
+    ``assigned`` (the corpus) stays a distributed scan."""
+    meta = _read_store_meta(path)
     assigned = spark.read.parquet(os.path.join(path, "assigned"))
-    return books, assigned, meta
+    return _local_books(spark, path, int(meta["m"])), assigned, meta
 
 
 @register(
@@ -3015,25 +2943,6 @@ def qs22_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cell_fill_report(cent, n_old, n_new, expected)
 
 
-def _manifest_dir(sf_dir: str) -> str:
-    """Deterministic per-sf_dir manifest location (env-overridable) —
-    what lets the registered manifest query REUSE the build across
-    processes, so a bench's warmup pays the one-time build and the
-    timed reps measure the recurring path, exactly the cost split a
-    deployed maintainer sees."""
-    import hashlib
-    import os
-    import tempfile
-
-    root = os.environ.get("SPARK_GRAFT_MANIFEST_DIR") or os.path.join(
-        tempfile.gettempdir(), "spark_graft_manifests"
-    )
-    key = hashlib.md5(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:16]
-    return os.path.join(root, f"ivfm_v3_{key}")
-
-
 @register("qs22b_ann_index_maintenance_manifest", oracle=_maint_oracle())
 def qs22b_ann_index_maintenance_manifest(
     spark: SparkSession, sf_dir: str
@@ -3075,20 +2984,18 @@ def ensure_ivfm_manifest(spark: SparkSession, sf_dir: str) -> str:
     qs22b (batch maintenance) and qst7 (streaming maintenance): a
     cheap staleness probe decides whether the stored manifest still
     describes this sf_dir's corpus; on mismatch the sample trainer
-    re-runs and the manifest atomically replaces. Returns the
+    re-runs and ``write_index_manifest`` replaces the manifest
+    through ``operators/similarity.py::_write_store``. Returns the
     manifest path.
 
-    The fingerprint is CONTENT-sensitive, not just shape-sensitive
-    (r9, ADVICE): count + vec_id checksum alone would silently reuse
-    a stale manifest after the corpus is REGENERATED with the same
-    ids 0..n-1 but different vectors or label slicing (e.g. new
-    testdata recipe at the same path) — so it also folds in a
-    quantized sum of each vector's first component and the label
-    sum. Still three cheap column aggregates over two columns; no
-    n·k recount, nothing vector-width shuffled."""
-    import json
-    import os
-
+    The fingerprint (``_content_probe``) is CONTENT-sensitive, not
+    just shape-sensitive (r9, ADVICE): count + vec_id checksum alone
+    would silently reuse a stale manifest after the corpus is
+    REGENERATED with the same ids 0..n-1 but different vectors or
+    label slicing (e.g. new testdata recipe at the same path) — so it
+    also folds in a quantized sum of each vector's first component
+    and the label sum. Still cheap column aggregates over three
+    columns; no n·k recount, nothing vector-width shuffled."""
     from spotify_pipeline_gcp_spark.operators.similarity import (
         kmeans_centroids_quant,
         trained_cells_for,
@@ -3099,17 +3006,8 @@ def ensure_ivfm_manifest(spark: SparkSession, sf_dir: str) -> str:
     emb = table(spark, sf_dir, "embeddings")
     corpus = emb.where(F.col("label") % 10 != 0)
     path = _manifest_dir(sf_dir)
-
     fingerprint = _content_probe(corpus)
-
-    meta = None
-    if os.path.isdir(path):
-        try:
-            with open(os.path.join(path, "meta.json")) as fh:
-                meta = json.load(fh)
-        except OSError:
-            meta = None
-    if not meta or meta.get("fingerprint") != fingerprint:
+    if (_read_store_meta(path) or {}).get("fingerprint") != fingerprint:
         ensure_package_on_workers(spark)
         n = fingerprint["n"]
         k = trained_cells_for(n)
@@ -3131,40 +3029,18 @@ def ensure_ivfm_manifest(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-def _pq_store_dir(sf_dir: str) -> str:
-    """Deterministic per-sf_dir PQ serving-store location
-    (env-overridable via SPARK_GRAFT_MANIFEST_DIR) — the compressed
-    index a serving fleet queries: trained codebooks + the encoded
-    corpus, persisted once at build."""
-    import hashlib
-    import os
-    import tempfile
-
-    root = os.environ.get("SPARK_GRAFT_MANIFEST_DIR") or os.path.join(
-        tempfile.gettempdir(), "spark_graft_manifests"
-    )
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    return os.path.join(root, f"pqstore_v1_{key}")
-
-
 def ensure_pq_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-stale guard for the PQ SERVING store used by qst8:
+    """Build-if-stale guard for the PQ SERVING store used by qst8 —
+    the compressed index a serving fleet queries:
     qs18's trained sub-codebooks ('pqtr:' constant digest sample,
     identical trainer → identical literals, shared through
     ``_memo_model``) plus the PQ-ENCODED corpus (m small ints per
     vector — the representation a 100 TB index keeps in memory),
     persisted as ``path/books`` (s, cid, c), ``path/codes``
     (id, codes) and ``path/meta.json``. The staleness fingerprint is
-    content-sensitive (count + id checksum + quantized first-component
-    sum + label sum over the FULL table — training samples from all
-    rows, the corpus slice is label-derived). The write is staged in
-    a uuid tmp dir and renamed in, the ``write_index_manifest``
-    discipline."""
-    import json
-    import os
-    import shutil
-    import uuid
-
+    ``_content_probe`` over the FULL table (training samples from all
+    rows, the corpus slice is label-derived); the staged write and
+    atomic swap are ``operators/similarity.py::_write_store``'s."""
     from spotify_pipeline_gcp_spark.operators.similarity import (
         _tagged_books,
         _unit_vectors,
@@ -3176,14 +3052,7 @@ def ensure_pq_store(spark: SparkSession, sf_dir: str) -> str:
     emb = table(spark, sf_dir, "embeddings")
     path = _pq_store_dir(sf_dir)
     fingerprint = _content_probe(emb)
-    meta = None
-    if os.path.isdir(path):
-        try:
-            with open(os.path.join(path, "meta.json")) as fh:
-                meta = json.load(fh)
-        except OSError:
-            meta = None
-    if not meta or meta.get("fingerprint") != fingerprint:
+    if (_read_store_meta(path) or {}).get("fingerprint") != fingerprint:
         n = fingerprint["n"]
         strain = _unit_vectors(
             _digest_sample(emb, "pqtr:", _train_frac(n, k_pq)),
@@ -3200,35 +3069,16 @@ def ensure_pq_store(spark: SparkSession, sf_dir: str) -> str:
             emb.where(F.col("label") % 10 != 0), "vec_id", "embedding"
         )
         codes = pq_encode(cpts, books, m=m, d_sub=d_sub, work_rows=n * m * k_pq)
-        token = uuid.uuid4().hex[:12]
-        tmp = f"{path}.tmp.{token}"
-        _tagged_books(books).select(
-            F.col("q").alias("s"), "cid", "c"
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "books"))
-        codes.write.mode("overwrite").parquet(os.path.join(tmp, "codes"))
-        with open(os.path.join(tmp, "meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "m": m,
-                    "d_sub": d_sub,
-                    "k_pq": k_pq,
-                    "fingerprint": fingerprint,
-                },
-                fh,
-            )
-        old = None
-        if os.path.isdir(path):
-            old = f"{path}.old.{token}"
-            try:
-                os.rename(path, old)
-            except OSError:
-                old = None
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
+        _write_store(
+            path,
+            {
+                "books": _tagged_books(books).select(
+                    F.col("q").alias("s"), "cid", "c"
+                ),
+                "codes": codes,
+            },
+            {"m": m, "d_sub": d_sub, "k_pq": k_pq, "fingerprint": fingerprint},
+        )
     return path
 
 
@@ -3236,35 +3086,14 @@ def read_pq_store(spark: SparkSession, path: str):
     """(books: list[DataFrame], codes: DataFrame, meta) from an
     ``ensure_pq_store`` directory. Parquet round-trips the float64
     codebook entries and int64 codes exactly, so ADC scores computed
-    from the store are bit-identical to in-line training.
-
-    The codebooks are O(m·k_pq·d_sub) MODEL state, so they come back
-    as LOCAL frames (one scan+collect here, r14): consumers collect
-    them into literal lookup tables — qst8 once per MICRO-BATCH — and
-    a local frame makes that a no-job LocalTableScan instead of a
-    parquet scan + filter + sort job every time. ``codes`` (the
-    corpus) stays a distributed scan, as it must."""
-    import json
-    import os
-
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    tagged = spark.read.parquet(os.path.join(path, "books"))
-    brows = tagged.select("s", "cid", "c").collect()
-    books = [
-        spark.createDataFrame(
-            sorted(
-                ((int(r["cid"]), list(r["c"])) for r in brows
-                 if int(r["s"]) == s)
-            ),
-            "cid long, c array<double>",
-        )
-        for s in range(int(meta["m"]))
-    ]
+    from the store are bit-identical to in-line training. The
+    codebooks come back as local frames (``_local_books``); ``codes``
+    (the corpus) stays a distributed scan, as it must."""
+    meta = _read_store_meta(path)
     codes = spark.read.parquet(os.path.join(path, "codes")).select(
         "id", "codes"
     )
-    return books, codes, meta
+    return _local_books(spark, path, int(meta["m"])), codes, meta
 
 
 @register(

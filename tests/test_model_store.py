@@ -12,7 +12,9 @@ instead of retraining. These tests pin the contract:
 - corpus-content change at the same path invalidates the store
   (the qs22b fingerprint discipline — count+ids alone would reuse a
   stale model after regeneration);
-- tuple-valued models (the IMI half-quantizer pair) round-trip.
+- tuple-valued models (the IMI half-quantizer pair) round-trip;
+- a rebuild whose write fails leaves no staging dir behind and the
+  previous generation serving.
 """
 
 from __future__ import annotations
@@ -116,6 +118,47 @@ def test_content_change_invalidates_store(spark, model_store, tmp_path):
     v2 = spark.read.parquet(data_dir)
     _memo_model(spark, key, build(v2), src=v2)
     assert calls["n"] == 2, "content change must invalidate the store"
+
+
+def test_failed_rebuild_keeps_previous_generation(spark, model_store, tmp_path):
+    from spotify_pipeline_gcp_spark.operators.similarity import (
+        kmeans_centroids,
+    )
+    from spotify_pipeline_gcp_spark.queries.similarity import _memo_model
+
+    data_dir = str(tmp_path / "corpus")
+    _emb(spark).limit(64).write.mode("overwrite").parquet(data_dir)
+    v1 = spark.read.parquet(data_dir)
+    key = ("test-cent-fail", data_dir, 2, 1)
+    good = _memo_model(
+        spark,
+        key,
+        lambda: kmeans_centroids(v1, "vec_id", "embedding", k=2, n_iter=1),
+        src=v1,
+    )
+    want = sorted(map(str, good.collect()))
+
+    # a different src fingerprint forces a rebuild whose part write
+    # raises inside the staged write
+    v2 = v1.where(F.col("vec_id") % 2 == 0)
+    with pytest.raises(Exception, match="injected build failure"):
+        _memo_model(
+            spark,
+            key,
+            lambda: spark.range(1).select(
+                F.raise_error(F.lit("injected build failure")).alias("cid")
+            ),
+            src=v2,
+        )
+    assert not [
+        d for d in os.listdir(model_store) if ".tmp." in d
+    ], os.listdir(model_store)
+
+    def must_not_build():
+        raise AssertionError("the first generation must still serve")
+
+    kept = _memo_model(spark, key, must_not_build, src=v1)
+    assert sorted(map(str, kept.collect())) == want
 
 
 def test_tuple_model_roundtrip(spark, model_store):

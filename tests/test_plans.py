@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spotify_pipeline_gcp_spark.plans.inspect import (
+    codegen_spans,
     exchange_count,
     join_strategies,
     pushed_filters,
@@ -18,6 +19,28 @@ SF = "/root/testdata/sf0.01"
 
 def _q(spark, name):
     return load_all()[name].fn(spark, SF)
+
+
+def test_plan_helpers_unchanged_by_an_action(spark):
+    # after an action the frame's adaptive plan prints the final AND
+    # the initial plan; every helper must still read one plan, so a
+    # plan-shape assert means the same on a frame that already ran
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").where(
+        F.col("l_quantity") > 10
+    )
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    df = (
+        li.groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").alias("qty"))
+        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+    )
+    helpers = (exchange_count, join_strategies, pushed_filters, read_schemas)
+    before = [h(df) for h in helpers]
+    df.collect()
+    assert [h(df) for h in helpers] == before
+    assert before[0] == 1 and before[1] and before[2], before
+    # codegen regions exist only in the executed plan
+    assert codegen_spans(df) > 0
 
 
 def test_filter_pushdown_reaches_scan(spark):
