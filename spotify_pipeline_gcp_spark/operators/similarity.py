@@ -43,8 +43,8 @@ from spotify_pipeline_gcp_spark.pyfiles import ensure_package_on_workers
 # sample-sized frames need, and the driver's r14 bench regressed the
 # whole family 21-41% (qs8 0.59x, qs10 0.72x, qs7 0.74x, qs11 0.79x)
 # on a box ~20% FASTER than r13's. The r15 same-box isolation A/B
-# (tools/ab_r15.py, sf0.1, warmup + min-of-3, fresh session per
-# variant) confirmed AQE-on wins at 32 cores and costs nothing at 8:
+# (OPTIMIZATION_r15.md section 1, sf0.1, warmup + min-of-3, fresh
+# session per variant) confirmed AQE-on wins at 32 cores and costs nothing at 8:
 #   32c total: _no_aqe 25.24 s | AQE on 21.09 s | _no_aqe+parts=4 22.03 s
 #     (qs7 4.05->3.07, qs8 3.28->2.29, qs10 2.97->2.50, qs11 5.63->4.00)
 #   8c total:  _no_aqe 25.54 s | AQE on 25.62 s (noise-level)
