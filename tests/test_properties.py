@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from spotify_pipeline_gcp_spark.sinks.landing import landing_path
@@ -425,6 +426,113 @@ def test_fold_topk_matches_python_reference(spark, points, shape, unit, k):
             pts = pts.drop("probe_rank")
     got = {tuple(r) for r in _fold_topk(pts, k).collect()}
     assert got == _fold_topk_reference(vecs, cells, probes, k, unit)
+
+
+def _lloyd_reference(vecs, k, n_iter, m, d_sub, spherical, quant):
+    """Per-slice sorted (cid, c) lists by the Lloyd contract, in pure
+    Python: seeds ranked by (md5(str(id)), id), left-fold dots from
+    0.0 (or exact 2^20-quantized integer dots), argmax with ties to the
+    lowest cid, means as ``sum(floor(x*1e9 + 0.5)) / (1e9*n)``, then a
+    sqrt renorm (spherical) or none (L2, scored ``dot - 0.5*|c|^2``).
+    A centroid that wins no point drops out; a zero-norm spherical
+    mean raises ZeroDivisionError."""
+    import hashlib
+    import math
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def qdot(a, b):
+        def q(v):
+            return [math.floor(x * 2**20 + 0.5) for x in v]
+
+        return sum(x * y for x, y in zip(q(a), q(b)))
+
+    def score(u, c):
+        if quant:
+            return qdot(u, c)
+        return dot(u, c) if spherical else dot(u, c) - 0.5 * dot(c, c)
+
+    def cut(v, s):
+        return v if d_sub is None else v[s * d_sub : (s + 1) * d_sub]
+
+    rank = sorted(vecs, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+    books = [{cid: cut(vecs[i], s) for cid, i in enumerate(rank[:k])} for s in range(m)]
+    for _ in range(n_iter):
+        for s, model in enumerate(books):
+            cells = {}
+            for v in vecs.values():
+                u = cut(v, s)
+                best = max(model, key=lambda cid: (score(u, model[cid]), -cid))
+                cells.setdefault(best, []).append(u)
+            books[s] = {}
+            for cid, members in cells.items():
+                n = len(members)
+                mv = [
+                    sum(math.floor(x * 1e9 + 0.5) for x in col) / (1e9 * n)
+                    for col in zip(*members)
+                ]
+                if spherical:
+                    norm = math.sqrt(dot(mv, mv))
+                    mv = [x / norm for x in mv]
+                books[s][cid] = mv
+    return [sorted(b.items()) for b in books]
+
+
+# trainer call, m, d_sub, spherical, quant — over 4-d points
+_LLOYD_PATHS = {
+    "spherical": (lambda S, p, k, n: [S.kmeans_centroids_on(p, k, n)], 1, None, True, False),
+    "quantized": (lambda S, p, k, n: [S.kmeans_centroids_quant_on(p, k, n)], 1, None, True, True),
+    "halves": (lambda S, p, k, n: S.kmeans_centroids_on_halves(p, 2, k, n), 2, 2, True, False),
+    "pq m=2": (lambda S, p, k, n: S.pq_codebooks(p, 2, 2, k, n), 2, 2, False, False),
+    "pq m=3": (lambda S, p, k, n: S.pq_codebooks(p, 3, 1, k, n), 3, 1, False, False),
+}
+
+
+def _each_lloyd_path(test):
+    # one explicit example per trainer: two duplicated points, so a
+    # duplicate seed wins no point and drops out, and k > n
+    ties = [[1.0, 0.0, 0.5, 0.0], [0.0, 1.0, 0.0, 0.5]]
+    for path in _LLOYD_PATHS:
+        test = example(path=path, points=ties, dup=2, k=5, n_iter=2)(test)
+    return test
+
+
+@settings(max_examples=4, deadline=None)
+@given(
+    path=st.sampled_from(sorted(_LLOYD_PATHS)),
+    points=st.lists(
+        st.lists(
+            st.sampled_from([-1.0, -0.5, 0.0, 0.3, 0.5, 1.0]), min_size=4, max_size=4
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+    dup=st.integers(0, 3),
+    k=st.integers(1, 7),
+    n_iter=st.integers(1, 2),
+)
+@_each_lloyd_path
+def test_lloyd_matches_python_reference(spark, path, points, dup, k, n_iter):
+    # every trainer routed through _lloyd against a pure-Python replay
+    # of its contract, compared repr for repr; ``dup`` repeats the first
+    # points (exact ties). A zero-norm spherical mean must abort.
+    from spotify_pipeline_gcp_spark.operators import similarity as S
+
+    train, m, d_sub, spherical, quant = _LLOYD_PATHS[path]
+    vecs = dict(enumerate(points + points[:dup]))
+    pts = spark.createDataFrame(list(vecs.items()), "id long, u array<double>")
+    try:
+        want = _lloyd_reference(vecs, k, n_iter, m, d_sub, spherical, quant)
+    except ZeroDivisionError:
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            train(S, pts, k, n_iter)
+        return
+    got = [sorted((r.cid, list(r.c)) for r in f.collect()) for f in train(S, pts, k, n_iter)]
+    assert repr(got) == repr(want)
 
 
 def test_qt_all_literal_tolerates_missing_codes(spark):

@@ -732,14 +732,42 @@ def test_pq_encode_deterministic_and_compact(spark):
 def test_kmeans_l2_converges_to_cluster_means(spark):
     # two tight point clouds -> centroids are the (quantized) means,
     # NOT renormalized to unit (the PQ codebook property)
-    from spotify_pipeline_gcp_spark.operators.similarity import kmeans_l2_on
+    from spotify_pipeline_gcp_spark.operators.similarity import pq_codebooks
 
     rows = [(i, [0.1, 0.1]) for i in range(10)] + [
         (100 + i, [0.8, 0.0]) for i in range(10)
     ]
     pts = spark.createDataFrame(rows, "id long, u array<double>")
-    cent = {tuple(round(x, 6) for x in r.c) for r in kmeans_l2_on(pts, k=2, n_iter=3).collect()}
+    book = pq_codebooks(pts, m=1, d_sub=2, k_pq=2, n_iter=3)[0]
+    cent = {tuple(round(x, 6) for x in r.c) for r in book.collect()}
     assert (0.1, 0.1) in cent and (0.8, 0.0) in cent
+
+
+def test_lloyd_zero_mean_cell_contract(spark):
+    # (1, 0) and (-1, 0) in one cell sum to the zero vector: every
+    # spherical trainer divides by its zero norm and aborts (ANSI), the
+    # division the SQL oracles replay; the L2 trainer keeps the zero
+    # codeword
+    from spotify_pipeline_gcp_spark.operators.similarity import (
+        kmeans_centroids_on,
+        kmeans_centroids_on_halves,
+        kmeans_centroids_quant_on,
+        pq_codebooks,
+    )
+
+    pts = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [-1.0, 0.0])], "id long, u array<double>"
+    )
+    spherical = [
+        lambda: kmeans_centroids_on(pts, k=1, n_iter=1),
+        lambda: kmeans_centroids_quant_on(pts, k=1, n_iter=1),
+        lambda: kmeans_centroids_on_halves(pts, 1, k=1, n_iter=1),
+    ]
+    for train in spherical:
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            train()
+    book = pq_codebooks(pts, m=1, d_sub=2, k_pq=1, n_iter=1)[0]
+    assert [(r.cid, list(r.c)) for r in book.collect()] == [(0, [0.0, 0.0])]
 
 
 def test_ivfpq_recall_on_separable_data(spark):
