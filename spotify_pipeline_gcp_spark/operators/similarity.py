@@ -1028,8 +1028,11 @@ def _lloyd(
 
     Degenerate input: a spherical cell whose members sum to the zero
     vector (say (1, 0) and (−1, 0) with k = 1) divides by a zero norm
-    and the job aborts with ``DIVIDE_BY_ZERO`` (ANSI mode), exactly
-    the division the SQL oracles replay; L2 keeps the zero codeword.
+    and the job aborts with ``DIVIDE_BY_ZERO`` (ANSI mode). The SQL
+    oracles replay the same division, which DuckDB answers with NULL:
+    the centroid comes back all-NULL and the next assignment over it
+    raises (``list_dot_product`` rejects NULL elements), so both sides
+    abort, with different errors. L2 keeps the zero codeword.
 
     The points persist (MEMORY_AND_DISK) for the loop — each round's
     collect is a separate job that would otherwise re-run the scan

@@ -39,6 +39,7 @@ from spotify_pipeline_gcp_spark.queries.compat import (
     SIZED_BUCKET_CAP,
     fixed,
     sql_fixed,
+    sql_word_ngrams,
     table,
 )
 
@@ -58,6 +59,79 @@ _IVF_UNIT_FOLD = " + ".join(
     f" * {16 ** (7 - j)}::BIGINT"
     for j in range(8)
 )
+
+_QA = float(_ASSIGN_QSCALE)  # the fixed-point scale of every quantized dot
+
+
+def _qd(u_expr: str, c_expr: str) -> str:
+    """Integer dot of two lists rounded half-up at 2^20 — exact in
+    float64 (``operators/similarity.py::_ASSIGN_QSCALE``)."""
+    return (
+        f"list_dot_product(list_transform({u_expr}, x -> floor(x * {_QA} + 0.5)),"
+        f" list_transform({c_expr}, x -> floor(x * {_QA} + 0.5)))"
+    )
+
+
+# the (vec_id, u) unit-vector view the trained-index oracles start from
+_U_CTE = """u AS (
+      SELECT vec_id,
+             list_transform(embedding::DOUBLE[],
+                            x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
+                                                           embedding::DOUBLE[]))) AS u
+      FROM embeddings
+    )"""
+
+# fixed-point fold cosine of the raw embeddings of a and b
+_FOLD_COS = sql_fixed(f"{DOT_AB} / ({NORM.format('a')} * {NORM.format('b')})", 6)
+
+# pinned 4-bit sign-bucket code (qs3/qs5/qs6)
+_SIGN4 = """((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
+            + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
+            + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
+            + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END))::BIGINT"""
+
+# auto-sized sign-bucket code: the first (SELECT bits FROM nb) signs
+_SIZED_BUCKET = """CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
+                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
+                  AS BIGINT)"""
+
+# ``kept``: the ``coded`` rows outside hot buckets (> SIZED_BUCKET_CAP
+# members, ``drop_hot_buckets``)
+_DROP_HOT = f"""hot AS (
+      SELECT bucket FROM coded GROUP BY bucket
+      HAVING count(*) > {SIZED_BUCKET_CAP}
+    ),
+    kept AS (
+      SELECT c.* FROM coded c ANTI JOIN hot h ON c.bucket = h.bucket
+    ),"""
+
+# corpus count, floor(sqrt(n)) trained cells, and the ~32·k training
+# fraction (trained_cells_for / _train_frac)
+_SIZEN = "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings)"
+_SIZEK = (
+    "sizek AS (SELECT greatest(1, CAST(floor(sqrt(n)) AS BIGINT)) AS k FROM sizen)"
+)
+_TRAIN_FRAC_SQL = (
+    "least(1.0, (32.0 * (SELECT k FROM sizek)) / (SELECT n FROM sizen))"
+)
+
+
+def _with(ctes: list[str], tail: str) -> str:
+    """A generated oracle: ``WITH`` the CTE chain, then ``tail``."""
+    return "WITH " + ",\n    ".join(ctes) + tail
+
+
+def _ranked(col: str, src: str, topk: int) -> str:
+    """The closing top-k of every search oracle: per query_id, the
+    ``topk`` rows of ``src`` by ``col`` descending, ties to the lowest
+    neighbor_id."""
+    return f"""
+    SELECT query_id, neighbor_id, {col},
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY {col} DESC, neighbor_id)::BIGINT AS rank
+    FROM {src}
+    QUALIFY rank <= {topk}
+    """
 
 
 def _sample_cte(name: str, src: str, salt: str, frac_sql: str) -> str:
@@ -218,6 +292,109 @@ def _store_model(
     return tuple(frames) if meta["kind"] == "tuple" else frames
 
 
+def _lloyd_ctes(
+    sfx: str, src: str, k: int | str, n_iter: int, d: int, dot: str,
+    spherical: bool = True,
+) -> list[str]:
+    """The oracle side of ``operators/similarity.py::_lloyd``: its
+    seeded training replayed as a finite CTE chain over the
+    (vec_id, u) view ``src`` — ``cent0{sfx}`` then ``n_iter`` rounds
+    ending in ``cent{n_iter}{sfx}`` (cid, c).
+
+    The chain is exact because the engine fixes the iteration count
+    and removes every nondeterminism: the init is the k points ranked
+    first by ``md5(vec_id)``; each round's assignment ``asg{i}{sfx}``
+    is the argmax of ``dot`` (a fold or ``_qd`` dot spherical, the
+    ``_L2_SCORE`` L2), ties to the lowest cid; the means are
+    quantized-integer positional sums,
+    ``sum(floor(val*1e9+0.5)::BIGINT)`` per (cid, pos), which commute
+    exactly, so a cell mean is identical under any summation order
+    (``operators/similarity.py::_cell_means``). ``spherical`` renormalizes the means (four CTEs
+    per round); L2 keeps them (two). A centroid that wins no point
+    has no mean and drops out, as in the engine. A zero-mean
+    spherical cell divides by zero: DuckDB answers with NULL, so its
+    centroid comes back all-NULL and the next assignment over it
+    raises."""
+    ctes = [
+        f"""cent0{sfx} AS (
+      SELECT (row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::BIGINT AS cid,
+             u AS c
+      FROM {src}
+      QUALIFY row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) <= {k}
+    )"""
+    ]
+    for i in range(n_iter):
+        ctes.append(_argmax_cte(f"asg{i}{sfx}", src, f"cent{i}{sfx}", dot))
+        if spherical:
+            ctes += [
+                f"""expl{i}{sfx} AS (
+      SELECT cid, j AS pos, u[j] AS val
+      FROM asg{i}{sfx} CROSS JOIN (SELECT unnest(range(1, {d + 1})) AS j)
+    )""",
+                f"""qsum{i}{sfx} AS (
+      SELECT cid, pos,
+             (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT)))::BIGINT AS qsum,
+             count(*)::BIGINT AS n
+      FROM expl{i}{sfx} GROUP BY cid, pos
+    )""",
+                f"""mv{i}{sfx} AS (
+      SELECT cid, list(qsum::DOUBLE / (1000000000.0 * n) ORDER BY pos) AS mv
+      FROM qsum{i}{sfx} GROUP BY cid
+    )""",
+                f"""cent{i + 1}{sfx} AS (
+      SELECT cid, list_transform(mv, x -> x / sqrt(list_dot_product(mv, mv))) AS c
+      FROM mv{i}{sfx}
+    )""",
+            ]
+        else:
+            ctes += [
+                f"""qsum{i}{sfx} AS (
+      SELECT cid, j AS pos,
+             (sum(CAST(floor(u[j] * 1000000000.0 + 0.5) AS BIGINT)))::BIGINT AS qsum,
+             count(*)::BIGINT AS n
+      FROM asg{i}{sfx} CROSS JOIN (SELECT unnest(range(1, {d + 1})) AS j)
+      GROUP BY cid, pos
+    )""",
+                f"""cent{i + 1}{sfx} AS (
+      SELECT cid, list(qsum::DOUBLE / (1000000000.0 * n) ORDER BY pos) AS c
+      FROM qsum{i}{sfx} GROUP BY cid
+    )""",
+            ]
+    return ctes
+
+
+def _argmax_cte(
+    name: str, src: str, cent: str, dot: str, keep_u: bool = True, rnk: str = "= 1"
+) -> str:
+    """CTE ``name``: each point of ``src`` with the cells of ``cent``
+    whose rank by ``dot`` (descending, ties to the lowest cid) is
+    ``rnk`` — an assignment (``= 1``) or a probe list (``<= n``)."""
+    u, pu = ("u, ", "p.u, ") if keep_u else ("", "")
+    return f"""{name} AS (
+      SELECT vec_id, {u}cid FROM (
+        SELECT p.vec_id, {pu}c.cid,
+               row_number() OVER (PARTITION BY p.vec_id
+                                  ORDER BY {dot} DESC, c.cid) AS rnk
+        FROM {src} p CROSS JOIN {cent} c) t
+      WHERE rnk {rnk}
+    )"""
+
+
+def _cell_dot(quant: bool) -> str:
+    """A point's score against a spherical centroid: the quantized
+    integer dot (the dgemm routes) or the fold dot."""
+    return _qd("p.u", "c.c") if quant else "list_dot_product(p.u, c.c)"
+
+
+def _pair_score(quant_pairs: bool) -> tuple[str, str]:
+    """(column, expression) of a within-cell pair score over unit
+    vectors ``a.u``/``b.u``: the quantized-exact ``cosine_q`` = qdot /
+    2^40 of the BLAS twins, or the fixed-point fold ``cosine_r``."""
+    if quant_pairs:
+        return "cosine_q", f"{_qd('a.u', 'b.u')} / {_QA * _QA}"
+    return "cosine_r", "floor(list_dot_product(a.u, b.u) * 1000000 + 0.5) / 1000000"
+
+
 def _ivf_kmeans_oracle(
     k: int | str,
     n_iter: int,
@@ -231,153 +408,38 @@ def _ivf_kmeans_oracle(
     quant_final: bool = False,
     quant_iters: bool = False,
 ) -> str:
-    """DuckDB replay of the ENTIRE seeded-k-means training + IVF
-    search as one finite CTE chain — possible because the operator
-    fixes the iteration count and removes every nondeterminism
-    (md5-ranked init, fold dot products, quantized-integer positional
-    means: ``sum(floor(val*1e9+0.5)::BIGINT)`` per (cid, pos) commutes
-    exactly, so the cell mean is identical under any summation
-    order — see ``operators/similarity.py::_cell_means``).
+    """DuckDB replay of seeded spherical k-means (``_lloyd_ctes``) +
+    IVF search: every point assigned to its cell (``asgf``), each
+    query probing its top-``nprobe`` cells.
 
-    ``k`` may be an SQL expression string (e.g. a scalar subquery over
-    a sizing CTE passed via ``extra_cte``) so the data-adaptive index
-    size — cells grown WITH the corpus, the 100 TB shape — is replayed
-    by the oracle from the same count arithmetic the engine runs.
-    ``post_u_cte``/``train_src`` support SAMPLE-trained IVF: a CTE
-    defined after ``u`` (it may reference ``u``) becomes the training
-    set for init + Lloyd rounds, while final assignment and probing
-    stay over the full ``u``.
-
-    ``quant_pairs`` replays the QUANTIZED-EXACT search scoring of the
-    graduated BLAS twins (qs8 and family): pair score = integer dot
-    of 2^20-rounded unit vectors divided by 2^40 (column ``cosine_q``
-    — an exact dyadic double, no 1e-6 display rounding needed).
-    ``quant_final`` additionally replays quantized dots in the final
-    assignment + probe steps (the ``assign_clusters_quant_blas``
-    route the blas_assign engines take); ``quant_iters``
-    extends the same quantized scoring to the per-ITERATION Lloyd
-    assignments (the ``kmeans_centroids_quant_on`` throughput
-    trainer — qs10's fully-dgemm pipeline); with all three off, the
-    chain replays the generic float-fold trainer (qs7 family)."""
-    qa = float(_ASSIGN_QSCALE)
-
-    def _qd(u_expr: str, c_expr: str) -> str:
-        return (
-            f"list_dot_product(list_transform({u_expr}, x -> floor(x * {qa} + 0.5)),"
-            f" list_transform({c_expr}, x -> floor(x * {qa} + 0.5)))"
-        )
-
-    asg_dot = (
-        _qd("p.u", "c.c") if quant_final else "list_dot_product(p.u, c.c)"
-    )
-    iter_dot = (
-        _qd("p.u", "c.c") if quant_iters else "list_dot_product(p.u, c.c)"
-    )
-    ctes = ([extra_cte] if extra_cte else []) + [
-        """u AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                           embedding::DOUBLE[]))) AS u
-      FROM embeddings
-    )""",
-    ]
+    ``k`` may be an SQL expression (a scalar subquery over a sizing
+    CTE passed via ``extra_cte``), so a data-adaptive index size
+    replays from the same count arithmetic the engine runs.
+    ``post_u_cte``/``train_src``: a CTE defined after ``u`` becomes
+    the training set (a digest sample); final assignment and probing
+    stay over the full ``u``. ``quant_pairs`` scores pairs as
+    ``cosine_q`` (``_pair_score``); ``quant_final`` scores the final
+    assignment and probes, ``quant_iters`` the Lloyd rounds, with
+    ``_qd`` (the dgemm routes)."""
+    ctes = ([extra_cte] if extra_cte else []) + [_U_CTE]
     if post_u_cte:
         ctes.append(post_u_cte)
-    ctes.append(
-        f"""cent0 AS (
-      SELECT (row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::BIGINT AS cid,
-             u AS c
-      FROM {train_src}
-      QUALIFY row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) <= {k}
-    )"""
-    )
-    for i in range(n_iter):
-        ctes.append(
-            f"""asg{i} AS (
-      SELECT vec_id, u, cid FROM (
-        SELECT p.vec_id, p.u, c.cid,
-               row_number() OVER (PARTITION BY p.vec_id
-                                  ORDER BY {iter_dot} DESC, c.cid) AS rnk
-        FROM {train_src} p CROSS JOIN cent{i} c) t
-      WHERE rnk = 1
-    )"""
-        )
-        ctes.append(
-            f"""expl{i} AS (
-      SELECT cid, j AS pos, u[j] AS val
-      FROM asg{i} CROSS JOIN (SELECT unnest(range(1, {d + 1})) AS j)
-    )"""
-        )
-        ctes.append(
-            f"""qsum{i} AS (
-      SELECT cid, pos,
-             (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT)))::BIGINT AS qsum,
-             count(*)::BIGINT AS n
-      FROM expl{i} GROUP BY cid, pos
-    )"""
-        )
-        ctes.append(
-            f"""mv{i} AS (
-      SELECT cid, list(qsum::DOUBLE / (1000000000.0 * n) ORDER BY pos) AS mv
-      FROM qsum{i} GROUP BY cid
-    )"""
-        )
-        ctes.append(
-            f"""cent{i + 1} AS (
-      SELECT cid, list_transform(mv, x -> x / sqrt(list_dot_product(mv, mv))) AS c
-      FROM mv{i}
-    )"""
-        )
-    ctes.append(
-        f"""asgf AS (
-      SELECT vec_id, u, cid FROM (
-        SELECT p.vec_id, p.u, c.cid,
-               row_number() OVER (PARTITION BY p.vec_id
-                                  ORDER BY {asg_dot} DESC, c.cid) AS rnk
-        FROM u p CROSS JOIN cent{n_iter} c) t
-      WHERE rnk = 1
-    )"""
-    )
+    ctes += _lloyd_ctes("", train_src, k, n_iter, d, _cell_dot(quant_iters))
     # query side: top-nprobe cells per point (probe rank 1 == the
     # assigned cell, same total order); database side stays asgf, so
     # each (query, neighbor) pair arises at most once
-    ctes.append(
-        f"""probes AS (
-      SELECT vec_id, u, cid FROM (
-        SELECT p.vec_id, p.u, c.cid,
-               row_number() OVER (PARTITION BY p.vec_id
-                                  ORDER BY {asg_dot} DESC, c.cid) AS rnk
-        FROM u p CROSS JOIN cent{n_iter} c) t
-      WHERE rnk <= {nprobe}
-    )"""
-    )
-    if quant_pairs:
-        score_col = "cosine_q"
-        score_expr = f"{_qd('a.u', 'b.u')} / {qa * qa}"
-    else:
-        score_col = "cosine_r"
-        score_expr = (
-            "floor(list_dot_product(a.u, b.u) * 1000000 + 0.5) / 1000000"
-        )
+    cent, dot = f"cent{n_iter}", _cell_dot(quant_final)
+    ctes.append(_argmax_cte("asgf", "u", cent, dot))
+    ctes.append(_argmax_cte("probes", "u", cent, dot, rnk=f"<= {nprobe}"))
+    col, score = _pair_score(quant_pairs)
     ctes.append(
         f"""pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {score_expr} AS {score_col}
+             {score} AS {col}
       FROM probes a JOIN asgf b ON a.cid = b.cid AND a.vec_id <> b.vec_id
     )"""
     )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT query_id, neighbor_id, {score_col},
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY {score_col} DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= {topk}
-    """
-    )
+    return _with(ctes, _ranked(col, "pairs", topk))
 
 
 def _imi_half_chain(
@@ -386,95 +448,64 @@ def _imi_half_chain(
     quant_final: bool = False,
     quant_iters: bool = False,
 ) -> list[str]:
-    """CTE chain for ONE of the IMI sub-quantizers (suffix ``sfx``):
-    seeded init → ``n_iter`` Lloyd rounds → final assignment
-    ``asgf{sfx}``. Identical arithmetic to ``_ivf_kmeans_oracle``'s
-    chain, parameterized so the two-level oracle (qs17) can emit it
-    twice over the half-vector views. ``src`` is the TRAINING view
-    (a digest sample for the sample-trained shapes); ``assign_src``
-    (default: ``src``) is the view the final assignment runs over —
-    the FULL corpus when training is sampled. ``quant_final`` scores
-    the FINAL assignment with quantized integer dots (round-half-up
-    at 2^20 on both operands — exact in float64, see
-    ``operators/similarity.py::_ASSIGN_QSCALE``), replaying the
-    maintenance family's BLAS-routed builds. ``quant_iters`` extends
-    the same quantized scoring to the per-ITERATION Lloyd
-    assignments — the quantized-throughput trainer
-    (``kmeans_centroids_quant_on``), whose sample×k assignment runs
-    in dgemm at every round; means/renormalize steps are unchanged
-    (already engine-exact)."""
-    if assign_src is None:
-        assign_src = src
-    qa = float(_ASSIGN_QSCALE)  # one source of truth for the fixed-point scale
-
-    def _qd(u_expr: str, c_expr: str) -> str:
-        return (
-            f"list_dot_product(list_transform({u_expr}, x -> floor(x * {qa} + 0.5)),"
-            f" list_transform({c_expr}, x -> floor(x * {qa} + 0.5)))"
+    """One spherical quantizer (suffix ``sfx``): ``_lloyd_ctes`` over
+    the training view ``src``, then the final assignment
+    ``asgf{sfx}`` (vec_id, cid) over ``assign_src`` (default ``src``;
+    the full corpus when training is sampled). ``quant_final`` /
+    ``quant_iters`` score the final / per-round assignments with
+    ``_qd``."""
+    return _lloyd_ctes(sfx, src, k, n_iter, d, _cell_dot(quant_iters)) + [
+        _argmax_cte(
+            f"asgf{sfx}", assign_src or src, f"cent{n_iter}{sfx}",
+            _cell_dot(quant_final), keep_u=False,
         )
-
-    final_dot = (
-        _qd("p.u", "c.c") if quant_final else "list_dot_product(p.u, c.c)"
-    )
-    iter_dot = (
-        _qd("p.u", "c.c") if quant_iters else "list_dot_product(p.u, c.c)"
-    )
-    ctes = [
-        f"""cent0{sfx} AS (
-      SELECT (row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::BIGINT AS cid,
-             u AS c
-      FROM {src}
-      QUALIFY row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) <= {k}
-    )"""
     ]
-    for i in range(n_iter):
-        ctes.append(
-            f"""asg{i}{sfx} AS (
-      SELECT vec_id, u, cid FROM (
-        SELECT p.vec_id, p.u, c.cid,
-               row_number() OVER (PARTITION BY p.vec_id
-                                  ORDER BY {iter_dot} DESC, c.cid) AS rnk
-        FROM {src} p CROSS JOIN cent{i}{sfx} c) t
-      WHERE rnk = 1
-    )"""
+
+
+def _imi_cells(
+    d: int, n_iter: int, sfx: str, quant_final: bool = False
+) -> list[str]:
+    """The 'imi:' two-level index (qs17's model) as CTEs: sizing
+    k_each = ceil(sqrt(n/256)), the unit view ``u``, the digest
+    training sample, the half views ``uh1``/``uh2`` (``uh1t``/``uh2t``
+    over the sample) and one ``_imi_half_chain`` per half, suffixed
+    ``{sfx}1`` and ``{sfx}2``."""
+    h = d // 2
+    ctes = [
+        _SIZEN,
+        "sizek AS (SELECT greatest(2, CAST(ceil(sqrt(n / 256.0)) AS BIGINT))"
+        " AS k FROM sizen)",
+        _U_CTE,
+        _sample_cte("utrain", "u", "imi:", _TRAIN_FRAC_SQL),
+        f"uh1 AS (SELECT vec_id, u[1:{h}] AS u FROM u)",
+        f"uh2 AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM u)",
+        f"uh1t AS (SELECT vec_id, u[1:{h}] AS u FROM utrain)",
+        f"uh2t AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM utrain)",
+    ]
+    for half in "12":
+        ctes += _imi_half_chain(
+            sfx + half, f"uh{half}t", "(SELECT k FROM sizek)", n_iter, h,
+            assign_src=f"uh{half}", quant_final=quant_final,
         )
-        ctes.append(
-            f"""expl{i}{sfx} AS (
-      SELECT cid, j AS pos, u[j] AS val
-      FROM asg{i}{sfx} CROSS JOIN (SELECT unnest(range(1, {d + 1})) AS j)
-    )"""
-        )
-        ctes.append(
-            f"""qsum{i}{sfx} AS (
-      SELECT cid, pos,
-             (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT)))::BIGINT AS qsum,
-             count(*)::BIGINT AS n
-      FROM expl{i}{sfx} GROUP BY cid, pos
-    )"""
-        )
-        ctes.append(
-            f"""mv{i}{sfx} AS (
-      SELECT cid, list(qsum::DOUBLE / (1000000000.0 * n) ORDER BY pos) AS mv
-      FROM qsum{i}{sfx} GROUP BY cid
-    )"""
-        )
-        ctes.append(
-            f"""cent{i + 1}{sfx} AS (
-      SELECT cid, list_transform(mv, x -> x / sqrt(list_dot_product(mv, mv))) AS c
-      FROM mv{i}{sfx}
-    )"""
-        )
-    ctes.append(
-        f"""asgf{sfx} AS (
-      SELECT vec_id, cid FROM (
-        SELECT p.vec_id, c.cid,
-               row_number() OVER (PARTITION BY p.vec_id
-                                  ORDER BY {final_dot} DESC, c.cid) AS rnk
-        FROM {assign_src} p CROSS JOIN cent{n_iter}{sfx} c) t
-      WHERE rnk = 1
-    )"""
-    )
     return ctes
+
+
+# qs14/qs16/qs23's sized IVF: k = floor(sqrt(n)) cells trained on the
+# 'ivf:' digest sample
+_IVF_SIZED = dict(
+    extra_cte=f"{_SIZEN},\n    {_SIZEK}",
+    post_u_cte=_sample_cte("utrain", "u", "ivf:", _TRAIN_FRAC_SQL),
+    train_src="utrain",
+)
+
+
+# the product cell (cid1, cid2) of every point, with its unit vector
+_IMI_ASG = """asg AS (
+      SELECT a1.vec_id, u.u, a1.cid AS cid1, a2.cid AS cid2
+      FROM asgf_1 a1
+      JOIN asgf_2 a2 ON a1.vec_id = a2.vec_id
+      JOIN u ON u.vec_id = a1.vec_id
+    )"""
 
 
 def _imi_oracle(
@@ -489,11 +520,10 @@ def _imi_oracle(
     (k_each = ceil(sqrt(n/256))), the digest training sample, both
     half-vector quantizer trainings over it, the full-corpus
     product-cell assignment, and the within-cell search — as one
-    finite CTE chain (see ``_ivf_kmeans_oracle`` for why each step
-    is engine-portable). ``nprobe_each`` > 1 probes each query's
-    top-n cells PER HALF (an n×n product probe grid) while the
-    database side stays in its single assigned product cell — the
-    qs11 multiprobe convention lifted to the two-level index.
+    finite CTE chain (``_imi_cells``). ``nprobe_each`` > 1 probes each
+    query's top-n cells PER HALF (an n×n product probe grid) while
+    the database side stays in its single assigned product cell —
+    the qs11 multiprobe convention lifted to the two-level index.
 
     ``quant_final`` replays the final HALF-assignments (and probe
     rankings) with quantized integer dots — the dgemm assignment
@@ -501,67 +531,15 @@ def _imi_oracle(
     quantized-exact within-cell search (fixed-point ``cosine_q`` =
     qdot / 2^40). Training iterations stay float folds (the shared
     memoized 'imi:' model)."""
-    qa = float(_ASSIGN_QSCALE)
-
-    def _qd(u_expr: str, c_expr: str) -> str:
-        return (
-            f"list_dot_product(list_transform({u_expr}, x -> floor(x * {qa} + 0.5)),"
-            f" list_transform({c_expr}, x -> floor(x * {qa} + 0.5)))"
-        )
-
-    h = d // 2
-    k = "(SELECT k FROM sizek)"
-    ctes = [
-        "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings)",
-        "sizek AS (SELECT greatest(2, CAST(ceil(sqrt(n / 256.0)) AS BIGINT))"
-        " AS k FROM sizen)",
-        """u AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                           embedding::DOUBLE[]))) AS u
-      FROM embeddings
-    )""",
-        _sample_cte(
-            "utrain",
-            "u",
-            "imi:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
-        ),
-        f"uh1 AS (SELECT vec_id, u[1:{h}] AS u FROM u)",
-        f"uh2 AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM u)",
-        f"uh1t AS (SELECT vec_id, u[1:{h}] AS u FROM utrain)",
-        f"uh2t AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM utrain)",
-    ]
-    ctes += _imi_half_chain(
-        "_1", "uh1t", k, n_iter, h, assign_src="uh1", quant_final=quant_final
-    )
-    ctes += _imi_half_chain(
-        "_2", "uh2t", k, n_iter, h, assign_src="uh2", quant_final=quant_final
-    )
-    ctes.append(
-        """asg AS (
-      SELECT a1.vec_id, u.u, a1.cid AS cid1, a2.cid AS cid2
-      FROM asgf_1 a1
-      JOIN asgf_2 a2 ON a1.vec_id = a2.vec_id
-      JOIN u ON u.vec_id = a1.vec_id
-    )"""
-    )
+    ctes = _imi_cells(d, n_iter, "_", quant_final) + [_IMI_ASG]
     if nprobe_each > 1:
-        probe_dot = (
-            _qd("p.u", "c.c") if quant_final else "list_dot_product(p.u, c.c)"
-        )
-        for sfx, src in (("_1", "uh1"), ("_2", "uh2")):
+        for half in "12":
             ctes.append(
-                f"""probes{sfx} AS (
-      SELECT vec_id, cid FROM (
-        SELECT p.vec_id, c.cid,
-               row_number() OVER (PARTITION BY p.vec_id
-                                  ORDER BY {probe_dot} DESC, c.cid) AS rnk
-        FROM {src} p CROSS JOIN cent{n_iter}{sfx} c) t
-      WHERE rnk <= {nprobe_each}
-    )"""
+                _argmax_cte(
+                    f"probes_{half}", f"uh{half}", f"cent{n_iter}_{half}",
+                    _cell_dot(quant_final), keep_u=False,
+                    rnk=f"<= {nprobe_each}",
+                )
             )
         ctes.append(
             """qprod AS (
@@ -574,33 +552,16 @@ def _imi_oracle(
         query_side = "qprod"
     else:
         query_side = "asg"
-    if quant_pairs:
-        score_col = "cosine_q"
-        score_expr = f"{_qd('a.u', 'b.u')} / {qa * qa}"
-    else:
-        score_col = "cosine_r"
-        score_expr = (
-            "floor(list_dot_product(a.u, b.u) * 1000000 + 0.5) / 1000000"
-        )
+    col, score = _pair_score(quant_pairs)
     ctes.append(
         f"""pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {score_expr} AS {score_col}
+             {score} AS {col}
       FROM {query_side} a JOIN asg b
         ON a.cid1 = b.cid1 AND a.cid2 = b.cid2 AND a.vec_id <> b.vec_id
     )"""
     )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT query_id, neighbor_id, {score_col},
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY {score_col} DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= {topk}
-    """
-    )
+    return _with(ctes, _ranked(col, "pairs", topk))
 
 
 @register("qs7_cosine_topk_ivf_kmeans", oracle=_ivf_kmeans_oracle(16, 2, 64, 5))
@@ -689,15 +650,9 @@ def qs1_embed_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {sql_fixed(f'{DOT_AB} / ({NORM.format("a")} * {NORM.format("b")})', 6)} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_r DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 5
-    """,
+    ){_ranked("cosine_r", "pairs", 5)}""",
 )
 def qs2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ANN baseline: brute-force cosine top-5 per vector.
@@ -713,23 +668,14 @@ def qs2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH coded AS (
       SELECT vec_id, embedding,
-             ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-            + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-            + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END))::BIGINT AS bucket
+             {_SIGN4} AS bucket
       FROM embeddings
     ),
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {sql_fixed(f'{DOT_AB} / ({NORM.format("a")} * {NORM.format("b")})', 6)} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM coded a JOIN coded b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_r DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 5
-    """,
+    ){_ranked("cosine_r", "pairs", 5)}""",
 )
 def qs3_cosine_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PINNED BASELINE — use qs13_cosine_topk_bucketed_sized at
@@ -752,11 +698,8 @@ def qs3_cosine_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH coded AS (
       SELECT vec_id, embedding,
-             ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-            + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-            + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END))::BIGINT AS bucket
-      FROM coded_src
+             {_SIGN4} AS bucket
+      FROM embeddings
     ),
     probes AS (
       SELECT vec_id, embedding, xor(bucket, p) AS probe
@@ -764,15 +707,9 @@ def qs3_cosine_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {sql_fixed(f'{DOT_AB} / ({NORM.format("a")} * {NORM.format("b")})', 6)} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM probes a JOIN coded b ON b.bucket = a.probe AND a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_r DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 5
-    """.replace("coded_src", "embeddings"),
+    ){_ranked("cosine_r", "pairs", 5)}""",
 )
 def qs5_cosine_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe ANN (operators/similarity.py::cosine_topk_multiprobe
@@ -785,9 +722,6 @@ def qs5_cosine_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_multiprobe(emb, k=5, n_bits=4).withColumnRenamed(
         "cosine", "cosine_r"
     )
-
-
-_QA = float(_ASSIGN_QSCALE)
 
 
 @register(
@@ -815,13 +749,7 @@ _QA = float(_ASSIGN_QSCALE)
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
              list_dot_product(a.qu, b.qu) / {_QA * _QA} AS cosine_q
       FROM qv a JOIN qv b ON a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_q,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_q DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 5
-    """,
+    ){_ranked("cosine_q", "pairs", 5)}""",
 )
 def qs4_cosine_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Throughput ANN path: distributed block-matmul with an Arrow-
@@ -863,10 +791,7 @@ def qs4_cosine_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     qv AS (
       SELECT vec_id,
-             ((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-            + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-            + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END))::BIGINT AS bucket,
+             {_SIGN4} AS bucket,
              list_transform(u, x -> floor(x * {_QA} + 0.5)) AS qu
       FROM unitv
     ),
@@ -874,13 +799,7 @@ def qs4_cosine_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
              list_dot_product(a.qu, b.qu) / {_QA * _QA} AS cosine_q
       FROM qv a JOIN qv b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_q,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_q DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 5
-    """,
+    ){_ranked("cosine_q", "pairs", 5)}""",
 )
 def qs6_cosine_topk_ivf_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production ANN shape: IVF-style candidate pruning (qs3's
@@ -950,29 +869,15 @@ def qs8_cosine_topk_ivf_kmeans_blas(spark: SparkSession, sf_dir: str) -> DataFra
     ),
     coded AS (
       SELECT vec_id, embedding,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM filtered
     ),
-    hot AS (
-      SELECT bucket FROM coded GROUP BY bucket
-      HAVING count(*) > {SIZED_BUCKET_CAP}
-    ),
-    kept AS (
-      SELECT c.* FROM coded c ANTI JOIN hot h ON c.bucket = h.bucket
-    ),
+    {_DROP_HOT}
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {sql_fixed(f'{DOT_AB} / ({NORM.format("a")} * {NORM.format("b")})', 6)} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM kept a JOIN kept b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_r DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 3
-    """,
+    ){_ranked("cosine_r", "pairs", 3)}""",
 )
 def qs9_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search at the scale shape: a metadata
@@ -1155,8 +1060,6 @@ def qs10_ann_full_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("cosine", "cosine_q")
 
 
-
-
 @register(
     "qs13_cosine_topk_bucketed_sized",
     oracle=f"""
@@ -1165,29 +1068,15 @@ def qs10_ann_full_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     coded AS (
       SELECT vec_id, embedding,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM embeddings
     ),
-    hot AS (
-      SELECT bucket FROM coded GROUP BY bucket
-      HAVING count(*) > {SIZED_BUCKET_CAP}
-    ),
-    kept AS (
-      SELECT c.* FROM coded c ANTI JOIN hot h ON c.bucket = h.bucket
-    ),
+    {_DROP_HOT}
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {sql_fixed(f'{DOT_AB} / ({NORM.format("a")} * {NORM.format("b")})', 6)} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM kept a JOIN kept b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_r DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 5
-    """,
+    ){_ranked("cosine_r", "pairs", 5)}""",
 )
 def qs13_cosine_topk_bucketed_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The AUTO-SIZED sign-bucket ANN — qs3's shape with the index
@@ -1230,18 +1119,10 @@ def qs13_cosine_topk_bucketed_sized(spark: SparkSession, sf_dir: str) -> DataFra
     coded AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
              sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM embeddings
     ),
-    hot AS (
-      SELECT bucket FROM coded GROUP BY bucket
-      HAVING count(*) > {SIZED_BUCKET_CAP}
-    ),
-    kept AS (
-      SELECT c.* FROM coded c ANTI JOIN hot h ON c.bucket = h.bucket
-    ),
+    {_DROP_HOT}
     qb AS (
       SELECT vec_id, bucket,
              list_transform(v, x -> floor((x / norm) * {_QA} + 0.5)) AS qu
@@ -1251,13 +1132,7 @@ def qs13_cosine_topk_bucketed_sized(spark: SparkSession, sf_dir: str) -> DataFra
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
              list_dot_product(a.qu, b.qu) / {_QA * _QA} AS cosine_q
       FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine_q,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_q DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 5
-    """,
+    ){_ranked("cosine_q", "pairs", 5)}""",
 )
 def qs30_cosine_topk_bucketed_blas_sized(
     spark: SparkSession, sf_dir: str
@@ -1294,24 +1169,7 @@ def qs30_cosine_topk_bucketed_blas_sized(
 @register(
     "qs14_cosine_topk_ivf_kmeans_sized",
     oracle=_ivf_kmeans_oracle(
-        "(SELECT k FROM sizek)",
-        2,
-        64,
-        5,
-        nprobe=2,
-        extra_cte=(
-            "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings),\n"
-            "    sizek AS (SELECT greatest(1, CAST(floor(sqrt(n)) AS BIGINT))"
-            " AS k FROM sizen)"
-        ),
-        post_u_cte=_sample_cte(
-            "utrain",
-            "u",
-            "ivf:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
-        ),
-        train_src="utrain",
+        "(SELECT k FROM sizek)", 2, 64, 5, nprobe=2, **_IVF_SIZED
     ),
 )
 def qs14_cosine_topk_ivf_kmeans_sized(
@@ -1361,69 +1219,31 @@ def qs14_cosine_topk_ivf_kmeans_sized(
     return _fold_topk(probes, 5).withColumnRenamed("cosine", "cosine_r")
 
 
+# the L2 Lloyd score: argmin Euclidean distance, |u|^2 being constant
+# per point
+_L2_SCORE = "list_dot_product(p.u, c.c) - 0.5 * list_dot_product(c.c, c.c)"
+
+
 def _pq_sub_chain(
-    s: int, k: int, n_iter: int, d_sub: int, lo: int, hi: int,
-    train_src: str = "u",
-    quant_enc: bool = False,
+    s: int, k: int, n_iter: int, d_sub: int, train_src: str, quant_enc: bool
 ) -> list[str]:
-    """CTE chain for ONE PQ sub-quantizer: slice view → seeded init →
-    L2 Lloyd rounds (argmax ``dot − ‖c‖²/2``, plain quantized mean —
-    no renormalize) → corpus encoding ``enc_{s}``. ``train_src`` is
-    the (vec_id, u) view the init + Lloyd rounds slice from — a
-    digest sample for the sample-trained shapes; encoding (enc) and
-    query tables (tq) always use the full cview/qview. ``quant_enc``
-    scores the CORPUS ENCODING with the quantized integer form
+    """One PQ sub-quantizer over slice ``s`` (``d_sub`` wide): the
+    slice view ``sub_{s}`` of the training view ``train_src``, the L2
+    ``_lloyd_ctes``, the corpus encoding ``enc_{s}`` over ``cview``
+    and the query table ``tq_{s}`` over ``qview``. ``quant_enc``
+    scores the ENCODING with the quantized integer form
     ``2·qdot(u_s, c) − qdot(c, c)`` (exact in float64, a
     positive-scaled shift of the float rule — the fused dgemm build
-    kernel's selection; see ``_ASSIGN_QSCALE``); training and the
-    float ADC query tables are unchanged."""
+    kernel's selection); training and the float ADC query tables are
+    unchanged."""
     sfx = f"_{s}"
-    ctes = [
-        f"sub{sfx} AS (SELECT vec_id, u[{lo}:{hi}] AS u FROM {train_src})",
-        f"""cent0{sfx} AS (
-      SELECT (row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::BIGINT AS cid,
-             u AS c
-      FROM sub{sfx}
-      QUALIFY row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) <= {k}
-    )""",
-    ]
-    score = "list_dot_product(p.u, c.c) - 0.5 * list_dot_product(c.c, c.c)"
-    for i in range(n_iter):
-        ctes.append(
-            f"""asg{i}{sfx} AS (
-      SELECT vec_id, u, cid FROM (
-        SELECT p.vec_id, p.u, c.cid,
-               row_number() OVER (PARTITION BY p.vec_id
-                                  ORDER BY {score} DESC, c.cid) AS rnk
-        FROM sub{sfx} p CROSS JOIN cent{i}{sfx} c) t
-      WHERE rnk = 1
-    )"""
-        )
-        ctes.append(
-            f"""qsum{i}{sfx} AS (
-      SELECT cid, j AS pos,
-             (sum(CAST(floor(u[j] * 1000000000.0 + 0.5) AS BIGINT)))::BIGINT AS qsum,
-             count(*)::BIGINT AS n
-      FROM asg{i}{sfx} CROSS JOIN (SELECT unnest(range(1, {d_sub + 1})) AS j)
-      GROUP BY cid, pos
-    )"""
-        )
-        ctes.append(
-            f"""cent{i + 1}{sfx} AS (
-      SELECT cid, list(qsum::DOUBLE / (1000000000.0 * n) ORDER BY pos) AS c
-      FROM qsum{i}{sfx} GROUP BY cid
-    )"""
-        )
-    qa = float(_ASSIGN_QSCALE)  # one source of truth for the fixed-point scale
+    lo, hi = s * d_sub + 1, (s + 1) * d_sub
     enc_score = (
-        f"(2 * list_dot_product(list_transform(p.u, x -> floor(x * {qa} + 0.5)),"
-        f" list_transform(c.c, x -> floor(x * {qa} + 0.5)))"
-        f" - list_dot_product(list_transform(c.c, x -> floor(x * {qa} + 0.5)),"
-        f" list_transform(c.c, x -> floor(x * {qa} + 0.5))))"
-        if quant_enc
-        else score
+        f"(2 * {_qd('p.u', 'c.c')} - {_qd('c.c', 'c.c')})" if quant_enc else _L2_SCORE
     )
-    ctes.append(
+    return [
+        f"sub{sfx} AS (SELECT vec_id, u[{lo}:{hi}] AS u FROM {train_src})",
+        *_lloyd_ctes(sfx, f"sub{sfx}", k, n_iter, d_sub, _L2_SCORE, spherical=False),
         f"""enc{sfx} AS (
       SELECT vec_id, {s} AS s, cid AS code FROM (
         SELECT p.vec_id, c.cid,
@@ -1432,17 +1252,43 @@ def _pq_sub_chain(
         FROM (SELECT vec_id, u[{lo}:{hi}] AS u FROM cview) p
         CROSS JOIN cent{n_iter}{sfx} c) t
       WHERE rnk = 1
-    )"""
-    )
-    ctes.append(
+    )""",
         f"""tq{sfx} AS (
       SELECT q.vec_id AS query_id, {s} AS s, c.cid AS code,
              CAST(floor(list_dot_product(q.u[{lo}:{hi}], c.c)
                         * 1000000000.0 + 0.5) AS BIGINT) AS qt
       FROM qview q CROSS JOIN cent{n_iter}{sfx} c
-    )"""
-    )
+    )""",
+    ]
+
+
+def _pq_books(
+    d: int, m: int, k_pq: int, n_iter: int, train_src: str, quant_enc: bool = False
+) -> list[str]:
+    """The m ``_pq_sub_chain``s trained on ``train_src``, then their
+    unions ``enc`` (vec_id, s, code) and ``tq`` (query_id, s, code,
+    qt)."""
+    ctes = []
+    for s in range(m):
+        ctes += _pq_sub_chain(s, k_pq, n_iter, d // m, train_src, quant_enc)
+    for name in ("enc", "tq"):
+        union = " UNION ALL ".join(f"SELECT * FROM {name}_{s}" for s in range(m))
+        ctes.append(f"{name} AS ({union})")
     return ctes
+
+
+def _adc_oracle(ctes: list[str], joins: str, topk: int) -> str:
+    """``ctes`` (ending in ``_pq_books``), then the ADC total of every
+    (query, neighbor) pair of ``enc e`` + ``joins`` — exact-integer
+    partial sums, rounded once — and its top-``topk``."""
+    adc = f"""adc AS (
+      SELECT t.query_id, e.vec_id AS neighbor_id,
+             floor((sum(t.qt)::BIGINT)::DOUBLE / 1000000000.0 * 1000000.0 + 0.5)
+               / 1000000.0 AS adc_r
+      FROM enc e{joins}
+      GROUP BY t.query_id, e.vec_id
+    )"""
+    return _with(ctes + [adc], _ranked("adc_r", "adc", topk))
 
 
 def _pq_oracle(d: int, m: int, k_pq: int, n_iter: int, topk: int) -> str:
@@ -1451,17 +1297,10 @@ def _pq_oracle(d: int, m: int, k_pq: int, n_iter: int, topk: int) -> str:
     set at fixed k_pq — the qs16 convergence applied to PQ),
     full-corpus encoding, and the asymmetric-distance (ADC) search
     with exact-integer partial-score sums — finite CTE chain, same
-    portability arguments as ``_ivf_kmeans_oracle``."""
-    d_sub = d // m
+    portability arguments as ``_lloyd_ctes``."""
     ctes = [
-        "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings)",
-        """u AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                           embedding::DOUBLE[]))) AS u
-      FROM embeddings
-    )""",
+        _SIZEN,
+        _U_CTE,
         _sample_cte(
             "utrain",
             "u",
@@ -1477,36 +1316,16 @@ def _pq_oracle(d: int, m: int, k_pq: int, n_iter: int, topk: int) -> str:
         " ORDER BY md5('pq:' || u.vec_id::VARCHAR) LIMIT 64)",
         "cview AS (SELECT u.vec_id, u.u FROM u JOIN embeddings e"
         " ON e.vec_id = u.vec_id WHERE e.label % 10 <> 0)",
+        *_pq_books(d, m, k_pq, n_iter, "utrain"),
     ]
-    for s in range(m):
-        lo, hi = s * d_sub + 1, (s + 1) * d_sub
-        ctes += _pq_sub_chain(
-            s, k_pq, n_iter, d_sub, lo, hi, train_src="utrain"
-        )
-    enc_union = " UNION ALL ".join(f"SELECT * FROM enc_{s}" for s in range(m))
-    tq_union = " UNION ALL ".join(f"SELECT * FROM tq_{s}" for s in range(m))
-    ctes.append(f"enc AS ({enc_union})")
-    ctes.append(f"tq AS ({tq_union})")
-    ctes.append(
-        """adc AS (
-      SELECT t.query_id, e.vec_id AS neighbor_id,
-             floor((sum(t.qt)::BIGINT)::DOUBLE / 1000000000.0 * 1000000.0 + 0.5)
-               / 1000000.0 AS adc_r
-      FROM enc e JOIN tq t ON e.s = t.s AND e.code = t.code
-      GROUP BY t.query_id, e.vec_id
-    )"""
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT query_id, neighbor_id, adc_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc_r DESC, neighbor_id)::BIGINT AS rank
-    FROM adc
-    QUALIFY rank <= {topk}
-    """
-    )
+    return _adc_oracle(ctes, " JOIN tq t ON e.s = t.s AND e.code = t.code", topk)
+
+
+# qview/cview of the self-join ADC oracles: every vector both sides
+_ALL_VIEWS = [
+    "qview AS (SELECT vec_id, u FROM u)",
+    "cview AS (SELECT vec_id, u FROM u)",
+]
 
 
 def _ivfpq_oracle(
@@ -1520,69 +1339,31 @@ def _ivfpq_oracle(
     ranking with exact-integer partial sums. ``quant_assign`` replays
     the QUANTIZED final coarse assignment (the store build's dgemm
     routing — bit-exact, see ``_ASSIGN_QSCALE``): qs19b's form."""
-    d_sub = d // m
     ctes = [
-        "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings)",
-        "sizek AS (SELECT greatest(1, CAST(floor(sqrt(n)) AS BIGINT))"
-        " AS k FROM sizen)",
-        """u AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                           embedding::DOUBLE[]))) AS u
-      FROM embeddings
-    )""",
-        _sample_cte(
-            "utrain",
-            "u",
-            "ivfpq:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
+        _SIZEN,
+        _SIZEK,
+        _U_CTE,
+        _sample_cte("utrain", "u", "ivfpq:", _TRAIN_FRAC_SQL),
+        *_ALL_VIEWS,
+        # the shared 'ivfpq:' coarse model trains on the QUANTIZED
+        # throughput trainer (qs19/qs27/qs19b replay the same
+        # iteration dots); the FINAL corpus assignment stays per-query
+        # — float fold for the in-session qs19/qs27, quantized for
+        # qs19b's store
+        *_imi_half_chain(
+            "_c", "utrain", "(SELECT k FROM sizek)", n_iter, d,
+            assign_src="u", quant_final=quant_assign, quant_iters=True,
         ),
-        "qview AS (SELECT vec_id, u FROM u)",
-        "cview AS (SELECT vec_id, u FROM u)",
+        *_pq_books(d, m, k_pq, n_iter, "utrain", quant_enc=quant_assign),
     ]
-    # the shared 'ivfpq:' coarse model trains on the QUANTIZED
-    # throughput trainer (qs19/qs27/qs19b replay the same iteration
-    # dots); the FINAL corpus assignment stays per-query — float fold
-    # for the in-session qs19/qs27, quantized for qs19b's store
-    ctes += _imi_half_chain(
-        "_c", "utrain", "(SELECT k FROM sizek)", n_iter, d,
-        assign_src="u", quant_final=quant_assign, quant_iters=True,
-    )
-    for s in range(m):
-        lo, hi = s * d_sub + 1, (s + 1) * d_sub
-        ctes += _pq_sub_chain(
-            s, k_pq, n_iter, d_sub, lo, hi, train_src="utrain",
-            quant_enc=quant_assign,
-        )
-    enc_union = " UNION ALL ".join(f"SELECT * FROM enc_{s}" for s in range(m))
-    tq_union = " UNION ALL ".join(f"SELECT * FROM tq_{s}" for s in range(m))
-    ctes.append(f"enc AS ({enc_union})")
-    ctes.append(f"tq AS ({tq_union})")
-    ctes.append(
-        """adc AS (
-      SELECT t.query_id, e.vec_id AS neighbor_id,
-             floor((sum(t.qt)::BIGINT)::DOUBLE / 1000000000.0 * 1000000.0 + 0.5)
-               / 1000000.0 AS adc_r
-      FROM enc e
+    return _adc_oracle(
+        ctes,
+        """
       JOIN asgf_c be ON be.vec_id = e.vec_id
       JOIN tq t ON e.s = t.s AND e.code = t.code
       JOIN asgf_c qe ON qe.vec_id = t.query_id AND qe.cid = be.cid
-      WHERE t.query_id <> e.vec_id
-      GROUP BY t.query_id, e.vec_id
-    )"""
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT query_id, neighbor_id, adc_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc_r DESC, neighbor_id)::BIGINT AS rank
-    FROM adc
-    QUALIFY rank <= {topk}
-    """
+      WHERE t.query_id <> e.vec_id""",
+        topk,
     )
 
 
@@ -1953,29 +1734,19 @@ def qs17_cosine_topk_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     qc AS (
       SELECT vec_id, embedding,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM q
     ),
     cc AS (
       SELECT vec_id, embedding,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM c
     ),
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             {sql_fixed(f'{DOT_AB} / ({NORM.format("a")} * {NORM.format("b")})', 6)} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM qc a JOIN cc b ON a.bucket = b.bucket
-    )
-    SELECT query_id, neighbor_id, cosine_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine_r DESC, neighbor_id)::BIGINT AS rank
-    FROM pairs
-    QUALIFY rank <= 3
-    """,
+    ){_ranked("cosine_r", "pairs", 3)}""",
 )
 def qs15_query_corpus_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SERVING shape: a small query set against a big corpus —
@@ -2033,25 +1804,7 @@ def qs15_query_corpus_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "qs16_cosine_topk_ivf_sample_trained",
-    oracle=_ivf_kmeans_oracle(
-        "(SELECT k FROM sizek)",
-        2,
-        64,
-        5,
-        extra_cte=(
-            "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings),\n"
-            "    sizek AS (SELECT greatest(1, CAST(floor(sqrt(n)) AS BIGINT))"
-            " AS k FROM sizen)"
-        ),
-        post_u_cte=_sample_cte(
-            "utrain",
-            "u",
-            "ivf:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
-        ),
-        train_src="utrain",
-    ),
+    oracle=_ivf_kmeans_oracle("(SELECT k FROM sizek)", 2, 64, 5, **_IVF_SIZED),
 )
 def qs16_cosine_topk_ivf_sample_trained(
     spark: SparkSession, sf_dir: str
@@ -2093,16 +1846,8 @@ def qs16_cosine_topk_ivf_sample_trained(
     return _fold_topk(asg, 5).withColumnRenamed("cosine", "cosine_r")
 
 
-from spotify_pipeline_gcp_spark.queries.compat import (  # noqa: E402
-    sql_word_ngrams,
-)
-
 # Word 4-gram CTE fragment shared with the qt7 contamination oracle.
 _RRF_GRAMS = sql_word_ngrams(4)
-
-_RRF_COS = sql_fixed(
-    f"{DOT_AB} / ({NORM.format('a')} * {NORM.format('b')})", 6
-)
 
 
 @register(
@@ -2123,21 +1868,17 @@ _RRF_COS = sql_fixed(
     nb AS (SELECT {_SIZED_BITS_SQL} AS bits FROM ce),
     qc AS (
       SELECT vec_id, embedding,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM qe
     ),
     cc AS (
       SELECT vec_id, embedding,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM ce
     ),
     sem AS (
       SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
-             {_RRF_COS} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM qc a JOIN cc b ON a.bucket = b.bucket
     ),
     semr AS (
@@ -2319,81 +2060,11 @@ _AUDIT_BUCKET = (
 )
 
 
-def _imi_audit_oracle(d: int, n_iter: int) -> str:
-    """DuckDB replay of the IMI recall audit (qs29): the full 'imi:'
-    training + product-cell assignment chain of ``_imi_oracle`` over
-    ALL embeddings (the index being audited is the one qs17 serves),
-    then qs21's bounded eval — 64 'aud:' digest queries × the ≤65536
-    'audc:' digest audit corpus, exact vs same-product-cell top-5,
-    integer hits and one exact division."""
-    h = d // 2
-    k = "(SELECT k FROM sizek)"
-    ctes = [
-        "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings)",
-        "sizek AS (SELECT greatest(2, CAST(ceil(sqrt(n / 256.0)) AS BIGINT))"
-        " AS k FROM sizen)",
-        """u AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                           embedding::DOUBLE[]))) AS u
-      FROM embeddings
-    )""",
-        _sample_cte(
-            "utrain",
-            "u",
-            "imi:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
-        ),
-        f"uh1 AS (SELECT vec_id, u[1:{h}] AS u FROM u)",
-        f"uh2 AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM u)",
-        f"uh1t AS (SELECT vec_id, u[1:{h}] AS u FROM utrain)",
-        f"uh2t AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM utrain)",
-    ]
-    ctes += _imi_half_chain("_1", "uh1t", k, n_iter, h, assign_src="uh1")
-    ctes += _imi_half_chain("_2", "uh2t", k, n_iter, h, assign_src="uh2")
-    ctes.append(
-        """asg AS (
-      SELECT a1.vec_id, u.u, a1.cid AS cid1, a2.cid AS cid2
-      FROM asgf_1 a1
-      JOIN asgf_2 a2 ON a1.vec_id = a2.vec_id
-      JOIN u ON u.vec_id = a1.vec_id
-    )"""
-    )
-    ctes.append(
-        """qids AS (
-      SELECT vec_id FROM embeddings WHERE label % 10 = 0
-      ORDER BY md5('aud:' || vec_id::VARCHAR) LIMIT 64
-    )"""
-    )
-    ctes.append(
-        "cn AS (SELECT count(*)::BIGINT AS n FROM embeddings"
-        " WHERE label % 10 <> 0)"
-    )
-    ctes.append(
-        f"""cids AS (
-      SELECT vec_id FROM (
-        SELECT vec_id, md5('audc:' || vec_id::VARCHAR) AS _d
-        FROM embeddings WHERE label % 10 <> 0
-      ) WHERE ({_IVF_UNIT_FOLD}) / 4294967296.0
-          < least(1.0, 65536.0 / (SELECT n FROM cn))
-    )"""
-    )
-    ctes.append(
-        """pairs AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
-             (a.cid1 = b.cid1 AND a.cid2 = b.cid2) AS same_cell,
-             floor(list_dot_product(a.u, b.u) * 1000000 + 0.5) / 1000000
-               AS cosine_r
-      FROM (SELECT asg.* FROM asg JOIN qids USING (vec_id)) a
-      CROSS JOIN (SELECT asg.* FROM asg JOIN cids USING (vec_id)) b
-    )"""
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + """,
+def _recall_at5(same: str, q_from: str) -> str:
+    """The recall-audit tail of qs21 and qs29: exact vs
+    ``same``-restricted top-5 per query over ``pairs``, and the
+    integer hits and recall of every query row ``q`` of ``q_from``."""
+    return f"""
     exact AS (
       SELECT query_id, doc_id FROM (
         SELECT query_id, doc_id,
@@ -2407,7 +2078,7 @@ def _imi_audit_oracle(d: int, n_iter: int) -> str:
         SELECT query_id, doc_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY cosine_r DESC, doc_id) AS r
-        FROM pairs WHERE same_cell
+        FROM pairs WHERE {same}
       ) WHERE r <= 5
     ),
     hits AS (
@@ -2419,9 +2090,42 @@ def _imi_audit_oracle(d: int, n_iter: int) -> str:
     SELECT q.vec_id AS query_id,
            coalesce(n_hits, 0)::BIGINT AS n_hits,
            coalesce(n_hits, 0) / 5.0 AS recall_at_5
-    FROM qids q LEFT JOIN hits ON q.vec_id = hits.query_id
+    FROM {q_from} LEFT JOIN hits ON q.vec_id = hits.query_id
     """
-    )
+
+
+def _imi_audit_oracle(d: int, n_iter: int) -> str:
+    """DuckDB replay of the IMI recall audit (qs29): the full 'imi:'
+    training + product-cell assignment chain of ``_imi_oracle`` over
+    ALL embeddings (the index being audited is the one qs17 serves),
+    then qs21's bounded eval — 64 'aud:' digest queries × the ≤65536
+    'audc:' digest audit corpus, exact vs same-product-cell top-5,
+    integer hits and one exact division."""
+    ctes = _imi_cells(d, n_iter, "_") + [
+        _IMI_ASG,
+        """qids AS (
+      SELECT vec_id FROM embeddings WHERE label % 10 = 0
+      ORDER BY md5('aud:' || vec_id::VARCHAR) LIMIT 64
+    )""",
+        "cn AS (SELECT count(*)::BIGINT AS n FROM embeddings"
+        " WHERE label % 10 <> 0)",
+        f"""cids AS (
+      SELECT vec_id FROM (
+        SELECT vec_id, md5('audc:' || vec_id::VARCHAR) AS _d
+        FROM embeddings WHERE label % 10 <> 0
+      ) WHERE ({_IVF_UNIT_FOLD}) / 4294967296.0
+          < least(1.0, 65536.0 / (SELECT n FROM cn))
+    )""",
+        """pairs AS (
+      SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
+             (a.cid1 = b.cid1 AND a.cid2 = b.cid2) AS same_cell,
+             floor(list_dot_product(a.u, b.u) * 1000000 + 0.5) / 1000000
+               AS cosine_r
+      FROM (SELECT asg.* FROM asg JOIN qids USING (vec_id)) a
+      CROSS JOIN (SELECT asg.* FROM asg JOIN cids USING (vec_id)) b
+    )""",
+    ]
+    return _with(ctes, "," + _recall_at5("same_cell", "qids q"))
 
 
 @register("qs29_imi_recall_audit", oracle=_imi_audit_oracle(64, 2))
@@ -2543,36 +2247,9 @@ def qs29_imi_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
              a.bucket = b.bucket AS same_bucket,
-             {_RRF_COS} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM q a CROSS JOIN c b
-    ),
-    exact AS (
-      SELECT query_id, doc_id FROM (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine_r DESC, doc_id) AS r
-        FROM pairs
-      ) WHERE r <= 5
-    ),
-    approx AS (
-      SELECT query_id, doc_id FROM (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine_r DESC, doc_id) AS r
-        FROM pairs WHERE same_bucket
-      ) WHERE r <= 5
-    ),
-    hits AS (
-      SELECT e.query_id, count(*)::BIGINT AS n_hits
-      FROM exact e JOIN approx a
-        ON e.query_id = a.query_id AND e.doc_id = a.doc_id
-      GROUP BY 1
-    )
-    SELECT q.vec_id AS query_id,
-           coalesce(n_hits, 0)::BIGINT AS n_hits,
-           coalesce(n_hits, 0) / 5.0 AS recall_at_5
-    FROM q LEFT JOIN hits ON q.vec_id = hits.query_id
-    """,
+    ),{_recall_at5("same_bucket", "q")}""",
 )
 def qs21_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality measurement: recall@5 of the sign-bucket index
@@ -2670,22 +2347,18 @@ def qs21_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb AS (SELECT {_SIZED_BITS_SQL} AS bits FROM labeled),
     q AS (
       SELECT vec_id, embedding,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM embeddings WHERE label % 10 = 0
     ),
     c AS (
       SELECT vec_id, embedding, label,
-             CAST(list_sum(list_transform(range(1, (SELECT bits FROM nb) + 1),
-                  j -> CASE WHEN embedding[j] > 0 THEN 1 << (j - 1) ELSE 0 END))
-                  AS BIGINT) AS bucket
+             {_SIZED_BUCKET} AS bucket
       FROM labeled
     ),
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
              b.label AS nlabel,
-             {_RRF_COS} AS cosine_r
+             {_FOLD_COS} AS cosine_r
       FROM q a JOIN c b ON a.bucket = b.bucket
     ),
     knn AS (
@@ -2808,12 +2481,10 @@ def _maint_oracle() -> str:
     """Oracle for qs22: sized sample-trained index over the corpus
     slice, delta ASSIGNED to the stored centroids (no retrain), per-
     cell fill accounting with the integer-exact overfull threshold."""
-    ksql = "(SELECT k FROM sizek)"
     ctes = [
         "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings"
         " WHERE label % 10 <> 0)",
-        "sizek AS (SELECT greatest(1, CAST(floor(sqrt(n)) AS BIGINT))"
-        " AS k FROM sizen)",
+        _SIZEK,
         "sizee AS (SELECT (n + k - 1) // k AS expected"
         " FROM sizen, sizek)",
         """uall AS (
@@ -2825,47 +2496,33 @@ def _maint_oracle() -> str:
     )""",
         "uc AS (SELECT vec_id, u FROM uall WHERE label % 10 <> 0)",
         "ud AS (SELECT vec_id, u FROM uall WHERE label % 10 = 0)",
-        _sample_cte(
-            "utrain",
-            "uc",
-            "ivfm:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
+        _sample_cte("utrain", "uc", "ivfm:", _TRAIN_FRAC_SQL),
+        # EVERY assignment — the Lloyd iterations, the final corpus
+        # routing, and the delta routing — replays the QUANTIZED
+        # integer dots the engine's BLAS-routed builds compute
+        # (bit-exact in float64 — see _ASSIGN_QSCALE): the
+        # maintenance family trains with kmeans_centroids_quant
+        *_imi_half_chain(
+            "_c", "utrain", "(SELECT k FROM sizek)", 2, 64, assign_src="uc",
+            quant_final=True, quant_iters=True,
         ),
-    ]
-    # EVERY assignment — the Lloyd iterations, the final corpus
-    # routing, and the delta routing — replays the QUANTIZED integer
-    # dots the engine's BLAS-routed builds compute (bit-exact in
-    # float64 — see operators/similarity.py::_ASSIGN_QSCALE): the
-    # maintenance family trains with kmeans_centroids_quant
-    ctes += _imi_half_chain(
-        "_c", "utrain", ksql, 2, 64, assign_src="uc",
-        quant_final=True, quant_iters=True,
-    )
-    qa = float(_ASSIGN_QSCALE)
-    ctes.append(
         f"""asgd AS (
       SELECT vec_id, cid FROM (
         SELECT p.vec_id, c.cid,
                row_number() OVER (PARTITION BY p.vec_id
                                   ORDER BY list_dot_product(
-                                    list_transform(p.u, x -> floor(x * {qa} + 0.5)),
-                                    list_transform(c.c, x -> floor(x * {qa} + 0.5))) DESC,
+                                    list_transform(p.u, x -> floor(x * {_QA} + 0.5)),
+                                    list_transform(c.c, x -> floor(x * {_QA} + 0.5))) DESC,
                                   c.cid) AS rnk
         FROM ud p CROSS JOIN cent2_c c) t
       WHERE rnk = 1
-    )"""
-    )
-    ctes.append(
-        "oldc AS (SELECT cid, count(*)::BIGINT AS n FROM asgf_c GROUP BY 1)"
-    )
-    ctes.append(
-        "newc AS (SELECT cid, count(*)::BIGINT AS n FROM asgd GROUP BY 1)"
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + """
+    )""",
+        "oldc AS (SELECT cid, count(*)::BIGINT AS n FROM asgf_c GROUP BY 1)",
+        "newc AS (SELECT cid, count(*)::BIGINT AS n FROM asgd GROUP BY 1)",
+    ]
+    return _with(
+        ctes,
+        """
     SELECT c.cid,
            coalesce(o.n, 0)::BIGINT AS n_indexed,
            coalesce(d.n, 0)::BIGINT AS n_delta,
@@ -2875,7 +2532,7 @@ def _maint_oracle() -> str:
     FROM cent2_c c
     LEFT JOIN oldc o ON o.cid = c.cid
     LEFT JOIN newc d ON d.cid = c.cid
-    """
+    """,
     )
 
 
@@ -3103,25 +2760,8 @@ def read_pq_store(spark: SparkSession, path: str):
     # and the pair scoring in quantized-exact form — the two stages
     # qs23 runs as dgemm.
     oracle=_ivf_kmeans_oracle(
-        "(SELECT k FROM sizek)",
-        2,
-        64,
-        5,
-        extra_cte=(
-            "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings),\n"
-            "    sizek AS (SELECT greatest(1, CAST(floor(sqrt(n)) AS BIGINT))"
-            " AS k FROM sizen)"
-        ),
-        post_u_cte=_sample_cte(
-            "utrain",
-            "u",
-            "ivf:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
-        ),
-        train_src="utrain",
-        quant_pairs=True,
-        quant_final=True,
+        "(SELECT k FROM sizek)", 2, 64, 5,
+        quant_pairs=True, quant_final=True, **_IVF_SIZED,
     ),
 )
 def qs23_cosine_topk_ivf_blas_sized(
@@ -3253,83 +2893,30 @@ def _imi_adc_oracle(d: int, m: int, k_pq: int, n_iter: int, topk: int) -> str:
     them in the compressed domain with exact-integer partial sums,
     and the per-pair ADC total is restricted to same-product-cell
     pairs — the full two-model pipeline as one finite CTE chain."""
-    h = d // 2
-    d_sub = d // m
-    k = "(SELECT k FROM sizek)"
     ctes = [
-        "sizen AS (SELECT count(*)::BIGINT AS n FROM embeddings)",
-        "sizek AS (SELECT greatest(2, CAST(ceil(sqrt(n / 256.0)) AS BIGINT))"
-        " AS k FROM sizen)",
-        """u AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                           embedding::DOUBLE[]))) AS u
-      FROM embeddings
-    )""",
-        _sample_cte(
-            "utrain",
-            "u",
-            "imi:",
-            "least(1.0, (32.0 * (SELECT k FROM sizek))"
-            " / (SELECT n FROM sizen))",
-        ),
-        f"uh1 AS (SELECT vec_id, u[1:{h}] AS u FROM u)",
-        f"uh2 AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM u)",
-        f"uh1t AS (SELECT vec_id, u[1:{h}] AS u FROM utrain)",
-        f"uh2t AS (SELECT vec_id, u[{h + 1}:{d}] AS u FROM utrain)",
-    ]
-    ctes += _imi_half_chain("_i1", "uh1t", k, n_iter, h, assign_src="uh1")
-    ctes += _imi_half_chain("_i2", "uh2t", k, n_iter, h, assign_src="uh2")
-    ctes.append(
+        *_imi_cells(d, n_iter, "_i"),
         """asg AS (
       SELECT a1.vec_id, a1.cid AS cid1, a2.cid AS cid2
       FROM asgf_i1 a1 JOIN asgf_i2 a2 ON a1.vec_id = a2.vec_id
-    )"""
-    )
-    ctes.append(
+    )""",
         _sample_cte(
             "utrainpq",
             "u",
             "pqtr:",
             f"least(1.0, (32.0 * {k_pq}) / (SELECT n FROM sizen))",
-        )
-    )
-    ctes.append("qview AS (SELECT vec_id, u FROM u)")
-    ctes.append("cview AS (SELECT vec_id, u FROM u)")
-    for s in range(m):
-        lo, hi = s * d_sub + 1, (s + 1) * d_sub
-        ctes += _pq_sub_chain(
-            s, k_pq, n_iter, d_sub, lo, hi, train_src="utrainpq"
-        )
-    enc_union = " UNION ALL ".join(f"SELECT * FROM enc_{s}" for s in range(m))
-    tq_union = " UNION ALL ".join(f"SELECT * FROM tq_{s}" for s in range(m))
-    ctes.append(f"enc AS ({enc_union})")
-    ctes.append(f"tq AS ({tq_union})")
-    ctes.append(
-        """adc AS (
-      SELECT t.query_id, e.vec_id AS neighbor_id,
-             floor((sum(t.qt)::BIGINT)::DOUBLE / 1000000000.0 * 1000000.0 + 0.5)
-               / 1000000.0 AS adc_r
-      FROM enc e
+        ),
+        *_ALL_VIEWS,
+        *_pq_books(d, m, k_pq, n_iter, "utrainpq"),
+    ]
+    return _adc_oracle(
+        ctes,
+        """
       JOIN asg na ON na.vec_id = e.vec_id
       JOIN tq t ON e.s = t.s AND e.code = t.code
       JOIN asg qa ON qa.vec_id = t.query_id
       WHERE qa.cid1 = na.cid1 AND qa.cid2 = na.cid2
-        AND t.query_id <> e.vec_id
-      GROUP BY t.query_id, e.vec_id
-    )"""
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT query_id, neighbor_id, adc_r,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc_r DESC, neighbor_id)::BIGINT AS rank
-    FROM adc
-    QUALIFY rank <= {topk}
-    """
+        AND t.query_id <> e.vec_id""",
+        topk,
     )
 
 

@@ -492,17 +492,9 @@ _LLOYD_PATHS = {
 }
 
 
-def _each_lloyd_path(test):
-    # one explicit example per trainer: two duplicated points, so a
-    # duplicate seed wins no point and drops out, and k > n
-    ties = [[1.0, 0.0, 0.5, 0.0], [0.0, 1.0, 0.0, 0.5]]
-    for path in _LLOYD_PATHS:
-        test = example(path=path, points=ties, dup=2, k=5, n_iter=2)(test)
-    return test
-
-
-@settings(max_examples=4, deadline=None)
-@given(
+# the drawn examples of both Lloyd tests: ``dup`` repeats the first
+# points (exact ties)
+_LLOYD_DRAWS = dict(
     path=st.sampled_from(sorted(_LLOYD_PATHS)),
     points=st.lists(
         st.lists(
@@ -515,6 +507,19 @@ def _each_lloyd_path(test):
     k=st.integers(1, 7),
     n_iter=st.integers(1, 2),
 )
+
+
+def _each_lloyd_path(test):
+    # one explicit example per trainer: two duplicated points, so a
+    # duplicate seed wins no point and drops out, and k > n
+    ties = [[1.0, 0.0, 0.5, 0.0], [0.0, 1.0, 0.0, 0.5]]
+    for path in _LLOYD_PATHS:
+        test = example(path=path, points=ties, dup=2, k=5, n_iter=2)(test)
+    return test
+
+
+@settings(max_examples=4, deadline=None)
+@given(**_LLOYD_DRAWS)
 @_each_lloyd_path
 def test_lloyd_matches_python_reference(spark, path, points, dup, k, n_iter):
     # every trainer routed through _lloyd against a pure-Python replay
@@ -532,6 +537,78 @@ def test_lloyd_matches_python_reference(spark, path, points, dup, k, n_iter):
             train(S, pts, k, n_iter)
         return
     got = [sorted((r.cid, list(r.c)) for r in f.collect()) for f in train(S, pts, k, n_iter)]
+    assert repr(got) == repr(want)
+
+
+def _each_lloyd_path_zero_mean(test):
+    # (1, 0) and (-1, 0) in one cell: a zero mean on every path
+    zero = [[1.0, 0.0, 0.0, 0.0], [-1.0, 0.0, 0.0, 0.0]]
+    for path in _LLOYD_PATHS:
+        test = example(path=path, points=zero, dup=0, k=1, n_iter=2)(test)
+    return test
+
+
+@settings(max_examples=200, deadline=None)
+@given(**_LLOYD_DRAWS)
+@_each_lloyd_path
+@_each_lloyd_path_zero_mean
+def test_lloyd_oracle_chain_matches_python_reference(path, points, dup, k, n_iter):
+    # the oracles' CTE chain (_lloyd_ctes) run in DuckDB against the
+    # same pure-Python replay as the engine's _lloyd, repr for repr —
+    # one slice view per sub-quantizer, as the halves and PQ oracles
+    # cut them. A zero-norm spherical mean: DuckDB's x / 0 is NULL, so
+    # the centroid comes back all-NULL and the next assignment raises.
+    import duckdb
+
+    from spotify_pipeline_gcp_spark.queries.similarity import (
+        _L2_SCORE,
+        _argmax_cte,
+        _cell_dot,
+        _lloyd_ctes,
+    )
+
+    _, m, d_sub, spherical, quant = _LLOYD_PATHS[path]
+    vecs = dict(enumerate(points + points[:dup]))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pts (vec_id BIGINT, u DOUBLE[])")
+    con.executemany("INSERT INTO pts VALUES (?, ?)", list(vecs.items()))
+    dot = _cell_dot(quant) if spherical else _L2_SCORE
+    width = d_sub or 4
+
+    def run(s, rounds, assign_next=False):
+        # slice s trained for ``rounds`` rounds: its centroids, or one
+        # more assignment over them
+        lo, hi = s * width + 1, (s + 1) * width
+        ctes = [
+            f"v{s} AS (SELECT vec_id, u[{lo}:{hi}] AS u FROM pts)",
+            *_lloyd_ctes(f"_{s}", f"v{s}", k, rounds, width, dot, spherical),
+        ]
+        out = f"cent{rounds}_{s}"
+        if assign_next:
+            ctes.append(_argmax_cte("nxt", f"v{s}", out, dot))
+            out = "nxt"
+        sql = "WITH " + ",\n".join(ctes) + f" SELECT * FROM {out}"
+        return con.sql(sql).fetchall()
+
+    def reference(rounds):
+        try:
+            return _lloyd_reference(vecs, k, rounds, m, d_sub, spherical, quant)
+        except ZeroDivisionError:
+            return None
+
+    want = reference(n_iter)
+    if want is None:
+        bad = next(i for i in range(1, n_iter + 1) if reference(i) is None)
+        nulls = [
+            s for s in range(m)
+            if any(all(x is None for x in c) for _, c in run(s, bad))
+        ]
+        assert nulls
+        for s in nulls:
+            with pytest.raises(duckdb.InvalidInputException, match="NULL"):
+                run(s, bad, assign_next=True)
+        return
+    got = [sorted((cid, list(c)) for cid, c in run(s, n_iter)) for s in range(m)]
     assert repr(got) == repr(want)
 
 

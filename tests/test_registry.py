@@ -9,7 +9,8 @@ def test_registry_shape():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     assert len(qs) >= 35
-    assert set(oracles) <= set(qs)
+    # every registered query is oracle-checked: none is rows-only
+    assert set(oracles) == set(qs)
     # every oracle is non-trivial SQL
     assert all("SELECT" in sql.upper() for sql in oracles.values())
 
