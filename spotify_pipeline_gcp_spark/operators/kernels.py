@@ -59,3 +59,60 @@ def quantize(mat: np.ndarray) -> np.ndarray:
     """Round half up at ``QSCALE``: ``floor(x * 2^20 + 0.5)``, the form
     Spark, DuckDB and NumPy evaluate identically for every double."""
     return np.floor(mat * float(QSCALE) + 0.5)
+
+
+def row_tiles(n_q: int, n_d: int, budget: int) -> list[tuple[int, int]]:
+    """[start, stop) query-row tiles covering ``range(n_q)`` once, each
+    as many rows as keep its float64 score slab (rows × ``n_d`` × 8 B)
+    within ``budget`` bytes. One row is the smallest tile, so a row
+    wider than the budget alone is a tile of its own."""
+    step = max(1, budget // (8 * max(n_d, 1)))
+    return [(r, min(r + step, n_q)) for r in range(0, n_q, step)]
+
+
+def topk_tiled(sims_or_blocks, q_ids, d_ids, k: int, budget: int):
+    """(query_id, neighbor_id, score) columns: each query row's top-k
+    by (score desc, neighbor_id), self-pairs and non-finite scores
+    dropped, rows in query-row order.
+
+    ``sims_or_blocks`` is a (rows_q × rows_d) score matrix or a
+    ``(qm, dm)`` pair of row blocks scored here as ``qm @ dm.T``. Query
+    rows go in ``row_tiles`` so no float64 score slab exceeds
+    ``budget``. Per tile: NaN scores (a zero vector's row and column)
+    and self-pairs (``q_id == d_id``) become −inf; a row-wise partition
+    finds each row's k-th largest score, and every entry at or above
+    it is kept — the boundary's exact ties included, which quantized
+    integer scores make common (duplicate vectors) — so one lexsort on
+    (row, −score, neighbor_id) and a per-row cut at k give the
+    tie-exact top-k. Entries still non-finite after the cut are
+    dropped, so a row with fewer than k finite scores yields only
+    those."""
+    if isinstance(sims_or_blocks, np.ndarray):
+        n_d = sims_or_blocks.shape[1]
+
+        def slab(r0, r1):
+            return np.array(sims_or_blocks[r0:r1], dtype="float64")
+
+    else:
+        qm, dm = sims_or_blocks
+        n_d = dm.shape[0]
+
+        def slab(r0, r1):
+            return qm[r0:r1] @ dm.T
+
+    kk = min(k, n_d)
+    cols = [(np.zeros(0, "int64"), np.zeros(0, "int64"), np.zeros(0))]
+    for r0, r1 in row_tiles(len(q_ids), n_d, budget):
+        s = slab(r0, r1)
+        s[np.isnan(s) | (q_ids[r0:r1, None] == d_ids[None, :])] = -np.inf
+        keep = s > -np.inf
+        if kk < n_d:
+            keep &= s >= np.partition(s, n_d - kk, axis=1)[:, n_d - kk, None]
+        rows, js = np.nonzero(keep)
+        v = s[rows, js]
+        order = np.lexsort((d_ids[js], -v, rows))
+        rows, js, v = rows[order], js[order], v[order]
+        rank = np.arange(len(rows)) - np.searchsorted(rows, rows)
+        cut = (rank < kk) & np.isfinite(v)
+        cols.append((q_ids[r0 + rows[cut]], d_ids[js[cut]], v[cut]))
+    return tuple(np.concatenate(c) for c in zip(*cols))

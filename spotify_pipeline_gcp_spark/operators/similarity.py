@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spotify_pipeline_gcp_spark.operators import kernels
+from spotify_pipeline_gcp_spark.operators.dedup import _derived_nodes, _row_count
 from spotify_pipeline_gcp_spark.pyfiles import ensure_package_on_workers
 
 
@@ -126,11 +127,13 @@ def _double_base(
 # One block is ONE ``collect_list`` row, so block bytes must stay
 # bounded as the collection grows — a cores-derived block COUNT
 # makes block SIZE grow linearly with n (unbounded at 100 TB). The
-# 32 MB target bounds only the packed cell, its shuffle record and
-# its Arrow transfer. It does NOT bound the kernel: a combo scores
-# two blocks into a (rows_q x rows_d) float64 matrix, quadratic in
-# block rows — two 32 MB d=64 blocks (~131 k rows each) imply a
-# ~137 GB ``sims`` array.
+# 32 MB target bounds the packed cell, its shuffle record and its
+# Arrow transfer, and the same figure bounds the kernel's float64
+# score slab: a combo of two blocks would be a (rows_q x rows_d)
+# matrix, quadratic in block rows (two 32 MB d=64 blocks, ~131 k rows
+# each, would make a ~137 GB one), so ``kernels.topk_tiled`` scores
+# query rows in tiles of at most this many slab bytes. A single row
+# wider than the budget (a block past ~4 M rows) is still one tile.
 _BLAS_BLOCK_BYTES = 32 << 20
 
 # Scored rows per task before ``_widen_for_scoring`` widens a
@@ -149,8 +152,6 @@ def _scan_bytes_est(df: DataFrame) -> int | None:
     frames; callers fall back to the cores floor (and can pass the
     block count explicitly). No job runs: statistics come from the
     file index."""
-    from spotify_pipeline_gcp_spark.operators.dedup import _derived_nodes
-
     plan = df._jdf.queryExecution().optimizedPlan()
     if _derived_nodes(plan):
         return None
@@ -272,13 +273,16 @@ def _raw_points(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _model_matrix(cent: DataFrame):
-    """(cids int64, C float64 k×d) from one O(k·d) centroid collect,
+def _model_matrix(cent: DataFrame | list[tuple]):
+    """(cids int64, C float64 k×d) from one O(k·d) centroid collect of a
+    (cid, c) frame, or from driver-held (cid, c) rows with no job,
     rows in ascending cid order — so a kernel's argmax-first breaks
     ties to the lowest cid, the fold's ``max(struct(dot, -cid))``."""
     import numpy as np
 
-    rows = sorted((int(r["cid"]), list(r["c"])) for r in cent.collect())
+    if isinstance(cent, DataFrame):
+        cent = [(r["cid"], r["c"]) for r in cent.collect()]
+    rows = sorted((int(cid), list(c)) for cid, c in cent)
     cids = np.asarray([cid for cid, _ in rows], dtype="int64")
     return cids, kernels.matrix([c for _, c in rows])
 
@@ -532,12 +536,11 @@ def cosine_topk_blas(
     — so B grows linearly with the collection, one packed block (one
     ``collect_list`` row, shuffle record and Arrow cell) stays near
     the 32 MB target, and the driver never touches vector data: the
-    standard parallel dense GEMM decomposition. That bounds the
-    packing, NOT the kernel: each combo's (rows_q × rows_d) float64
-    score matrix grows with the square of block rows (see
-    ``_BLAS_BLOCK_BYTES``). Block count changes no output row (every
-    pair meets in exactly one combo; the rank merge is global), so
-    the sizing is a pure execution knob. Compose with ``sign_bucket``
+    standard parallel dense GEMM decomposition. The kernel scores a
+    combo in query-row tiles, so its float64 score slab stays within
+    the same budget (see ``_BLAS_BLOCK_BYTES``). Block count changes
+    no output row (every pair meets in exactly one combo; the rank
+    merge is global), so the sizing is a pure execution knob. Compose with ``sign_bucket``
     (qs3) when n² slabs are no longer affordable at all and
     approximate recall is acceptable.
 
@@ -586,10 +589,12 @@ def cosine_topk_blas(
 
 
 def _blas_topk_from_combos(combos: DataFrame, k: int, raw: bool) -> DataFrame:
-    """Shared BLAS tail: score each (q_items, d_items) block pair with one
-    NumPy matmul emitting per-(query, block) partial top-k, then merge
-    partials with a ranking window — correct because every global
-    neighbor appears in some block's partial top-k.
+    """Shared BLAS tail: score each (q_items, d_items) block pair with
+    ``kernels.topk_tiled`` — NumPy matmuls over query-row tiles whose
+    float64 score slab stays within ``_BLAS_BLOCK_BYTES``, emitting the
+    per-(query, block) partial top-k — then merge partials with a
+    ranking window — correct because every global neighbor appears in
+    some block's partial top-k.
 
     Scoring is quantized-exact: rows are rounded at ``_ASSIGN_QSCALE``
     and the exact integer dot is divided by QSCALE² — every emitted
@@ -612,41 +617,19 @@ def _blas_topk_from_combos(combos: DataFrame, k: int, raw: bool) -> DataFrame:
 
     def kernel(batches):
         for pdf in batches:
-            rows: list[tuple[int, int, float]] = []
+            parts = []
             for q_items, d_items in zip(pdf["q_items"], pdf["d_items"]):
                 q_ids, qm = _unpack(q_items)
                 d_ids, dm = _unpack(d_items)
-                sims = qm @ dm.T
-                sims[q_ids[:, None] == d_ids[None, :]] = -np.inf
-                kk = min(k, sims.shape[1])
-                for r in range(sims.shape[0]):
-                    s = sims[r]
-                    if kk < s.shape[0]:
-                        top = np.argpartition(-s, kk - 1)[:kk]
-                        # TIE-AWARE boundary (r12): argpartition picks
-                        # by score alone, but the contract tie-break is
-                        # (score desc, neighbor_id) — at an exact score
-                        # tie on the k-boundary it may keep a higher id
-                        # and drop the lower one. COMMON for quantized
-                        # integer scores (exact-duplicate vectors
-                        # collide exactly). Widen the selection to
-                        # every boundary-score column, then let the
-                        # lexsort cut the true top-k.
-                        thresh = s[top].min()
-                        if np.isfinite(thresh):
-                            top = np.concatenate(
-                                (top[s[top] > thresh],
-                                 np.nonzero(s == thresh)[0])
-                            )
-                    else:
-                        top = np.arange(s.shape[0])
-                    top = top[np.lexsort((d_ids[top], -s[top]))][:kk]
-                    for j in top:
-                        if np.isfinite(s[j]):
-                            # qdot / 2^40 — exact (power-of-two scaling
-                            # of an integer-valued float64)
-                            rows.append((int(q_ids[r]), int(d_ids[j]), float(s[j] / q2)))
-            yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
+                parts.append(
+                    kernels.topk_tiled((qm, dm), q_ids, d_ids, k, _BLAS_BLOCK_BYTES)
+                )
+            q, d, s = (np.concatenate(c) for c in zip(*parts)) if parts else ([],) * 3
+            # qdot / 2^40 — exact (power-of-two scaling of an
+            # integer-valued float64)
+            yield pd.DataFrame(
+                {"query_id": q, "neighbor_id": d, "cosine": np.divide(s, q2)}
+            )
 
     partials = combos.mapInPandas(
         kernel, schema="query_id long, neighbor_id long, cosine double"
@@ -755,7 +738,7 @@ def sign_bucket_pairs_blas(
     import pandas as pd
 
     if n_bits is None:
-        n_bits = sign_bits_for(df.count() if n_docs is None else n_docs)
+        n_bits = sign_bits_for(_row_count(df) if n_docs is None else n_docs)
     base = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).withColumn("bucket", sign_bucket("v", n_bits))
@@ -1083,7 +1066,14 @@ def _lloyd(
                 mv = F.transform(mv, lambda x: x / norm)
             means = _cell_means(subs.join(best, on), ["s", "cid"])
             rows = model_rows(means.select("s", "cid", mv.alias("c")))
-            cent = spark.createDataFrame(rows, "s int, cid long, c array<double>")
+            # the quantized kernel takes the driver-held rows as they are
+            # (``_model_matrix``); a frame of them would be collected back
+            # by one more job per round
+            cent = (
+                [(cid, c) for _, cid, c in rows]
+                if quant
+                else spark.createDataFrame(rows, "s int, cid long, c array<double>")
+            )
     finally:
         pts.unpersist(blocking=False)
     return [
@@ -1318,7 +1308,7 @@ def kmeans_centroids_quant(
 
 def assign_clusters_quant_blas(
     pts: DataFrame,
-    cent: DataFrame,
+    cent: DataFrame | list[tuple],
     id_col: str = "id",
     u_col: str = "u",
     raw: bool = False,
@@ -1345,7 +1335,10 @@ def assign_clusters_quant_blas(
     cluster-width repartition ``_double_base`` would have applied,
     since the caller's ``_unit_vectors`` is skipped. The default
     unit-vector input serves the trainer ``kmeans_centroids_quant_on``,
-    whose point frame is already unit vectors."""
+    whose point frame is already unit vectors.
+
+    ``cent`` is a (cid, c) frame or the same rows already held on the
+    driver (``_lloyd``'s rounds), which the kernel takes with no job."""
     import numpy as np
 
     cids, C = _model_matrix(cent)
@@ -2075,7 +2068,7 @@ def cosine_topk_imi(
     """
     d_half = _half_dim(df, vec_col)
     if k_each is None:
-        k_each = imi_cells_for(df.count())
+        k_each = imi_cells_for(_row_count(df))
     pts = _unit_vectors(df, id_col, vec_col)
     cent1, cent2 = kmeans_centroids_on_halves(
         pts, d_half, k=k_each, n_iter=n_iter
@@ -2495,7 +2488,7 @@ def cosine_topk_ivfpq(
     from pyspark.sql import Window as W
 
     if n_clusters is None:
-        n_clusters = trained_cells_for(df.count())
+        n_clusters = trained_cells_for(_row_count(df))
     pts = _unit_vectors(df, id_col, vec_col)
     # Both trainers (coarse quantizer AND PQ codebooks) run over
     # ``train_df`` when given — a digest sample in the production

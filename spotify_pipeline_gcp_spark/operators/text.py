@@ -13,6 +13,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spotify_pipeline_gcp_spark.operators.dedup import _row_count
+
 # Slice bound for the bigram-instance sorts in ngram_lm_score: ~50
 # transition rows per document at ~40 B each, so 20k docs ≈ 1 M rows
 # ≈ 40 MB per sort slice — in-memory for a task's share of executor
@@ -416,13 +418,15 @@ def ngram_lm_score(
     # it up on the left side; the Zipf-compressed probs side gets the
     # matching small exchange), bounding every sort slice; below the
     # default parallelism the knob is a no-op, so toy scales keep
-    # their plan. The count() probe is metadata-fast on BARE parquet
-    # scans; callers holding a derived/filtered frame pass ``n_docs``
-    # (any upper bound on the doc count works — it only sizes the
-    # slice) so the upstream plan is never re-executed for sizing.
+    # their plan. On a bare Parquet scan the doc count comes from the
+    # file footers with no Spark job (``_row_count``; a ``count()``
+    # there ran a whole ~56 ms job per op on a 4-core box); callers
+    # holding a derived/filtered frame pass ``n_docs`` (any upper bound
+    # on the doc count works — it only sizes the slice) so the
+    # upstream plan is never re-executed for sizing.
     base_par = df.sparkSession.sparkContext.defaultParallelism
     want = math.ceil(
-        (n_docs if n_docs is not None else df.count()) / _BIGRAM_DOCS_PER_TASK
+        (n_docs if n_docs is not None else _row_count(df)) / _BIGRAM_DOCS_PER_TASK
     )
     if want > base_par:
         inst = inst.repartition(want, "w1", "w2")

@@ -11,6 +11,8 @@ computed identically by both engines on (near-)identical doubles.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -27,6 +29,54 @@ def sql_fixed(expr: str, decimals: int = 2) -> str:
     return f"floor(({expr}) * {scale} + 0.5) / {scale}"
 
 
+# Parquet schemas inferred per (application, path, nanosAsLong) with
+# the file state they were inferred from; see ``_read_parquet``.
+_SCHEMAS: dict[tuple, tuple] = {}
+
+
+def _file_state(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file under a local ``path``,
+    sorted; None when the path is not on the local file system."""
+    if "://" in path:
+        return None
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+    if not files:
+        return None
+    state = []
+    for f in files:
+        st = os.stat(f)
+        state.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(state))
+
+
+def _read_parquet(spark, path: str):
+    """``spark.read.parquet(path)`` that infers the schema once.
+
+    Schema inference is a Spark job on every read. The inferred schema
+    is kept per (application id, path, ``nanosAsLong`` setting) with
+    the (name, size, mtime_ns) of every file under the path, and a
+    later read with the same key and file state passes it through
+    ``.schema(...)``, which runs no job. A changed, added or removed
+    file re-infers; a non-local path always infers."""
+    state = _file_state(path)
+    if state is None:
+        return spark.read.parquet(path)
+    key = (
+        spark.sparkContext.applicationId,
+        path,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    cached = _SCHEMAS.get(key)
+    if cached is not None and cached[0] == state:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (state, df.schema)
+    return df
+
+
 def table(spark, sf_dir: str, name: str):
     """Load a testdata table, normalizing physical-type quirks.
 
@@ -39,10 +89,13 @@ def table(spark, sf_dir: str, name: str):
     downstream event-time operator expects; wall-clock values are
     preserved, and the engine session pins UTC). Either way callers
     see a µs TIMESTAMP with identical values to DuckDB's read.
-    """
+
+    Every table's schema is inferred once per session and file state
+    (``_read_parquet``)."""
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path)
         ts_field = dict(df.dtypes).get("ts")
         if ts_field == "bigint":
             df = df.withColumn(
@@ -51,7 +104,7 @@ def table(spark, sf_dir: str, name: str):
         elif ts_field == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, path)
 
 
 def sql_word_ngrams(n: int, toks: str = "toks") -> str:

@@ -84,7 +84,7 @@ _U_CTE = """u AS (
 # fixed-point fold cosine of the raw embeddings of a and b
 _FOLD_COS = sql_fixed(f"{DOT_AB} / ({NORM.format('a')} * {NORM.format('b')})", 6)
 
-# pinned 4-bit sign-bucket code (qs3/qs5/qs6)
+# pinned 4-bit sign-bucket code (qs3/qs5/qs6/qs21)
 _SIGN4 = """((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
             + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
             + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
@@ -2052,14 +2052,6 @@ def qs20_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AUDIT_BUCKET = (
-    "((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)"
-    " + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)"
-    " + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)"
-    " + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END))::BIGINT"
-)
-
-
 def _recall_at5(same: str, q_from: str) -> str:
     """The recall-audit tail of qs21 and qs29: exact vs
     ``same``-restricted top-5 per query over ``pairs``, and the
@@ -2228,7 +2220,7 @@ def qs29_imi_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "qs21_ann_recall_audit",
     oracle=f"""
     WITH q AS (
-      SELECT vec_id, embedding, {_AUDIT_BUCKET} AS bucket FROM (
+      SELECT vec_id, embedding, {_SIGN4} AS bucket FROM (
         SELECT vec_id, embedding
         FROM embeddings WHERE label % 10 = 0
         ORDER BY md5('aud:' || vec_id::VARCHAR) LIMIT 64
@@ -2238,7 +2230,7 @@ def qs29_imi_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT count(*)::BIGINT AS n FROM embeddings WHERE label % 10 <> 0
     ),
     c AS (
-      SELECT vec_id, embedding, {_AUDIT_BUCKET} AS bucket FROM (
+      SELECT vec_id, embedding, {_SIGN4} AS bucket FROM (
         SELECT vec_id, embedding, md5('audc:' || vec_id::VARCHAR) AS _d
         FROM embeddings WHERE label % 10 <> 0
       ) WHERE ({_IVF_UNIT_FOLD}) / 4294967296.0

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import json
+import uuid
 
 import pytest
 
@@ -16,6 +17,19 @@ def spark(tmp_path_factory):
         extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield s
+
+
+def jobs_run(spark, action) -> int:
+    """Spark jobs ``action()`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _track(

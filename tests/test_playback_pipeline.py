@@ -7,7 +7,6 @@ Each behavior cites the reference it mirrors; deliberate improvements
 from __future__ import annotations
 
 import json
-import uuid
 
 from spotify_pipeline_gcp_spark.operators.playback import (
     build_playback_hist,
@@ -26,7 +25,7 @@ from spotify_pipeline_gcp_spark.schemas import (
 )
 from spotify_pipeline_gcp_spark.sinks.writers import write_parquet
 from spotify_pipeline_gcp_spark.sources.readers import read_json
-from tests.conftest import playback_doc
+from tests.conftest import jobs_run, playback_doc
 
 
 def test_parse_albums_contract_and_year_padding(raw_playback):
@@ -115,19 +114,6 @@ def test_curate_adds_audit_and_date_cast(raw_playback):
     assert curate(hist).count() == hist.count()
 
 
-def _jobs_run(spark, action) -> int:
-    """Spark jobs ``action()`` launches, counted under its own job group."""
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_clean_zone_job_counts(spark, raw_playback, tmp_path):
     # a landing day's glob past Spark's default listing threshold (32
     # paths) is listed on the driver: the read itself runs no job
@@ -136,7 +122,7 @@ def test_clean_zone_job_counts(spark, raw_playback, tmp_path):
     for u in range(40):
         (day / f"user_{u}.json").write_text(json.dumps(playback_doc()))
     glob = str(day / "user_*.json")
-    assert _jobs_run(spark, lambda: read_json(spark, glob, PLAYBACK_DOC)) == 0
+    assert jobs_run(spark, lambda: read_json(spark, glob, PLAYBACK_DOC)) == 0
     # the three clean tables: one shuffle per dimension's distinct, and
     # the fact's aggregate + range sort (its sample, shuffle and write)
     tables = run_clean_zone(raw_playback)
@@ -145,4 +131,4 @@ def test_clean_zone_job_counts(spark, raw_playback, tmp_path):
         for name, df in tables.items():
             write_parquet(df, str(tmp_path / "clean" / name))
 
-    assert _jobs_run(spark, write_all) <= 8
+    assert jobs_run(spark, write_all) <= 8

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -655,3 +656,114 @@ def test_simhash_sizing_replays_in_sql_at_any_scale(n):
         f"SELECT {w_sql} AS w FROM (SELECT {n}::BIGINT AS n)"
     ).fetchone()
     assert 4 * row[0] == simhash_bits_for(n)
+
+
+def _topk_loop(sims, q_ids, d_ids, k):
+    """The per-query-row top-k loop ``kernels.topk_tiled`` replaced,
+    kept as its reference: (query_id, neighbor_id, score) tuples."""
+    sims = np.array(sims, dtype="float64")
+    sims[q_ids[:, None] == d_ids[None, :]] = -np.inf
+    kk = min(k, sims.shape[1])
+    rows = []
+    for r in range(sims.shape[0]):
+        s = sims[r]
+        if kk < s.shape[0]:
+            top = np.argpartition(-s, kk - 1)[:kk]
+            thresh = s[top].min()
+            if np.isfinite(thresh):
+                top = np.concatenate(
+                    (top[s[top] > thresh], np.nonzero(s == thresh)[0])
+                )
+        else:
+            top = np.arange(s.shape[0])
+        top = top[np.lexsort((d_ids[top], -s[top]))][:kk]
+        for j in top:
+            if np.isfinite(s[j]):
+                rows.append((int(q_ids[r]), int(d_ids[j]), float(s[j])))
+    return rows
+
+
+@st.composite
+def _topk_case(draw):
+    """Tie-heavy integer scores with NaN rows and columns (zero
+    vectors), ±inf entries and shared query/neighbor ids (self-pairs),
+    as a score matrix or as the (qm, dm) blocks that score it."""
+    n_q, n_d = draw(st.integers(0, 7)), draw(st.integers(0, 7))
+
+    def ids(n):
+        return np.array(
+            draw(st.lists(st.integers(0, 9), min_size=n, max_size=n, unique=True)),
+            dtype="int64",
+        )
+
+    def some(n):  # the rows or columns set to NaN
+        return draw(st.lists(st.integers(0, n - 1), max_size=2)) if n else []
+
+    def matrix(rows, cols, cell):
+        return np.array(
+            [[draw(cell) for _ in range(cols)] for _ in range(rows)], dtype="float64"
+        ).reshape(rows, cols)
+
+    q_ids, d_ids = ids(n_q), ids(n_d)
+    if draw(st.booleans()):
+        dim = draw(st.integers(1, 3))
+        qm = matrix(n_q, dim, st.integers(-1, 1))
+        dm = matrix(n_d, dim, st.integers(-1, 1))
+        qm[some(n_q)] = np.nan
+        dm[some(n_d)] = np.nan
+        return (qm, dm), qm @ dm.T, q_ids, d_ids
+    sims = matrix(n_q, n_d, st.sampled_from([-1.0, 0.0, 1.0, 2.0, -np.inf, np.inf]))
+    sims[some(n_q)] = np.nan
+    sims[:, some(n_d)] = np.nan
+    return sims, sims, q_ids, d_ids
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    case=_topk_case(),
+    k=st.integers(1, 9),
+    budget=st.sampled_from([1, 8, 24, 1 << 20]),
+)
+@example(  # one exact tie across the k-boundary, the first of them a self-pair
+    case=(
+        np.array([[1.0, 1.0, 1.0, 0.0]]),
+        np.array([[1.0, 1.0, 1.0, 0.0]]),
+        np.array([2]),
+        np.array([2, 5, 3, 1]),
+    ),
+    k=1,
+    budget=8,
+)
+def test_topk_tiled_matches_per_row_loop(case, k, budget):
+    # kernels.topk_tiled against the loop it replaced: same rows in the
+    # same order, for both inputs (a score matrix, or blocks it scores
+    # tile by tile), k below, at and above the neighbor count, and
+    # budgets from one-row tiles to one tile for the whole block
+    from spotify_pipeline_gcp_spark.operators import kernels
+
+    given_, sims, q_ids, d_ids = case
+    got = kernels.topk_tiled(given_, q_ids, d_ids, k, budget)
+    assert [a.dtype.kind for a in got] == ["i", "i", "f"]
+    assert list(zip(*[a.tolist() for a in got])) == _topk_loop(sims, q_ids, d_ids, k)
+
+
+def test_row_tiles_bound_and_cover():
+    # the tile planner: every query row in exactly one tile, in order,
+    # and no tile's float64 score slab above the budget unless a single
+    # row is already wider than it (then each row is its own tile)
+    from spotify_pipeline_gcp_spark.operators.kernels import row_tiles
+
+    for n_q in range(0, 40):
+        for n_d in range(0, 40, 3):
+            for budget in (1, 8, 64, 200, 1000, 32 << 20):
+                tiles = row_tiles(n_q, n_d, budget)
+                assert [r for a, b in tiles for r in range(a, b)] == list(range(n_q))
+                for a, b in tiles:
+                    assert b > a
+                    if 8 * n_d <= budget:
+                        assert (b - a) * n_d * 8 <= budget
+                    else:
+                        assert b - a == 1
+                # tiles are as large as the budget allows
+                if 0 < 8 * n_d <= budget and len(tiles) > 1:
+                    assert (tiles[0][1] - tiles[0][0] + 1) * n_d * 8 > budget
