@@ -18,3 +18,15 @@ Design principles (see SURVEY.md):
 """
 
 __version__ = "0.1.0"
+
+
+def _on_worker_import() -> None:
+    from pyspark.core.files import SparkFiles
+
+    if SparkFiles._is_running_on_worker:
+        from spotify_pipeline_gcp_spark.pyfiles import reuse_zip_directories
+
+        reuse_zip_directories()
+
+
+_on_worker_import()

@@ -35,9 +35,17 @@ def matrix(vectors) -> np.ndarray:
 
 def unpack(items) -> tuple[np.ndarray, np.ndarray]:
     """(ids int64, float64 matrix) from one packed
-    ``collect_list(struct(id, v))`` cell."""
-    ids = np.fromiter((r["id"] for r in items), dtype="int64", count=len(items))
-    return ids, matrix([r["v"] for r in items])
+    ``collect_list(struct(id, v))`` cell, given as the Arrow struct
+    array of its items (``mapInArrow``). The columns are read whole,
+    with no per-item Python object; every vector must be non-null and
+    of one length, and ids non-null."""
+    ids, vecs = items.flatten()
+    lens = np.diff(vecs.offsets.to_numpy())
+    d = int(lens[0]) if len(lens) else 0
+    if ids.null_count or vecs.null_count or (lens != d).any():
+        raise ValueError("packed items need non-null ids and equal-length vectors")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return ids.to_numpy().astype("int64"), flat.astype("float64").reshape(len(ids), d)
 
 
 def unit_rows(mat: np.ndarray) -> np.ndarray:

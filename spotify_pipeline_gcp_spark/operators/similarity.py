@@ -605,7 +605,7 @@ def _blas_topk_from_combos(combos: DataFrame, k: int, raw: bool) -> DataFrame:
     ``_unit_vectors`` (``kernels.unit_rows``); False — unit vectors
     the JVM fold already normalized (qs8's fold-assigned cells)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import Window as W
 
     ensure_package_on_workers(combos.sparkSession)
@@ -616,22 +616,23 @@ def _blas_topk_from_combos(combos: DataFrame, k: int, raw: bool) -> DataFrame:
         return ids, kernels.quantize(kernels.unit_rows(mat) if raw else mat)
 
     def kernel(batches):
-        for pdf in batches:
-            parts = []
-            for q_items, d_items in zip(pdf["q_items"], pdf["d_items"]):
-                q_ids, qm = _unpack(q_items)
-                d_ids, dm = _unpack(d_items)
+        for batch in batches:
+            parts = [(np.zeros(0, "int64"), np.zeros(0, "int64"), np.zeros(0))]
+            for q_items, d_items in zip(batch.column("q_items"), batch.column("d_items")):
+                q_ids, qm = _unpack(q_items.values)
+                d_ids, dm = _unpack(d_items.values)
                 parts.append(
                     kernels.topk_tiled((qm, dm), q_ids, d_ids, k, _BLAS_BLOCK_BYTES)
                 )
-            q, d, s = (np.concatenate(c) for c in zip(*parts)) if parts else ([],) * 3
+            q, d, s = (np.concatenate(c) for c in zip(*parts))
             # qdot / 2^40 — exact (power-of-two scaling of an
             # integer-valued float64)
-            yield pd.DataFrame(
-                {"query_id": q, "neighbor_id": d, "cosine": np.divide(s, q2)}
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q), pa.array(d), pa.array(s / q2)],
+                names=["query_id", "neighbor_id", "cosine"],
             )
 
-    partials = combos.mapInPandas(
+    partials = combos.mapInArrow(
         kernel, schema="query_id long, neighbor_id long, cosine double"
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
@@ -735,7 +736,7 @@ def sign_bucket_pairs_blas(
     search kernels.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     if n_bits is None:
         n_bits = sign_bits_for(_row_count(df) if n_docs is None else n_docs)
@@ -749,31 +750,28 @@ def sign_bucket_pairs_blas(
     q2 = float(_ASSIGN_QSCALE) ** 2
 
     def kernel(batches):
-        for pdf in batches:
-            rows: list[tuple[int, int, float]] = []
-            for items in pdf["items"]:
-                m = len(items)
-                if m < 2:
+        for batch in batches:
+            parts = [(np.zeros(0, "int64"), np.zeros(0, "int64"), np.zeros(0))]
+            for items in batch.column("items"):
+                if len(items.values) < 2:
                     continue
-                ids, mat = kernels.unpack(items)
+                ids, mat = kernels.unpack(items.values)
                 qm = kernels.quantize(kernels.unit_rows(mat))
                 sims = (qm @ qm.T) / q2
-                iu, ju = np.triu_indices(m, k=1)
+                iu, ju = np.triu_indices(len(ids), k=1)
                 keep = sims[iu, ju] >= threshold
                 ia, ib = ids[iu[keep]], ids[ju[keep]]
                 # bucket member order is collect_list order, not id
                 # order — normalize each pair to (min, max) by VALUE
-                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                vals = sims[iu[keep], ju[keep]]
-                rows.extend(
-                    (int(a), int(b), float(s))
-                    for a, b, s in zip(lo, hi, vals)
+                parts.append(
+                    (np.minimum(ia, ib), np.maximum(ia, ib), sims[iu[keep], ju[keep]])
                 )
-            yield pd.DataFrame(
-                rows, columns=["id_a", "id_b", "cosine_q"]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(c)) for c in zip(*parts)],
+                names=["id_a", "id_b", "cosine_q"],
             )
 
-    return packed.mapInPandas(
+    return packed.mapInArrow(
         kernel, schema="id_a long, id_b long, cosine_q double"
     )
 

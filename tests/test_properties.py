@@ -767,3 +767,35 @@ def test_row_tiles_bound_and_cover():
                 # tiles are as large as the budget allows
                 if 0 < 8 * n_d <= budget and len(tiles) > 1:
                     assert (tiles[0][1] - tiles[0][0] + 1) * n_d * 8 > budget
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    vecs=st.lists(
+        st.lists(st.floats(-1e3, 1e3, width=32), min_size=3, max_size=3),
+        min_size=0,
+        max_size=6,
+    ),
+    pad=st.integers(0, 3),
+)
+def test_arrow_unpack_matches_per_item_stack(vecs, pad):
+    # kernels.unpack reads a packed collect_list(struct(id, v)) cell as
+    # whole Arrow columns; it must give the per-item stack's ids and
+    # float64 matrix, also for a cell sliced out of a longer list column
+    # (the offsets of a batch's row), and refuse ragged or NULL vectors
+    import pyarrow as pa
+
+    from spotify_pipeline_gcp_spark.operators import kernels
+
+    item = pa.struct([("id", pa.int64()), ("v", pa.list_(pa.float32()))])
+    cell = [{"id": 10 + i, "v": v} for i, v in enumerate(vecs)]
+    col = pa.array([[{"id": 0, "v": [0.0] * 2}]] * pad + [cell], pa.list_(item))
+    ids, mat = kernels.unpack(col[pad].values)
+    assert ids.dtype == "int64" and ids.tolist() == [10 + i for i in range(len(vecs))]
+    want = np.array(vecs, dtype="float32").astype("float64").reshape(len(vecs), -1 if vecs else 0)
+    assert mat.dtype == "float64" and mat.shape == want.shape
+    assert mat.tobytes() == want.tobytes()
+    for bad in ([1.0, 2.0] if vecs else None, None):
+        ragged = pa.array([cell + [{"id": 99, "v": bad}]], pa.list_(item))
+        with pytest.raises(ValueError, match="equal-length"):
+            kernels.unpack(ragged[0].values)

@@ -211,6 +211,17 @@ def test_ngram_lm_score_planted(spark):
     assert out[4].lm_score == 0.25
 
 
+def test_ngram_lm_score_degenerate_docs_excluded(spark):
+    from spotify_pipeline_gcp_spark.operators.text import ngram_lm_score
+
+    # documents with fewer than two tokens have no transitions: empty,
+    # whitespace-only, NULL and one-token texts are all left out, and
+    # they add nothing to the counts of the others
+    rows = [(1, "a b"), (2, ""), (3, " \t "), (4, None), (5, "solo"), (6, " a ")]
+    out = ngram_lm_score(_docs(spark, rows), "doc_id", "text").collect()
+    assert [(r.doc_id, r.n_bigrams, r.sum_q) for r in out] == [(1, 1, 1_000_000)]
+
+
 def test_ngram_lm_score_typical_beats_atypical(spark):
     from spotify_pipeline_gcp_spark.operators.text import ngram_lm_score
 
