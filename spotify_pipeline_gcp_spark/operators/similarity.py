@@ -785,6 +785,9 @@ def sign_bucket_pairs_blas(
 # overflow; the 5e-10 quantization error on the mean is far below the
 # 1e-6 fixed-point rounding every oracle output applies.
 _QSCALE = 10**9
+# decimal digits ADC scores (pq_adc_topk, cosine_topk_ivfpq) are
+# fixed-point rounded to before ranking — the cut the oracles replay
+_ADC_DIGITS = 6
 
 
 def _cell_means(
@@ -1879,7 +1882,6 @@ def cosine_topk_kmeans_blas(
     n_clusters: int = 8,
     n_iter: int = 2,
     n_sub: int | None = None,
-    train_df: DataFrame | None = None,
     blas_assign: bool = False,
     cent: DataFrame | None = None,
 ) -> DataFrame:
@@ -1895,11 +1897,9 @@ def cosine_topk_kmeans_blas(
     QUANTIZED-EXACT kernel (``_blas_topk_from_combos``) — integer
     dots of 2^20-rounded unit vectors, bit-replayable by the oracle;
     ``cosine_topk_kmeans`` is the raw-float exactness twin over the
-    SAME cells. ``train_df`` (a digest sample in the production
-    shape — qs23) restricts the trainer's input; assignment and
-    search stay full-corpus. ``cent`` accepts a PRE-TRAINED centroid
-    frame (the train-once-serve-many split; qs23 passes the memoized
-    shared 'ivf:' model).
+    SAME cells. ``cent`` accepts a PRE-TRAINED centroid frame (the
+    train-once-serve-many split; qs23 passes the memoized shared
+    'ivf:' model); without it the centroids train on ``df``.
 
     ``blas_assign`` moves the n·k assignment scoring into the
     quantized dgemm (``_assign_raw_quant``) — with k = √n cells the
@@ -1912,13 +1912,7 @@ def cosine_topk_kmeans_blas(
     the cells come from the fold ``assign_clusters`` (qs8's shape),
     whose unit vectors the search kernel only rounds."""
     if cent is None:
-        cent = kmeans_centroids(
-            train_df if train_df is not None else df,
-            id_col,
-            vec_col,
-            k=n_clusters,
-            n_iter=n_iter,
-        )
+        cent = kmeans_centroids(df, id_col, vec_col, k=n_clusters, n_iter=n_iter)
     if blas_assign:
         asg = _assign_raw_quant(
             df, id_col, vec_col, {"bucket": (cent, slice(None))}
@@ -2179,7 +2173,6 @@ def pq_adc_topk(
     m: int,
     d_sub: int,
     k_neighbors: int = 3,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: score(q, x) = Σ_s
     dot(q_s, c[s, code_s(x)]) — the query stays full-precision, the
@@ -2224,9 +2217,8 @@ def pq_adc_topk(
         F.lit(0).cast("long"),
     )
     adc = F.col("adc_l").cast("double") / F.lit(float(_QSCALE))
-    rounded = F.floor(
-        adc * F.lit(float(10**round_digits)) + F.lit(0.5)
-    ) / F.lit(float(10**round_digits))
+    scale = F.lit(float(10**_ADC_DIGITS))
+    rounded = F.floor(adc * scale + F.lit(0.5)) / scale
     w = W.partitionBy("query_id").orderBy(
         F.col("adc_r").desc(), F.col("neighbor_id")
     )
@@ -2317,7 +2309,6 @@ def _ivfpq_gather_topk(
     qtab: DataFrame,
     cand: DataFrame,
     k_neighbors: int,
-    round_digits: int,
 ) -> DataFrame:
     """Per-cell cogroup + int64 table-gather ADC top-k (the
     ``gather_kernel=True`` tail of ``cosine_topk_ivfpq``; see that
@@ -2334,7 +2325,7 @@ def _ivfpq_gather_topk(
     import pandas as pd
 
     qscale = float(_QSCALE)
-    rd = float(10**round_digits)
+    rd = float(10**_ADC_DIGITS)
     k = k_neighbors
 
     def _score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -2425,8 +2416,6 @@ def cosine_topk_ivfpq(
     d_sub: int = 16,
     k_pq: int = 16,
     n_iter: int = 2,
-    round_digits: int = 6,
-    train_df: DataFrame | None = None,
     gather_kernel: bool = False,
     cent: DataFrame | None = None,
     books: list[DataFrame] | None = None,
@@ -2488,20 +2477,11 @@ def cosine_topk_ivfpq(
     if n_clusters is None:
         n_clusters = trained_cells_for(_row_count(df))
     pts = _unit_vectors(df, id_col, vec_col)
-    # Both trainers (coarse quantizer AND PQ codebooks) run over
-    # ``train_df`` when given — a digest sample in the production
-    # shape (qs19), keeping trainer cost O(sample·k) while encoding
-    # and assignment stay full-corpus. Default: train on the corpus.
-    tpts = (
-        _unit_vectors(train_df, id_col, vec_col)
-        if train_df is not None
-        else pts
-    )
     # ``cent``/``books`` accept a PRE-TRAINED model (the FAISS serving
     # split: train once, search many — qs19/qs27 share one memoized
-    # 'ivfpq:' model this way); when absent, train here on ``tpts``.
+    # 'ivfpq:' model this way); when absent, train here on the corpus.
     if cent is None:
-        cent = kmeans_centroids_on(tpts, k=n_clusters, n_iter=n_iter)
+        cent = kmeans_centroids_on(pts, k=n_clusters, n_iter=n_iter)
     # ``asg``/``codes`` accept PRE-COMPUTED corpus state (id, cid) /
     # (id, codes) — the store-served split (qs19b): assignment and
     # encoding happen ONCE at store build; serving injects them here
@@ -2512,7 +2492,7 @@ def cosine_topk_ivfpq(
         asg = pts.join(asg.withColumnRenamed("id", "_aid"),
                        F.col("id") == F.col("_aid")).select("id", "u", "cid")
     if books is None:
-        books = pq_codebooks(tpts, m=m, d_sub=d_sub, k_pq=k_pq, n_iter=n_iter)
+        books = pq_codebooks(pts, m=m, d_sub=d_sub, k_pq=k_pq, n_iter=n_iter)
     if codes is None:
         codes = pq_encode(pts, books, m=m, d_sub=d_sub)
     # per-point quantized lookup table as ONE projection over the
@@ -2528,7 +2508,7 @@ def cosine_topk_ivfpq(
         asg.select("id", F.col("cid").alias("cell")), "id"
     ).select(F.col("id").alias("neighbor_id"), "cell", "codes")
     if gather_kernel:
-        return _ivfpq_gather_topk(qtab, cand, k_neighbors, round_digits)
+        return _ivfpq_gather_topk(qtab, cand, k_neighbors)
     # one equi-join on the coarse cell; ADC is an inline sum on the
     # pair row, UNROLLED over the m literal sub-quantizers — plain
     # scalar codegen (two element_at per term), no zip_with
@@ -2546,9 +2526,8 @@ def cosine_topk_ivfpq(
         F.lit(0).cast("long"),
     )
     adc = F.col("adc_l").cast("double") / F.lit(float(_QSCALE))
-    rounded = F.floor(
-        adc * F.lit(float(10**round_digits)) + F.lit(0.5)
-    ) / F.lit(float(10**round_digits))
+    scale = F.lit(float(10**_ADC_DIGITS))
+    rounded = F.floor(adc * scale + F.lit(0.5)) / scale
     # (cell, query_id) clustering is already satisfied by the join's
     # hash-partitioning on cell (query→cell is functional), so this
     # window exchanges NOTHING — per-partition sort only; rank equals
@@ -2620,7 +2599,6 @@ def cosine_topk_imi_multiprobe_blas(
     k_each: int = 4,
     n_iter: int = 2,
     nprobe_each: int = 2,
-    train_df: DataFrame | None = None,
     cents: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Multiprobe IMI at BLAS throughput — the last cell of the
@@ -2650,11 +2628,8 @@ def cosine_topk_imi_multiprobe_blas(
     if cents is not None:
         cent1, cent2 = cents
     else:
-        tpts = _unit_vectors(
-            train_df if train_df is not None else df, id_col, vec_col
-        )
         cent1, cent2 = kmeans_centroids_on_halves(
-            tpts, h, k=k_each, n_iter=n_iter
+            _unit_vectors(df, id_col, vec_col), h, k=k_each, n_iter=n_iter
         )
     # ONE scoring pass total (r14 — the qs28 stageprof attributed
     # ~280 s of the 377.8 s rung row to THREE fold scoring chains):
@@ -2701,12 +2676,11 @@ def cosine_topk_imi_blas(
     vec_col: str = "embedding",
     k_each: int = 4,
     n_iter: int = 2,
-    train_df: DataFrame | None = None,
     cents: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """The search-sized IMI at BLAS throughput — ``cosine_topk_imi``'s
-    model (same half-quantizer trainer, so with the same ``train_df``
-    the trained centroids are IDENTICAL) searched with the
+    model (same half-quantizer trainer, so over the same points the
+    trained centroids are IDENTICAL) searched with the
     bucket-packed Arrow/NumPy matmul kernel instead of the codegen
     fold: each product cell (~256 vectors at the search sizing) packs
     into one block that scores against itself in a single dgemm — no
@@ -2735,11 +2709,8 @@ def cosine_topk_imi_blas(
         # split; qs26 passes the memoized 'imi:' model here)
         cent1, cent2 = cents
     else:
-        tpts = _unit_vectors(
-            train_df if train_df is not None else df, id_col, vec_col
-        )
         cent1, cent2 = kmeans_centroids_on_halves(
-            tpts, h, k=k_each, n_iter=n_iter
+            _unit_vectors(df, id_col, vec_col), h, k=k_each, n_iter=n_iter
         )
     asg = _assign_raw_quant(
         df,

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from spotify_pipeline_gcp_spark.operators.kernels import QSCALE
+
 
 def fixed(c: Column, decimals: int = 2) -> Column:
     """Deterministic fixed-point rounding (Spark side)."""
@@ -118,6 +120,46 @@ def sql_word_ngrams(n: int, toks: str = "toks") -> str:
         f"list_transform(generate_series(1, len({toks}) - {n - 1}), "
         f"i -> {join}) ELSE []::VARCHAR[] END"
     )
+
+
+# The export gate's candidate filters, shared by the batch (qp5) and
+# streaming (qst6) oracles over their `feats` and deduplicated `dd`
+# rows: `q` keeps documents of >= 10 tokens whose word 3-grams repeat
+# at most 20%; `bad` holds the documents sharing a word 4-gram with
+# the benchmark source src0.
+EXPORT_QUALITY_SQL = """q AS (
+      SELECT doc_id, source, toks, digest, n_tokens FROM feats
+      WHERE n_tokens >= 10
+        AND (CASE WHEN len(g3) > 0
+                  THEN (len(g3) - len(list_distinct(g3))) / len(g3)
+                  ELSE 0.0 END) <= 0.2
+    )"""
+EXPORT_DECONTAM_SQL = f"""bt AS (
+      SELECT list_filter(string_split(regexp_replace(text, '\\s', ' ', 'g'), ' '),
+                         x -> x <> '') AS toks
+      FROM documents WHERE source = 'src0'
+    ),
+    bg AS (
+      SELECT DISTINCT unnest(list_distinct({sql_word_ngrams(4)})) AS gram FROM bt
+    ),
+    cg AS (
+      SELECT doc_id, unnest(list_distinct({sql_word_ngrams(4)})) AS gram FROM dd
+    ),
+    bad AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (gram))"""
+
+# The digest fold of the hash-sampling oracles: the first 8 hex digits
+# of a salted md5 column `_d` as an exact integer; divided by 2^32 it
+# is the row's uniform [0, 1) draw in both engines.
+UNIT_FOLD = " + ".join(
+    f"(strpos('0123456789abcdef', substring(_d, {j + 1}, 1)) - 1)"
+    f" * {16 ** (7 - j)}::BIGINT"
+    for j in range(8)
+)
+
+# The fixed-point scale of every quantized dot (operators/kernels.py::
+# QSCALE): unit vectors rounded half up at 2^20 have integer dots that
+# are exact in float64 under any summation order.
+QA = float(QSCALE)
 
 
 # Index-sizing arithmetic every auto-sized sign-bucket oracle mirrors:

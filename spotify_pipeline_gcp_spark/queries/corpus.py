@@ -13,7 +13,12 @@ from spotify_pipeline_gcp_spark.operators.sampling import (
     fraction_to_hex_threshold,
 )
 from spotify_pipeline_gcp_spark.queries import register
-from spotify_pipeline_gcp_spark.queries.compat import table
+from spotify_pipeline_gcp_spark.queries.compat import (
+    EXPORT_DECONTAM_SQL,
+    EXPORT_QUALITY_SQL,
+    sql_word_ngrams,
+    table,
+)
 
 _T80 = fraction_to_hex_threshold(0.8)
 _T90 = fraction_to_hex_threshold(0.9)
@@ -200,12 +205,6 @@ def qp4_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared with every gram-replaying oracle (queries/compat.py)
-from spotify_pipeline_gcp_spark.queries.compat import (  # noqa: E402
-    sql_word_ngrams as _qp5_ngrams,
-)
-
-
 @register(
     "qp5_export_manifest",
     oracle=f"""
@@ -219,32 +218,15 @@ from spotify_pipeline_gcp_spark.queries.compat import (  # noqa: E402
     feats AS (
       SELECT doc_id, source, toks, digest,
              len(toks)::BIGINT AS n_tokens,
-             {_qp5_ngrams(3)} AS g3
+             {sql_word_ngrams(3)} AS g3
       FROM base
     ),
-    q AS (
-      SELECT doc_id, source, toks, digest, n_tokens FROM feats
-      WHERE n_tokens >= 10
-        AND (CASE WHEN len(g3) > 0
-                  THEN (len(g3) - len(list_distinct(g3))) / len(g3)
-                  ELSE 0.0 END) <= 0.2
-    ),
+    {EXPORT_QUALITY_SQL},
     dd AS (
       SELECT * FROM q
       WHERE doc_id IN (SELECT min(doc_id) FROM q GROUP BY digest)
     ),
-    bt AS (
-      SELECT list_filter(string_split(regexp_replace(text, '\\s', ' ', 'g'), ' '),
-                         x -> x <> '') AS toks
-      FROM documents WHERE source = 'src0'
-    ),
-    bg AS (
-      SELECT DISTINCT unnest(list_distinct({_qp5_ngrams(4)})) AS gram FROM bt
-    ),
-    cg AS (
-      SELECT doc_id, unnest(list_distinct({_qp5_ngrams(4)})) AS gram FROM dd
-    ),
-    bad AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (gram)),
+    {EXPORT_DECONTAM_SQL},
     clean AS (
       SELECT * FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM bad)
     )

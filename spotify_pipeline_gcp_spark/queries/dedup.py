@@ -12,19 +12,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spotify_pipeline_gcp_spark.operators.dedup import (
+    _row_count,
     dedup_components,
+    duplicated_spans,
     exact_dedup,
     exact_dedup_groups,
+    keep_best_per_cluster,
     minhash_lsh_pairs,
+    minhash_lsh_pairs_incremental,
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
+    simhash_bits_for,
     simhash_pairs,
+    simhash_recall_audit,
 )
+from spotify_pipeline_gcp_spark.operators.text import quality_score
 from spotify_pipeline_gcp_spark.queries import register
 from spotify_pipeline_gcp_spark.queries.compat import (
+    QA,
     SIZED_BITS_SQL,
     SIZED_BUCKET_CAP,
+    UNIT_FOLD,
+    fixed,
     table,
 )
 
@@ -33,56 +43,244 @@ from spotify_pipeline_gcp_spark.queries.compat import (
 # qd14's inline comment). Below it the spool is pure fixed overhead.
 _SPOOL_MIN_DOCS = 100_000
 
-# Shared oracle CTEs for word-3-shingles (1-based list indexing).
-SHINGLE_CTE = """
-  tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-  shingle AS (
-    SELECT DISTINCT doc_id,
-           unnest(list_transform(range(1, len(t) - 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-    FROM tok WHERE len(t) >= 3
-  )
-"""
 
-JACCARD_CTE = f"""
-  {SHINGLE_CTE},
-  sizes AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM shingle GROUP BY doc_id),
-  common AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_common
-    FROM shingle a JOIN shingle b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ),
-  jac AS (
-    SELECT doc_a, doc_b,
+def _indent(sql: str, pad: str) -> str:
+    """``sql``, written at the oracles' 4-space base like every CTE
+    below, with its continuation lines re-based to ``pad``."""
+    return sql.replace("\n    ", "\n" + pad)
+
+
+def _shingle_ctes(tok: str = "tok", sh: str = "shingle", src: str = "documents") -> str:
+    """Word-3 shingles of ``src`` (1-based list indexing): token lists
+    ``tok`` and distinct (doc_id, shingle) rows ``sh`` — the oracle
+    side of ``operators/dedup.py::shingles``."""
+    return f"""{tok} AS (SELECT doc_id, string_split(text, ' ') AS t FROM {src}),
+    {sh} AS (
+      SELECT DISTINCT doc_id,
+             unnest(list_transform(range(1, len(t) - 1),
+                                   i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
+      FROM {tok} WHERE len(t) >= 3
+    )"""
+
+
+# the closing ratio of exact Jaccard over `sizes` and `common`
+_JAC_SELECT = """SELECT doc_a, doc_b,
            n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common) AS jaccard
     FROM common
     JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-  )
-"""
+    JOIN sizes sb ON sb.doc_id = doc_b"""
 
 
-JACCARD_CAPPED_CTE = f"""
-  {SHINGLE_CTE},
-  hot AS (SELECT shingle FROM shingle GROUP BY shingle HAVING count(*) > 4),
-  kept AS (
-    SELECT s.doc_id, s.shingle
-    FROM shingle s ANTI JOIN hot h ON s.shingle = h.shingle
-  ),
-  sizes AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM kept GROUP BY doc_id),
-  common AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_common
-    FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ),
-  jac AS (
-    SELECT doc_a, doc_b,
-           n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-    FROM common
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-  )
-"""
+def _jaccard_ctes(capped: bool = False, jac: bool = True) -> str:
+    """Exact Jaccard over the `shingle` rows: per-doc set sizes, pair
+    overlaps and (``jac``) the ratio. ``capped`` first drops every
+    shingle held by more than 4 documents (`hot`, `kept`) — the
+    ``max_shingle_df=4`` cap of ``ngram_jaccard_pairs``."""
+    cap = """hot AS (SELECT shingle FROM shingle GROUP BY shingle HAVING count(*) > 4),
+    kept AS (
+      SELECT s.doc_id, s.shingle
+      FROM shingle s ANTI JOIN hot h ON s.shingle = h.shingle
+    ),
+    """ if capped else ""
+    src = "kept" if capped else "shingle"
+    out = f"""{cap}sizes AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM {src} GROUP BY doc_id),
+    common AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_common
+      FROM {src} a JOIN {src} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+    if jac:
+        out += f",\n    jac AS (\n      {_indent(_JAC_SELECT, '      ')}\n    )"
+    return out
+
+
+# The shared prefixes at a 2-space base: word-3 shingles, then exact
+# Jaccard (`jac`) over all of them or over the capped ones.
+SHINGLE_CTE = f"\n  {_indent(_shingle_ctes(), '  ')}\n"
+JACCARD_CTE = f"\n  {SHINGLE_CTE},\n  {_indent(_jaccard_ctes(), '  ')}\n"
+JACCARD_CAPPED_CTE = f"\n  {SHINGLE_CTE},\n  {_indent(_jaccard_ctes(capped=True), '  ')}\n"
+
+# The sliced MinHash family (``operators/dedup.py::_minhash_wide_sliced``):
+# hash ``seed`` of a shingle is 32-bit word ``seed % 4`` of its md5
+# salted 'a:' (seeds 0-3) or 'b:' (seeds 4-7), as 8 hex digits.
+_SLICED_WORD = """substr(md5((CASE WHEN seed < 4 THEN 'a:' ELSE 'b:' END) || shingle),
+                    ((seed % 4) * 8 + 1)::INT, 8)"""
+_SEEDS = "CROSS JOIN (SELECT unnest(range(8)) AS seed)"
+
+
+def _sig_cte(name: str, sh: str) -> str:
+    """CTE ``name``: the 8 MinHash values of each document of ``sh``."""
+    return f"""{name} AS (
+      SELECT doc_id, seed,
+             min({_indent(_SLICED_WORD, '        ')}) AS minhash
+      FROM {sh} {_SEEDS}
+      GROUP BY doc_id, seed
+    )"""
+
+
+def _band_cte(name: str, sig: str) -> str:
+    """CTE ``name``: the signatures ``sig`` as 4 bands of 2 rows."""
+    return f"""{name} AS (
+      SELECT doc_id, seed // 2 AS band,
+             min(CASE WHEN seed % 2 = 0 THEN minhash END) AS mh0,
+             min(CASE WHEN seed % 2 = 1 THEN minhash END) AS mh1
+      FROM {sig} GROUP BY doc_id, band
+    )"""
+
+
+# MinHash-LSH candidates over the `shingle` rows: documents sharing a
+# whole band (qd5, qd14)
+_LSH_CTES = f"""{_sig_cte("sigs", "shingle")},
+    {_band_cte("bands", "sigs")},
+    candidates AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a
+      JOIN bands b ON a.band = b.band AND a.mh0 = b.mh0 AND a.mh1 = b.mh1
+                   AND a.doc_id < b.doc_id
+    )"""
+
+
+def _closure_ctes(np: str) -> str:
+    """The oracle side of ``dedup_components`` (needs ``WITH
+    RECURSIVE``): the pair CTE `np` (doc_a, doc_b) as undirected
+    `edges`, and the label `walk` that reaches every (node, label) of
+    a component; a node's component is its minimum label."""
+    return f"""np AS {np},
+    edges AS (
+      SELECT doc_a AS u, doc_b AS v FROM np
+      UNION ALL SELECT doc_b, doc_a FROM np
+    ),
+    walk(node, label) AS (
+      SELECT u, u FROM edges
+      UNION
+      SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node
+    )"""
+
+
+_NP_JAC = "(SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.8)"
+_COMP_CTE = "comp AS (SELECT node AS doc_id, min(label) AS component FROM walk GROUP BY node)"
+
+
+def _quality_ctes(feats: str, q: str) -> str:
+    """The oracle side of ``operators/text.py::quality_score``: the
+    per-document features `feats` and the score `q` (doc_id, q_r),
+    fixed-point rounded at 6 digits."""
+    return f"""{feats} AS (
+      SELECT doc_id,
+             length(text)::BIGINT AS n_chars_calc,
+             len(string_split(text, ' '))::BIGINT AS n_tokens,
+             len(list_filter(string_split(text, ' '),
+                 t -> t IN ('the','a','of','and','to','in','is','it')))::BIGINT AS stop_hits,
+             length(regexp_replace(text, '[^0-9]', '', 'g'))::BIGINT AS digit_chars,
+             length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::BIGINT AS punct_chars
+      FROM documents
+    ),
+    {q} AS (
+      SELECT doc_id,
+             floor((least(n_tokens / 100.0, 1.0) * 0.4
+                    + (stop_hits / n_tokens) * 0.3
+                    + (1.0 - digit_chars / n_chars_calc) * 0.2
+                    + (1.0 - punct_chars / n_chars_calc) * 0.1) * 1000000 + 0.5)
+               / 1000000 AS q_r
+      FROM {feats}
+    )"""
+
+
+# The adaptive SimHash band width w of ``simhash_bits_for`` over a
+# count `n`; the fingerprint carries 4 * w bits.
+_SIMHASH_WIDTH_SQL = """least(15, greatest(8,
+               CAST(ceil(log2(greatest(1, n // 4))) AS BIGINT)))"""
+_SIMHASH_SIZING = f"""sizen AS (SELECT count(*)::BIGINT AS n FROM documents),
+    sizew AS (
+      SELECT {_SIMHASH_WIDTH_SQL} AS w
+      FROM sizen
+    )"""
+_FP_FIXED = "sum(CASE WHEN s > 0 THEN power(2.0, j) ELSE 0.0 END)::BIGINT AS simhash"
+
+
+def _simhash_ctes(
+    bits: int | None = None, src: str = "documents", fp: bool = True,
+    collapse: bool = False,
+) -> str:
+    """The oracle side of ``operators/dedup.py::simhash`` over the
+    documents ``src``: `per_bit` sums ±1 over a document's tokens by
+    the parity of hex digit j of the token's md5; `fp` (doc_id,
+    simhash) sets bit j where that sum is positive. ``bits`` fixes
+    the width (at most 32: one digest); None replays the adaptive
+    width 4 * w of `sizew` (``_SIMHASH_SIZING``), bits j >= 32 drawn
+    from the salted md5('b:' || token). ``fp=False`` stops at
+    `per_bit`; ``collapse`` adds `fpc`, the lowest-id document of
+    each distinct fingerprint."""
+    if bits is None:
+        ctes = [f"""tok0 AS (
+      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM {src}
+    ),
+    tok AS (
+      SELECT doc_id, md5(token) AS h, md5('b:' || token) AS h2 FROM tok0
+    ),
+    expanded AS (
+      SELECT * FROM (SELECT doc_id, h, h2, unnest(range(60)) AS j FROM tok)
+      WHERE j < 4 * (SELECT w FROM sizew)
+    )"""]
+        digit = """
+                           substr(CASE WHEN j < 32 THEN h ELSE h2 END,
+                                  (CASE WHEN j < 32 THEN j ELSE j - 32 END
+                                   + 1)::INT, 1)"""
+        total = """sum(CASE WHEN s > 0 THEN (1::BIGINT << j::INT) ELSE 0 END)
+               ::BIGINT AS simhash"""
+    else:
+        ctes = [f"""tok AS (
+      SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h FROM {src}
+    ),
+    expanded AS (
+      SELECT doc_id, h, unnest(range({bits})) AS j FROM tok
+    )"""]
+        digit, total = " substr(h, (j + 1)::INT, 1)", _FP_FIXED
+    ctes.append(f"""per_bit AS (
+      SELECT doc_id, j,
+             sum((((strpos('0123456789abcdef',{digit}) - 1) % 2)
+                  * 2 - 1)::BIGINT) AS s
+      FROM expanded GROUP BY doc_id, j
+    )""")
+    if fp:
+        ctes.append(f"""fp AS (
+      SELECT doc_id,
+             {total}
+      FROM per_bit GROUP BY doc_id
+    )""")
+    if collapse:
+        ctes.append("""fpc AS (
+      SELECT min(doc_id) AS doc_id, simhash FROM fp GROUP BY simhash
+    )""")
+    return ",\n    ".join(ctes)
+
+
+_BANDS4 = "CROSS JOIN (SELECT unnest(range(4)) AS band)"
+# Hamming <= 3 verification of the candidate fingerprint pairs
+_HAMMING = """doc_a, doc_b, bit_count(xor(fp_a, fp_b))::BIGINT AS hamming
+    FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3"""
+
+
+def _band_value(fp: str, band: str = "band") -> str:
+    """Band ``band`` of fingerprint ``fp``: its w-bit slice (`sizew`)."""
+    return (
+        f"({fp} >> ({band} * (SELECT w FROM sizew))::INT)\n"
+        "               & ((1::BIGINT << (SELECT w FROM sizew)::INT) - 1)"
+    )
+
+
+def _banded_ctes(src: str, cols: str = "doc_id, simhash") -> str:
+    """The adaptive band index over the fingerprints ``src``: one
+    (band, bv) row per document and band, and the `hot` band values
+    held by more than 32 documents, which the index drops."""
+    return f"""banded AS (
+      SELECT {cols}, band,
+             {_band_value("simhash")} AS bv
+      FROM {src} {_BANDS4}
+    ),
+    hot AS (
+      SELECT band, bv FROM banded GROUP BY band, bv HAVING count(*) > 32
+    )"""
 
 
 @register(
@@ -140,9 +338,8 @@ def qd3_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {SHINGLE_CTE},
     sliced AS (
       SELECT doc_id, seed,
-             substr(md5((CASE WHEN seed < 4 THEN 'a:' ELSE 'b:' END) || shingle),
-                    ((seed % 4) * 8 + 1)::INT, 8) AS word
-      FROM shingle CROSS JOIN (SELECT unnest(range(8)) AS seed)
+             {_SLICED_WORD} AS word
+      FROM shingle {_SEEDS}
     )
     SELECT doc_id, seed, min(word) AS minhash
     FROM sliced GROUP BY doc_id, seed
@@ -164,25 +361,7 @@ def qd4_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "qd5_minhash_lsh_pairs",
     oracle=f"""
     WITH {JACCARD_CTE},
-    sigs AS (
-      SELECT doc_id, seed,
-             min(substr(md5((CASE WHEN seed < 4 THEN 'a:' ELSE 'b:' END) || shingle),
-                        ((seed % 4) * 8 + 1)::INT, 8)) AS minhash
-      FROM shingle CROSS JOIN (SELECT unnest(range(8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, seed // 2 AS band,
-             min(CASE WHEN seed % 2 = 0 THEN minhash END) AS mh0,
-             min(CASE WHEN seed % 2 = 1 THEN minhash END) AS mh1
-      FROM sigs GROUP BY doc_id, band
-    ),
-    candidates AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.mh0 = b.mh0 AND a.mh1 = b.mh1
-                   AND a.doc_id < b.doc_id
-    )
+    {_LSH_CTES}
     SELECT c.doc_a, c.doc_b, j.jaccard
     FROM candidates c JOIN jac j ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
     WHERE j.jaccard >= 0.8
@@ -204,21 +383,10 @@ def qd5_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "qd6_simhash",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h FROM documents
-    ),
-    expanded AS (
-      SELECT doc_id, h, unnest(range(16)) AS j FROM tok
-    ),
-    per_bit AS (
-      SELECT doc_id, j,
-             sum((((strpos('0123456789abcdef', substr(h, (j + 1)::INT, 1)) - 1) % 2)
-                  * 2 - 1)::BIGINT) AS s
-      FROM expanded GROUP BY doc_id, j
-    )
+    oracle=f"""
+    WITH {_simhash_ctes(16, fp=False)}
     SELECT doc_id,
-           sum(CASE WHEN s > 0 THEN power(2.0, j) ELSE 0.0 END)::BIGINT AS simhash
+           {_FP_FIXED}
     FROM per_bit GROUP BY doc_id
     """,
 )
@@ -252,7 +420,6 @@ def qd7_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     max off-diagonal cosine (~0.51) so real pairs surface.
     """
     from spotify_pipeline_gcp_spark.operators.similarity import cosine_pairs
-    from spotify_pipeline_gcp_spark.queries.compat import fixed
 
     emb = table(spark, sf_dir, "embeddings")
     pairs = cosine_pairs(emb, "vec_id", "embedding")
@@ -265,16 +432,7 @@ def qd7_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "qd8_dedup_components",
     oracle=f"""
     WITH RECURSIVE {JACCARD_CAPPED_CTE},
-    np AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.8),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM np
-      UNION ALL SELECT doc_b, doc_a FROM np
-    ),
-    walk(node, label) AS (
-      SELECT u, u FROM edges
-      UNION
-      SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node
-    )
+    {_closure_ctes(_NP_JAC)}
     SELECT node AS doc_id, min(label) AS component
     FROM walk GROUP BY node
     """,
@@ -305,22 +463,8 @@ def qd8_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "qd3b_ngram_jaccard_capped",
     oracle=f"""
     WITH {SHINGLE_CTE},
-    hot AS (SELECT shingle FROM shingle GROUP BY shingle HAVING count(*) > 4),
-    kept AS (
-      SELECT s.doc_id, s.shingle
-      FROM shingle s ANTI JOIN hot h ON s.shingle = h.shingle
-    ),
-    sizes AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM kept GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_common
-      FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-    FROM common
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
+    {_jaccard_ctes(capped=True, jac=False)}
+    {_JAC_SELECT}
     WHERE n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common) >= 0.8
     """,
 )
@@ -345,27 +489,11 @@ def qd3b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "qd9_simhash_pairs",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h FROM documents
-    ),
-    expanded AS (
-      SELECT doc_id, h, unnest(range(32)) AS j FROM tok
-    ),
-    per_bit AS (
-      SELECT doc_id, j,
-             sum((((strpos('0123456789abcdef', substr(h, (j + 1)::INT, 1)) - 1) % 2)
-                  * 2 - 1)::BIGINT) AS s
-      FROM expanded GROUP BY doc_id, j
-    ),
-    fp AS (
-      SELECT doc_id,
-             sum(CASE WHEN s > 0 THEN power(2.0, j) ELSE 0.0 END)::BIGINT AS simhash
-      FROM per_bit GROUP BY doc_id
-    ),
+    oracle=f"""
+    WITH {_simhash_ctes(32)},
     banded AS (
       SELECT doc_id, simhash, band, (simhash >> (band * 8)::INT) & 255 AS bv
-      FROM fp CROSS JOIN (SELECT unnest(range(4)) AS band)
+      FROM fp {_BANDS4}
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -373,8 +501,7 @@ def qd3b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM banded a
       JOIN banded b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
     )
-    SELECT doc_a, doc_b, bit_count(xor(fp_a, fp_b))::BIGINT AS hamming
-    FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
+    SELECT {_HAMMING}
     """,
 )
 def qd9_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,7 +577,7 @@ def _sign_bucket_pairs(spark: SparkSession, sf_dir: str):
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    n_bits = sign_bits_for(emb.count())
+    n_bits = sign_bits_for(_row_count(emb))
     base = drop_hot_buckets(
         _double_base(emb, "vec_id", "embedding").withColumn(
             "bucket", sign_bucket("v", n_bits)
@@ -487,8 +614,6 @@ def qd7b_embedding_near_dup_pruned(spark: SparkSession, sf_dir: str) -> DataFram
     hash-verified. qd7 is the unpruned exactness twin; recall loss vs
     qd7 is the standard single-probe ANN trade (cross-bucket pairs
     are not scored)."""
-    from spotify_pipeline_gcp_spark.queries.compat import fixed
-
     pairs, cos = _sign_bucket_pairs(spark, sf_dir)
     return pairs.where(cos >= 0.45).select(
         F.col("a.id").alias("id_a"),
@@ -497,13 +622,9 @@ def qd7b_embedding_near_dup_pruned(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-from spotify_pipeline_gcp_spark.operators.similarity import _ASSIGN_QSCALE
-
-_QA = float(_ASSIGN_QSCALE)  # one source of truth for the fixed-point scale
-
 # Quantized-unit-vector extension of the sign-bucket base: the same
 # auto-sized buckets + hot-bucket cap, then each survivor's JVM-fold
-# unit vector rounded at _ASSIGN_QSCALE — the replay of exactly what
+# unit vector rounded at compat.QA — the replay of exactly what
 # sign_bucket_pairs_blas's NumPy kernel scores (see qs4: integer dots
 # of 2^20-rounded unit vectors are exact in float64 under any
 # accumulation order, and qdot / 2^40 is a dyadic rational both
@@ -511,8 +632,15 @@ _QA = float(_ASSIGN_QSCALE)  # one source of truth for the fixed-point scale
 _QUANT_BASE_SQL = f"""{_SIGNED_BASE_SQL},
     qb AS (
       SELECT vec_id, bucket,
-             list_transform(v, x -> floor((x / norm) * {_QA} + 0.5)) AS qu
+             list_transform(v, x -> floor((x / norm) * {QA} + 0.5)) AS qu
       FROM base
+    )"""
+# the quantized-exact pairs within a bucket at cosine >= 0.45
+_QPAIRS = f"""FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+    WHERE list_dot_product(a.qu, b.qu) / {QA * QA} >= 0.45"""
+_NP_QUANT = f"""(
+      SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
+      {_indent(_QPAIRS, "      ")}
     )"""
 
 
@@ -523,9 +651,8 @@ _QUANT_BASE_SQL = f"""{_SIGNED_BASE_SQL},
     oracle=f"""
     WITH {_QUANT_BASE_SQL}
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           list_dot_product(a.qu, b.qu) / {_QA * _QA} AS cosine_q
-    FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.qu, b.qu) / {_QA * _QA} >= 0.45
+           list_dot_product(a.qu, b.qu) / {QA * QA} AS cosine_q
+    {_QPAIRS}
     """,
 )
 def qd7c_embedding_near_dup_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,20 +678,7 @@ def qd7c_embedding_near_dup_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     "qd10_semantic_dedup_components",
     oracle=f"""
     WITH RECURSIVE {_QUANT_BASE_SQL},
-    np AS (
-      SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-      FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-      WHERE list_dot_product(a.qu, b.qu) / {_QA * _QA} >= 0.45
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM np
-      UNION ALL SELECT doc_b, doc_a FROM np
-    ),
-    walk(node, label) AS (
-      SELECT u, u FROM edges
-      UNION
-      SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node
-    )
+    {_closure_ctes(_NP_QUANT)}
     SELECT node AS vec_id, min(label) AS component
     FROM walk GROUP BY node
     """,
@@ -605,46 +719,12 @@ NEW_SRC = "('src15', 'src16', 'src17', 'src18', 'src19')"
 QD11_ORACLE = f"""
     WITH old_docs AS (SELECT * FROM documents WHERE source NOT IN {NEW_SRC}),
     new_docs AS (SELECT * FROM documents WHERE source IN {NEW_SRC}),
-    tok_o AS (SELECT doc_id, string_split(text, ' ') AS t FROM old_docs),
-    sh_o AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                                   i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM tok_o WHERE len(t) >= 3
-    ),
-    tok_n AS (SELECT doc_id, string_split(text, ' ') AS t FROM new_docs),
-    sh_n AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                                   i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM tok_n WHERE len(t) >= 3
-    ),
-    sig_o AS (
-      SELECT doc_id, seed,
-             min(substr(md5((CASE WHEN seed < 4 THEN 'a:' ELSE 'b:' END) || shingle),
-                        ((seed % 4) * 8 + 1)::INT, 8)) AS minhash
-      FROM sh_o CROSS JOIN (SELECT unnest(range(8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    sig_n AS (
-      SELECT doc_id, seed,
-             min(substr(md5((CASE WHEN seed < 4 THEN 'a:' ELSE 'b:' END) || shingle),
-                        ((seed % 4) * 8 + 1)::INT, 8)) AS minhash
-      FROM sh_n CROSS JOIN (SELECT unnest(range(8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    band_o AS (
-      SELECT doc_id, seed // 2 AS band,
-             min(CASE WHEN seed % 2 = 0 THEN minhash END) AS mh0,
-             min(CASE WHEN seed % 2 = 1 THEN minhash END) AS mh1
-      FROM sig_o GROUP BY doc_id, band
-    ),
-    band_n AS (
-      SELECT doc_id, seed // 2 AS band,
-             min(CASE WHEN seed % 2 = 0 THEN minhash END) AS mh0,
-             min(CASE WHEN seed % 2 = 1 THEN minhash END) AS mh1
-      FROM sig_n GROUP BY doc_id, band
-    ),
+    {_shingle_ctes("tok_o", "sh_o", "old_docs")},
+    {_shingle_ctes("tok_n", "sh_n", "new_docs")},
+    {_sig_cte("sig_o", "sh_o")},
+    {_sig_cte("sig_n", "sh_n")},
+    {_band_cte("band_o", "sig_o")},
+    {_band_cte("band_n", "sig_n")},
     cand AS (
       SELECT DISTINCT o.doc_id AS doc_old, nw.doc_id AS doc_new
       FROM band_o o
@@ -677,10 +757,6 @@ def qd11_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to near-duplicates; per-batch cost is O(|new| + matched buckets)
     because the old side contributes only its (storable) band table
     and shingle sets."""
-    from spotify_pipeline_gcp_spark.operators.dedup import (
-        minhash_lsh_pairs_incremental,
-    )
-
     docs = table(spark, sf_dir, "documents")
     new_srcs = ["src15", "src16", "src17", "src18", "src19"]
     return minhash_lsh_pairs_incremental(
@@ -699,36 +775,9 @@ def qd11_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "qd12_keep_best_per_cluster",
     oracle=f"""
     WITH RECURSIVE {JACCARD_CAPPED_CTE},
-    np AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.8),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM np
-      UNION ALL SELECT doc_b, doc_a FROM np
-    ),
-    walk(node, label) AS (
-      SELECT u, u FROM edges
-      UNION
-      SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node
-    ),
-    comp AS (SELECT node AS doc_id, min(label) AS component FROM walk GROUP BY node),
-    feats AS (
-      SELECT doc_id,
-             length(text)::BIGINT AS n_chars_calc,
-             len(string_split(text, ' '))::BIGINT AS n_tokens,
-             len(list_filter(string_split(text, ' '),
-                 t -> t IN ('the','a','of','and','to','in','is','it')))::BIGINT AS stop_hits,
-             length(regexp_replace(text, '[^0-9]', '', 'g'))::BIGINT AS digit_chars,
-             length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::BIGINT AS punct_chars
-      FROM documents
-    ),
-    q AS (
-      SELECT doc_id,
-             floor((least(n_tokens / 100.0, 1.0) * 0.4
-                    + (stop_hits / n_tokens) * 0.3
-                    + (1.0 - digit_chars / n_chars_calc) * 0.2
-                    + (1.0 - punct_chars / n_chars_calc) * 0.1) * 1000000 + 0.5)
-               / 1000000 AS q_r
-      FROM feats
-    ),
+    {_closure_ctes(_NP_JAC)},
+    {_COMP_CTE},
+    {_quality_ctes("feats", "q")},
     ranked AS (
       SELECT c.component, c.doc_id, q.q_r,
              row_number() OVER (PARTITION BY c.component
@@ -748,10 +797,6 @@ def qd12_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quality operator (fixed-point rounded so the argmax is
     engine-reproducible); the oracle replays closure + scoring +
     per-cluster ranking."""
-    from spotify_pipeline_gcp_spark.operators.dedup import keep_best_per_cluster
-    from spotify_pipeline_gcp_spark.operators.text import quality_score
-    from spotify_pipeline_gcp_spark.queries.compat import fixed
-
     docs = table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.8, max_shingle_df=4
@@ -766,49 +811,14 @@ def qd12_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "qd9b_simhash_pairs_capped",
-    oracle="""
-    WITH sizen AS (SELECT count(*)::BIGINT AS n FROM documents),
-    sizew AS (
-      SELECT least(15, greatest(8,
-               CAST(ceil(log2(greatest(1, n // 4))) AS BIGINT))) AS w
-      FROM sizen
-    ),
-    tok0 AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    ),
-    tok AS (
-      SELECT doc_id, md5(token) AS h, md5('b:' || token) AS h2 FROM tok0
-    ),
-    expanded AS (
-      SELECT * FROM (SELECT doc_id, h, h2, unnest(range(60)) AS j FROM tok)
-      WHERE j < 4 * (SELECT w FROM sizew)
-    ),
-    per_bit AS (
-      SELECT doc_id, j,
-             sum((((strpos('0123456789abcdef',
-                           substr(CASE WHEN j < 32 THEN h ELSE h2 END,
-                                  (CASE WHEN j < 32 THEN j ELSE j - 32 END
-                                   + 1)::INT, 1)) - 1) % 2)
-                  * 2 - 1)::BIGINT) AS s
-      FROM expanded GROUP BY doc_id, j
-    ),
-    fp AS (
-      SELECT doc_id,
-             sum(CASE WHEN s > 0 THEN (1::BIGINT << j::INT) ELSE 0 END)
-               ::BIGINT AS simhash
-      FROM per_bit GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, simhash, band,
-             (simhash >> (band * (SELECT w FROM sizew))::INT)
-               & ((1::BIGINT << (SELECT w FROM sizew)::INT) - 1) AS bv
-      FROM fp CROSS JOIN (SELECT unnest(range(4)) AS band)
-    ),
-    hot AS (
-      SELECT band, bv FROM banded GROUP BY band, bv HAVING count(*) > 32
-    ),
+def _simhash_capped_oracle(collapse: bool) -> str:
+    """Oracle for qd9b/qd9c: adaptive-width fingerprints (collapsed to
+    one document per distinct fingerprint for qd9c), the capped band
+    index, and Hamming <= 3 over the pairs sharing a kept band."""
+    return f"""
+    WITH {_SIMHASH_SIZING},
+    {_simhash_ctes(collapse=collapse)},
+    {_banded_ctes("fpc" if collapse else "fp")},
     kept AS (
       SELECT b.doc_id, b.simhash, b.band, b.bv
       FROM banded b ANTI JOIN hot h ON b.band = h.band AND b.bv = h.bv
@@ -819,9 +829,12 @@ def qd12_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM kept a
       JOIN kept b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
     )
-    SELECT DISTINCT doc_a, doc_b, bit_count(xor(fp_a, fp_b))::BIGINT AS hamming
-    FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
-    """,
+    SELECT DISTINCT {_HAMMING}
+    """
+
+
+@register(
+    "qd9b_simhash_pairs_capped", oracle=_simhash_capped_oracle(collapse=False)
 )
 def qd9b_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash pairing with ADAPTIVE width and BOUNDED band buckets —
@@ -845,10 +858,8 @@ def qd9b_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-stable threshold should pin ``bits`` explicitly (qd9 is
     the fixed-width exactness baseline) or raise ``max_hamming``
     with ``bands = max_hamming + 1`` to keep the lossless radius."""
-    from spotify_pipeline_gcp_spark.operators.dedup import simhash_bits_for
-
     docs = table(spark, sf_dir, "documents")
-    n = docs.count()
+    n = _row_count(docs)
     return simhash_pairs(
         docs,
         "doc_id",
@@ -864,64 +875,7 @@ def qd9b_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "qd9c_simhash_pairs_collapsed",
-    oracle="""
-    WITH sizen AS (SELECT count(*)::BIGINT AS n FROM documents),
-    sizew AS (
-      SELECT least(15, greatest(8,
-               CAST(ceil(log2(greatest(1, n // 4))) AS BIGINT))) AS w
-      FROM sizen
-    ),
-    tok0 AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    ),
-    tok AS (
-      SELECT doc_id, md5(token) AS h, md5('b:' || token) AS h2 FROM tok0
-    ),
-    expanded AS (
-      SELECT * FROM (SELECT doc_id, h, h2, unnest(range(60)) AS j FROM tok)
-      WHERE j < 4 * (SELECT w FROM sizew)
-    ),
-    per_bit AS (
-      SELECT doc_id, j,
-             sum((((strpos('0123456789abcdef',
-                           substr(CASE WHEN j < 32 THEN h ELSE h2 END,
-                                  (CASE WHEN j < 32 THEN j ELSE j - 32 END
-                                   + 1)::INT, 1)) - 1) % 2)
-                  * 2 - 1)::BIGINT) AS s
-      FROM expanded GROUP BY doc_id, j
-    ),
-    fp AS (
-      SELECT doc_id,
-             sum(CASE WHEN s > 0 THEN (1::BIGINT << j::INT) ELSE 0 END)
-               ::BIGINT AS simhash
-      FROM per_bit GROUP BY doc_id
-    ),
-    fpc AS (
-      SELECT min(doc_id) AS doc_id, simhash FROM fp GROUP BY simhash
-    ),
-    banded AS (
-      SELECT doc_id, simhash, band,
-             (simhash >> (band * (SELECT w FROM sizew))::INT)
-               & ((1::BIGINT << (SELECT w FROM sizew)::INT) - 1) AS bv
-      FROM fpc CROSS JOIN (SELECT unnest(range(4)) AS band)
-    ),
-    hot AS (
-      SELECT band, bv FROM banded GROUP BY band, bv HAVING count(*) > 32
-    ),
-    kept AS (
-      SELECT b.doc_id, b.simhash, b.band, b.bv
-      FROM banded b ANTI JOIN hot h ON b.band = h.band AND b.bv = h.bv
-    ),
-    cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.simhash AS fp_a, b.simhash AS fp_b
-      FROM kept a
-      JOIN kept b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-    )
-    SELECT DISTINCT doc_a, doc_b, bit_count(xor(fp_a, fp_b))::BIGINT AS hamming
-    FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
-    """,
+    "qd9c_simhash_pairs_collapsed", oracle=_simhash_capped_oracle(collapse=True)
 )
 def qd9c_simhash_pairs_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """qd9b with ``collapse_identical=True`` — built as the
@@ -940,10 +894,8 @@ def qd9c_simhash_pairs_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     qd9r number are cap size, band count, and pinned width. The
     collapse, sizing, cap, and Hamming verify are all
     oracle-replayed."""
-    from spotify_pipeline_gcp_spark.operators.dedup import simhash_bits_for
-
     docs = table(spark, sf_dir, "documents")
-    n = docs.count()
+    n = _row_count(docs)
     return simhash_pairs(
         docs,
         "doc_id",
@@ -957,68 +909,21 @@ def qd9c_simhash_pairs_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# digest_unit replay over a `_d` column (queries/sampling.py keeps
-# the canonical copy; inlined here to keep module import order —
-# hence pre-window registration order — unchanged)
-_UNIT_FOLD_D = " + ".join(
-    f"(strpos('0123456789abcdef', substring(_d, {j + 1}, 1)) - 1)"
-    f" * {16 ** (7 - j)}::BIGINT"
-    for j in range(8)
-)
-
-
 def _simhash_audit_oracle(collapse: bool) -> str:
     """Audit oracle for qd9r/qd9r2: sample fold, adaptive width,
     fingerprints, optional exact-fingerprint collapse (the qd9c
     universe), probe draw, bucket cap, integer recall."""
     fp_src = "fpc" if collapse else "fp"
-    collapse_cte = (
-        """,
-    fpc AS (
-      SELECT min(doc_id) AS doc_id, simhash FROM fp GROUP BY simhash
-    )"""
-        if collapse
-        else ""
-    )
     return f"""
-    WITH sizen AS (SELECT count(*)::BIGINT AS n FROM documents),
-    sizew AS (
-      SELECT least(15, greatest(8,
-               CAST(ceil(log2(greatest(1, n // 4))) AS BIGINT))) AS w
-      FROM sizen
-    ),
+    WITH {_SIMHASH_SIZING},
     samp AS (
       SELECT doc_id, text FROM (
         SELECT doc_id, text, md5('shc:' || doc_id::VARCHAR) AS _d
         FROM documents
-      ) WHERE ({_UNIT_FOLD_D}) / 4294967296.0
+      ) WHERE ({UNIT_FOLD}) / 4294967296.0
           < least(1.0, 65536.0 / (SELECT n FROM sizen))
     ),
-    tok0 AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM samp
-    ),
-    tok AS (
-      SELECT doc_id, md5(token) AS h, md5('b:' || token) AS h2 FROM tok0
-    ),
-    expanded AS (
-      SELECT * FROM (SELECT doc_id, h, h2, unnest(range(60)) AS j FROM tok)
-      WHERE j < 4 * (SELECT w FROM sizew)
-    ),
-    per_bit AS (
-      SELECT doc_id, j,
-             sum((((strpos('0123456789abcdef',
-                           substr(CASE WHEN j < 32 THEN h ELSE h2 END,
-                                  (CASE WHEN j < 32 THEN j ELSE j - 32 END
-                                   + 1)::INT, 1)) - 1) % 2)
-                  * 2 - 1)::BIGINT) AS s
-      FROM expanded GROUP BY doc_id, j
-    ),
-    fp AS (
-      SELECT doc_id,
-             sum(CASE WHEN s > 0 THEN (1::BIGINT << j::INT) ELSE 0 END)
-               ::BIGINT AS simhash
-      FROM per_bit GROUP BY doc_id
-    ){collapse_cte},
+    {_simhash_ctes(src="samp", collapse=collapse)},
     probes AS (
       SELECT doc_id, simhash FROM (
         SELECT doc_id, simhash,
@@ -1026,15 +931,7 @@ def _simhash_audit_oracle(collapse: bool) -> str:
         FROM {fp_src}
       ) ORDER BY _p LIMIT 64
     ),
-    banded AS (
-      SELECT doc_id, band,
-             (simhash >> (band * (SELECT w FROM sizew))::INT)
-               & ((1::BIGINT << (SELECT w FROM sizew)::INT) - 1) AS bv
-      FROM {fp_src} CROSS JOIN (SELECT unnest(range(4)) AS band)
-    ),
-    hot AS (
-      SELECT band, bv FROM banded GROUP BY band, bv HAVING count(*) > 32
-    ),
+    {_banded_ctes(fp_src, cols="doc_id")},
     exact AS (
       SELECT p.doc_id AS probe_id, c.doc_id AS other_id,
              p.simhash AS fp_p, c.simhash AS fp_c
@@ -1043,13 +940,10 @@ def _simhash_audit_oracle(collapse: bool) -> str:
     ),
     shared AS (
       SELECT e.probe_id, e.other_id, b.band,
-             (e.fp_p >> (b.band * (SELECT w FROM sizew))::INT)
-               & ((1::BIGINT << (SELECT w FROM sizew)::INT) - 1) AS bv
-      FROM exact e CROSS JOIN (SELECT unnest(range(4)) AS band) b
-      WHERE ((e.fp_p >> (b.band * (SELECT w FROM sizew))::INT)
-               & ((1::BIGINT << (SELECT w FROM sizew)::INT) - 1))
-          = ((e.fp_c >> (b.band * (SELECT w FROM sizew))::INT)
-               & ((1::BIGINT << (SELECT w FROM sizew)::INT) - 1))
+             {_band_value("e.fp_p", "b.band")} AS bv
+      FROM exact e {_BANDS4} b
+      WHERE ({_band_value("e.fp_p", "b.band")})
+          = ({_band_value("e.fp_c", "b.band")})
     ),
     surv AS (
       SELECT DISTINCT probe_id, other_id
@@ -1093,12 +987,7 @@ def qd9r_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the 4-band filter is lossless at Hamming ≤ 3, every miss
     is attributable to the bucket cap. See
     ``operators/dedup.py::simhash_recall_audit``."""
-    from spotify_pipeline_gcp_spark.operators.dedup import simhash_recall_audit
-
-    docs = table(spark, sf_dir, "documents")
-    return simhash_recall_audit(
-        docs, "doc_id", "text", n_docs=docs.count()
-    )
+    return simhash_recall_audit(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -1121,11 +1010,8 @@ def qd9r2_simhash_recall_audit_collapsed(
     60 bits), not cap-driven recall loss. Collapse, sizing, cap, and
     the integer recall ratio are all oracle-replayed —
     hash-verified."""
-    from spotify_pipeline_gcp_spark.operators.dedup import simhash_recall_audit
-
-    docs = table(spark, sf_dir, "documents")
     return simhash_recall_audit(
-        docs, "doc_id", "text", n_docs=docs.count(), collapse_identical=True
+        table(spark, sf_dir, "documents"), "doc_id", "text", collapse_identical=True
     )
 
 
@@ -1176,72 +1062,26 @@ def qd13_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is 100 TB and even LSH candidate pairs are a budget item.
     The oracle replays tokenization, 1-based window hashing, the ≥2
     multiset filter, and the islands merge verbatim."""
-    from spotify_pipeline_gcp_spark.operators.dedup import duplicated_spans
-
     return duplicated_spans(table(spark, sf_dir, "documents"), "doc_id", "text", w=8)
 
 
-_QUALITY_CTES = """
-    feats2 AS (
-      SELECT doc_id,
-             length(text)::BIGINT AS n_chars_calc,
-             len(string_split(text, ' '))::BIGINT AS n_tokens,
-             len(list_filter(string_split(text, ' '),
-                 t -> t IN ('the','a','of','and','to','in','is','it')))::BIGINT AS stop_hits,
-             length(regexp_replace(text, '[^0-9]', '', 'g'))::BIGINT AS digit_chars,
-             length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::BIGINT AS punct_chars
-      FROM documents
-    ),
-    qual AS (
-      SELECT doc_id,
-             floor((least(n_tokens / 100.0, 1.0) * 0.4
-                    + (stop_hits / n_tokens) * 0.3
-                    + (1.0 - digit_chars / n_chars_calc) * 0.2
-                    + (1.0 - punct_chars / n_chars_calc) * 0.1) * 1000000 + 0.5)
-               / 1000000 AS q_r
-      FROM feats2
-    )
-"""
+# qd14's verified LSH pairs
+_NP_LSH = """(
+      SELECT c.doc_a, c.doc_b
+      FROM candidates c JOIN jac j ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
+      WHERE j.jaccard >= 0.8
+    )"""
+# qd14's quality CTEs; the newlines around them are part of its oracle
+_QUALITY_CTES = f"\n    {_quality_ctes('feats2', 'qual')}\n"
 
 
 @register(
     "qd14_near_dup_export",
     oracle=f"""
     WITH RECURSIVE {JACCARD_CTE},
-    sigs AS (
-      SELECT doc_id, seed,
-             min(substr(md5((CASE WHEN seed < 4 THEN 'a:' ELSE 'b:' END) || shingle),
-                        ((seed % 4) * 8 + 1)::INT, 8)) AS minhash
-      FROM shingle CROSS JOIN (SELECT unnest(range(8)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, seed // 2 AS band,
-             min(CASE WHEN seed % 2 = 0 THEN minhash END) AS mh0,
-             min(CASE WHEN seed % 2 = 1 THEN minhash END) AS mh1
-      FROM sigs GROUP BY doc_id, band
-    ),
-    candidates AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.mh0 = b.mh0 AND a.mh1 = b.mh1
-                   AND a.doc_id < b.doc_id
-    ),
-    np AS (
-      SELECT c.doc_a, c.doc_b
-      FROM candidates c JOIN jac j ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
-      WHERE j.jaccard >= 0.8
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM np
-      UNION ALL SELECT doc_b, doc_a FROM np
-    ),
-    walk(node, label) AS (
-      SELECT u, u FROM edges
-      UNION
-      SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node
-    ),
-    comp AS (SELECT node AS doc_id, min(label) AS component FROM walk GROUP BY node),
+    {_LSH_CTES},
+    {_closure_ctes(_NP_LSH)},
+    {_COMP_CTE},
     {_QUALITY_CTES},
     ranked AS (
       SELECT c.doc_id,
@@ -1280,15 +1120,10 @@ def qd14_near_dup_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterates on the pair graph (tiny vs the corpus), the loser list
     is |members of multi-doc clusters| << n and anti-joins the corpus
     without shuffling it, and the manifest is one combinable rollup."""
-    from spotify_pipeline_gcp_spark.operators.dedup import (
-        keep_best_per_cluster,
-    )
-    from spotify_pipeline_gcp_spark.operators.text import quality_score
-    from spotify_pipeline_gcp_spark.queries.compat import fixed
-
     docs = table(spark, sf_dir, "documents")
-    n_corpus = docs.count()  # metadata-fast; shared by the pair
+    # counted from the Parquet footers, no job; shared by the pair
     # generator's slice-bound sizing and the spool routing below
+    n_corpus = _row_count(docs)
     pairs = minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=8,
         rows_per_band=2, threshold=0.8, n_docs=n_corpus,

@@ -13,7 +13,7 @@ from spotify_pipeline_gcp_spark.operators.sampling import (
     hash_sample,
 )
 from spotify_pipeline_gcp_spark.queries import register
-from spotify_pipeline_gcp_spark.queries.compat import table
+from spotify_pipeline_gcp_spark.queries.compat import UNIT_FOLD, table
 
 _T25 = fraction_to_hex_threshold(0.25)
 _T80 = fraction_to_hex_threshold(0.8)
@@ -100,11 +100,6 @@ def qsp3_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MIX = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
 _MIX_VALUES = ", ".join(f"('{d}', {w})" for d, w in sorted(_MIX.items()))
-_UNIT_FOLD = " + ".join(
-    f"(strpos('0123456789abcdef', substring(_d, {j + 1}, 1)) - 1)"
-    f" * {16 ** (7 - j)}::BIGINT"
-    for j in range(8)
-)
 
 
 @register(
@@ -128,7 +123,7 @@ _UNIT_FOLD = " + ".join(
     )
     SELECT d.doc_id, d.source
     FROM d JOIN fr USING (source)
-    WHERE ({_UNIT_FOLD}) / 4294967296.0 < fr.keep_frac
+    WHERE ({UNIT_FOLD}) / 4294967296.0 < fr.keep_frac
     """,
 )
 def qsp4_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,7 +171,7 @@ _TEMP_BUDGET = 300
     kept AS (
       SELECT d.source, count(*)::BIGINT AS kept_docs
       FROM d JOIN plan USING (source)
-      WHERE ({_UNIT_FOLD}) / 4294967296.0
+      WHERE ({UNIT_FOLD}) / 4294967296.0
             < plan.target_docs / plan.n_docs
       GROUP BY d.source
     )

@@ -18,7 +18,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from spotify_pipeline_gcp_spark.operators.similarity import (
-    _ASSIGN_QSCALE,
     _dot_pre,
     _double_base,
     _fold_topk,
@@ -35,8 +34,10 @@ from spotify_pipeline_gcp_spark.operators.similarity import (
 )
 from spotify_pipeline_gcp_spark.queries import register
 from spotify_pipeline_gcp_spark.queries.compat import (
+    QA,
     SIZED_BITS_SQL,
     SIZED_BUCKET_CAP,
+    UNIT_FOLD,
     fixed,
     sql_fixed,
     sql_word_ngrams,
@@ -51,24 +52,13 @@ _SIZED_BITS_SQL = SIZED_BITS_SQL
 DOT_AB = "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])"
 NORM = "sqrt(list_dot_product({0}.embedding::DOUBLE[], {0}.embedding::DOUBLE[]))"
 
-# The exact integer digest fold shared with the sampling family
-# (queries/sampling.py::_UNIT_FOLD): uniform [0,1) from the first 8
-# hex digits of a salted md5, engine-identical.
-_IVF_UNIT_FOLD = " + ".join(
-    f"(strpos('0123456789abcdef', substring(_d, {j + 1}, 1)) - 1)"
-    f" * {16 ** (7 - j)}::BIGINT"
-    for j in range(8)
-)
-
-_QA = float(_ASSIGN_QSCALE)  # the fixed-point scale of every quantized dot
-
 
 def _qd(u_expr: str, c_expr: str) -> str:
     """Integer dot of two lists rounded half-up at 2^20 — exact in
     float64 (``operators/similarity.py::_ASSIGN_QSCALE``)."""
     return (
-        f"list_dot_product(list_transform({u_expr}, x -> floor(x * {_QA} + 0.5)),"
-        f" list_transform({c_expr}, x -> floor(x * {_QA} + 0.5)))"
+        f"list_dot_product(list_transform({u_expr}, x -> floor(x * {QA} + 0.5)),"
+        f" list_transform({c_expr}, x -> floor(x * {QA} + 0.5)))"
     )
 
 
@@ -145,7 +135,7 @@ def _sample_cte(name: str, src: str, salt: str, frac_sql: str) -> str:
         f"""{name} AS (
       SELECT vec_id, u FROM (
         SELECT vec_id, u, md5('{salt}' || vec_id::VARCHAR) AS _d FROM {src}
-      ) WHERE ({_IVF_UNIT_FOLD}) / 4294967296.0 < {frac_sql}
+      ) WHERE ({UNIT_FOLD}) / 4294967296.0 < {frac_sql}
     )"""
     )
 
@@ -391,7 +381,7 @@ def _pair_score(quant_pairs: bool) -> tuple[str, str]:
     vectors ``a.u``/``b.u``: the quantized-exact ``cosine_q`` = qdot /
     2^40 of the BLAS twins, or the fixed-point fold ``cosine_r``."""
     if quant_pairs:
-        return "cosine_q", f"{_qd('a.u', 'b.u')} / {_QA * _QA}"
+        return "cosine_q", f"{_qd('a.u', 'b.u')} / {QA * QA}"
     return "cosine_r", "floor(list_dot_product(a.u, b.u) * 1000000 + 0.5) / 1000000"
 
 
@@ -742,12 +732,12 @@ def qs5_cosine_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     qv AS (
       SELECT vec_id,
-             list_transform(u, x -> floor(x * {_QA} + 0.5)) AS qu
+             list_transform(u, x -> floor(x * {QA} + 0.5)) AS qu
       FROM unitv
     ),
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             list_dot_product(a.qu, b.qu) / {_QA * _QA} AS cosine_q
+             list_dot_product(a.qu, b.qu) / {QA * QA} AS cosine_q
       FROM qv a JOIN qv b ON a.vec_id <> b.vec_id
     ){_ranked("cosine_q", "pairs", 5)}""",
 )
@@ -792,12 +782,12 @@ def qs4_cosine_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv AS (
       SELECT vec_id,
              {_SIGN4} AS bucket,
-             list_transform(u, x -> floor(x * {_QA} + 0.5)) AS qu
+             list_transform(u, x -> floor(x * {QA} + 0.5)) AS qu
       FROM unitv
     ),
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             list_dot_product(a.qu, b.qu) / {_QA * _QA} AS cosine_q
+             list_dot_product(a.qu, b.qu) / {QA * QA} AS cosine_q
       FROM qv a JOIN qv b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
     ){_ranked("cosine_q", "pairs", 5)}""",
 )
@@ -1125,12 +1115,12 @@ def qs13_cosine_topk_bucketed_sized(spark: SparkSession, sf_dir: str) -> DataFra
     {_DROP_HOT}
     qb AS (
       SELECT vec_id, bucket,
-             list_transform(v, x -> floor((x / norm) * {_QA} + 0.5)) AS qu
+             list_transform(v, x -> floor((x / norm) * {QA} + 0.5)) AS qu
       FROM kept
     ),
     pairs AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             list_dot_product(a.qu, b.qu) / {_QA * _QA} AS cosine_q
+             list_dot_product(a.qu, b.qu) / {QA * QA} AS cosine_q
       FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
     ){_ranked("cosine_q", "pairs", 5)}""",
 )
@@ -2105,7 +2095,7 @@ def _imi_audit_oracle(d: int, n_iter: int) -> str:
       SELECT vec_id FROM (
         SELECT vec_id, md5('audc:' || vec_id::VARCHAR) AS _d
         FROM embeddings WHERE label % 10 <> 0
-      ) WHERE ({_IVF_UNIT_FOLD}) / 4294967296.0
+      ) WHERE ({UNIT_FOLD}) / 4294967296.0
           < least(1.0, 65536.0 / (SELECT n FROM cn))
     )""",
         """pairs AS (
@@ -2233,7 +2223,7 @@ def qs29_imi_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id, embedding, {_SIGN4} AS bucket FROM (
         SELECT vec_id, embedding, md5('audc:' || vec_id::VARCHAR) AS _d
         FROM embeddings WHERE label % 10 <> 0
-      ) WHERE ({_IVF_UNIT_FOLD}) / 4294967296.0
+      ) WHERE ({UNIT_FOLD}) / 4294967296.0
           < least(1.0, 65536.0 / (SELECT n FROM cn))
     ),
     pairs AS (
@@ -2503,8 +2493,8 @@ def _maint_oracle() -> str:
         SELECT p.vec_id, c.cid,
                row_number() OVER (PARTITION BY p.vec_id
                                   ORDER BY list_dot_product(
-                                    list_transform(p.u, x -> floor(x * {_QA} + 0.5)),
-                                    list_transform(c.c, x -> floor(x * {_QA} + 0.5))) DESC,
+                                    list_transform(p.u, x -> floor(x * {QA} + 0.5)),
+                                    list_transform(c.c, x -> floor(x * {QA} + 0.5))) DESC,
                                   c.cid) AS rnk
         FROM ud p CROSS JOIN cent2_c c) t
       WHERE rnk = 1

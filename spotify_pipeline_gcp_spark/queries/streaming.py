@@ -11,7 +11,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from spotify_pipeline_gcp_spark.queries import register
-from spotify_pipeline_gcp_spark.queries.compat import sql_fixed
+from spotify_pipeline_gcp_spark.queries.compat import (
+    EXPORT_DECONTAM_SQL,
+    EXPORT_QUALITY_SQL,
+    sql_fixed,
+    sql_word_ngrams,
+)
 from spotify_pipeline_gcp_spark.streaming.incremental import (
     streaming_sessionize,
     streaming_type_rollup,
@@ -173,11 +178,6 @@ _GATE_NEW = ["src10", "src11", "src12", "src13", "src14"]
 _GATE_NEW_SQL = ", ".join(f"'{s}'" for s in _GATE_NEW)
 
 
-from spotify_pipeline_gcp_spark.queries.compat import (  # noqa: E402
-    sql_word_ngrams as _gate_ngrams,
-)
-
-
 @register(
     "qst6_streaming_export_gate",
     # AvailableNow drains the delta as one micro-batch, so the sink
@@ -196,33 +196,16 @@ from spotify_pipeline_gcp_spark.queries.compat import (  # noqa: E402
     feats AS (
       SELECT doc_id, source, toks, md5(text) AS digest,
              len(toks)::BIGINT AS n_tokens,
-             {_gate_ngrams(3)} AS g3
+             {sql_word_ngrams(3)} AS g3
       FROM newd
     ),
-    q AS (
-      SELECT doc_id, source, toks, digest, n_tokens FROM feats
-      WHERE n_tokens >= 10
-        AND (CASE WHEN len(g3) > 0
-                  THEN (len(g3) - len(list_distinct(g3))) / len(g3)
-                  ELSE 0.0 END) <= 0.2
-    ),
+    {EXPORT_QUALITY_SQL},
     dd AS (
       SELECT * FROM q
       WHERE doc_id IN (SELECT min(doc_id) FROM q GROUP BY digest)
         AND digest NOT IN (SELECT digest FROM corp)
     ),
-    bt AS (
-      SELECT list_filter(string_split(regexp_replace(text, '\\s', ' ', 'g'), ' '),
-                         x -> x <> '') AS toks
-      FROM documents WHERE source = 'src0'
-    ),
-    bg AS (
-      SELECT DISTINCT unnest(list_distinct({_gate_ngrams(4)})) AS gram FROM bt
-    ),
-    cg AS (
-      SELECT doc_id, unnest(list_distinct({_gate_ngrams(4)})) AS gram FROM dd
-    ),
-    bad AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (gram))
+    {EXPORT_DECONTAM_SQL}
     SELECT doc_id, source, n_tokens
     FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM bad)
     """,

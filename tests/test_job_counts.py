@@ -1,5 +1,6 @@
-"""Spark jobs the registry's table reads, sizing counts and the
-``perfbench`` vector queries run, counted per job group."""
+"""Spark jobs the registry's table reads, sizing counts, the
+``perfbench`` vector queries and the row-count-sized dedup queries
+run, counted per job group."""
 
 from __future__ import annotations
 
@@ -55,16 +56,34 @@ def test_rewritten_file_reinfers_schema(spark, tmp_path):
     assert sorted(df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
 
 
-def test_vector_query_steady_job_counts(spark):
+# The same ratchet for dedup queries that size their plans from the
+# corpus row count, which the Parquet footers give without a job.
+SIZED_QUERY_JOBS = {
+    "qd9b_simhash_pairs_capped": 8,
+    "qd14_near_dup_export": 29,
+}
+
+
+def _steady_jobs(spark, names) -> dict[str, int]:
     from spotify_pipeline_gcp_spark.queries import load_all
 
     registry = load_all()
     counts = {}
-    for name in VECTOR_QUERY_JOBS:
+    for name in names:
 
         def op(fn=registry[name].fn):
             fn(spark, SF0001).groupBy().count().collect()
 
         op()  # warm-up: the first read infers the tables' schemas
         counts[name] = jobs_run(spark, op)
+    return counts
+
+
+def test_vector_query_steady_job_counts(spark):
+    counts = _steady_jobs(spark, VECTOR_QUERY_JOBS)
     assert all(counts[n] <= VECTOR_QUERY_JOBS[n] for n in counts), counts
+
+
+def test_sized_query_steady_job_counts(spark):
+    counts = _steady_jobs(spark, SIZED_QUERY_JOBS)
+    assert all(counts[n] <= SIZED_QUERY_JOBS[n] for n in counts), counts

@@ -642,20 +642,88 @@ def test_qt_all_literal_tolerates_missing_codes(spark):
 @settings(max_examples=300, deadline=None)
 @given(st.integers(min_value=1, max_value=10**12))
 def test_simhash_sizing_replays_in_sql_at_any_scale(n):
-    # qd9b's adaptive fingerprint width vs the exact SQL its oracle
-    # embeds — the same cross-engine pin as the ANN sizings
+    # qd9b's adaptive fingerprint width vs the exact SQL snippet its
+    # oracles embed — the same cross-engine pin as the ANN sizings
     import duckdb
 
     from spotify_pipeline_gcp_spark.operators.dedup import simhash_bits_for
+    from spotify_pipeline_gcp_spark.queries.dedup import _SIMHASH_WIDTH_SQL
 
-    w_sql = (
-        "least(15, greatest(8, CAST(ceil(log2(greatest(1, n // 4)))"
-        " AS BIGINT)))"
-    )
     row = duckdb.sql(
-        f"SELECT {w_sql} AS w FROM (SELECT {n}::BIGINT AS n)"
+        f"SELECT {_SIMHASH_WIDTH_SQL} AS w FROM (SELECT {n}::BIGINT AS n)"
     ).fetchone()
     assert 4 * row[0] == simhash_bits_for(n)
+
+
+# one-token, repeated-token and empty documents ('' tokens come from
+# doubled spaces), NULL texts, and edge lists with chains and cycles
+_DEDUP_TOKENS = st.lists(st.sampled_from(["a", "b", "the", "dup", "x1", ""]), max_size=8)
+_DEDUP_DOCS = st.lists(st.one_of(st.none(), _DEDUP_TOKENS.map(" ".join)), max_size=8)
+_DEDUP_EDGES = st.lists(
+    st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=12
+)
+
+
+@settings(max_examples=6, deadline=None)
+@given(docs=_DEDUP_DOCS, edges=_DEDUP_EDGES)
+@example(
+    docs=["", "a", "dup dup dup", "the a the a b", None],
+    edges=[(i, i + 1) for i in range(9)] + [(3, 1)],  # a chain with a cycle
+)
+def test_dedup_oracle_chains_match_operators(spark, docs, edges):
+    # the dedup oracles' shared CTE chains run in DuckDB against the
+    # operators they replay: the SimHash fingerprints at the fixed 16
+    # and 32 bits and at the adaptive 48 (w = 12: bits >= 32 come from
+    # the salted second digest), and the closure's components
+    import duckdb
+    import pandas as pd
+
+    from spotify_pipeline_gcp_spark.operators.dedup import (
+        dedup_components,
+        simhash,
+        simhash_bits_for,
+    )
+    from spotify_pipeline_gcp_spark.queries.dedup import (
+        _COMP_CTE,
+        _SIMHASH_WIDTH_SQL,
+        _closure_ctes,
+        _simhash_ctes,
+    )
+
+    con = duckdb.connect()
+    documents = pd.DataFrame(  # noqa: F841 - read by DuckDB by name
+        {"doc_id": range(len(docs)), "text": pd.Series(docs, dtype=object)}
+    )
+    df = spark.createDataFrame(
+        list(enumerate(docs)), "doc_id long, text string"
+    )
+    n = 16_000  # a corpus size whose adaptive width is w = 12
+    assert simhash_bits_for(n) == 48
+    chains = {
+        16: _simhash_ctes(16),
+        32: _simhash_ctes(32),
+        48: f"""sizen AS (SELECT {n}::BIGINT AS n),
+    sizew AS (SELECT {_SIMHASH_WIDTH_SQL} AS w FROM sizen),
+    {_simhash_ctes()}""",
+    }
+    for bits, ctes in chains.items():
+        fps = simhash(df, "doc_id", "text", bits=bits)
+        want = sorted(tuple(r) for r in fps.collect())
+        got = con.sql(f"WITH {ctes} SELECT doc_id, simhash FROM fp").fetchall()
+        assert sorted(got) == want, bits
+
+    pairs = pd.DataFrame(edges, columns=["doc_a", "doc_b"], dtype="int64")  # noqa: F841
+    comp = dedup_components(
+        spark.createDataFrame(edges, "doc_a long, doc_b long")
+    )
+    want = sorted(tuple(r) for r in comp.collect())
+    got = sorted(
+        con.sql(
+            f"WITH RECURSIVE {_closure_ctes('(SELECT doc_a, doc_b FROM pairs)')},"
+            f" {_COMP_CTE} SELECT doc_id, component FROM comp"
+        ).fetchall()
+    )
+    assert got == want
 
 
 def _topk_loop(sims, q_ids, d_ids, k):
